@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polybot_data_etl_spark.plans.memo import memo
+
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -134,32 +136,6 @@ PARTITION_HINTS: dict[str, str] = {
 }
 
 
-# Scan-frame cache, keyed (application, sf_dir, table).  A DataFrame
-# is an immutable plan, so handing every consumer the same object is
-# semantically free — but building one costs a spark.read.parquet
-# footer read + schema analysis (~20-90 ms of Py4J round-trips), and
-# the 365-query suite makes ~550 table() calls.  The cache cut
-# plan_build_sec measurably (VERDICT r6 #6).  Keyed by applicationId
-# so a restarted session never sees another JVM's frames; cleared by
-# clear_table_cache() for tests that regenerate fixtures in place.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_TABLE_CACHE_LOCK = __import__("threading").Lock()
-_TABLE_CACHE_GEN = 0  # bumped by clear_table_cache(); see table()
-
-
-def clear_table_cache() -> None:
-    """Drop cached scan frames (fixture swaps / tests)."""
-    global _TABLE_CACHE_GEN
-    with _TABLE_CACHE_LOCK:
-        _TABLE_CACHE.clear()
-        # Invalidate in-flight builds too (ADVICE r7): table() reads
-        # parquet OUTSIDE the lock (so K parallel plan producers can
-        # build different tables concurrently), so a build that started
-        # before this clear() must not re-insert its now-stale frame
-        # after it.  The generation bump makes such inserts no-ops.
-        _TABLE_CACHE_GEN += 1
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (schema-on-file).
 
@@ -173,22 +149,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     identically); a timestamp `ts` passes through untouched. The
     nanosAsLong conf itself is set once at session construction
     (session.build_session) — harmless on µs files, required for ns ones.
+
+    Memoized per (session, sf_dir, name): consumers share the immutable
+    plan instead of re-paying a footer read + schema analysis (~20-90 ms
+    of Py4J) on each of the suite's ~550 calls.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    with _TABLE_CACHE_LOCK:
-        gen = _TABLE_CACHE_GEN
-        cached = _TABLE_CACHE.get(key)
-        if cached is None:
-            # evict dead-session generations: a process that restarts
-            # SparkSessions would otherwise pin DataFrames holding
-            # Py4J refs into dead JVMs forever
-            for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-                del _TABLE_CACHE[k]
-    if cached is not None:
-        return cached
+    return memo(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Lazy data-dir validation (ADVICE r4): config.from_env only checks
     # the fixture-dir env var when it is explicitly set, so a missing
     # machine-default dir must still fail HERE with the variable named
@@ -218,9 +191,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
             ),
         )
-    with _TABLE_CACHE_LOCK:
-        if _TABLE_CACHE_GEN == gen:
-            _TABLE_CACHE[key] = df
     return df
 
 

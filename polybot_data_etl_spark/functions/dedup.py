@@ -33,6 +33,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
+# the package's one public clear for every memoized intermediate
+from polybot_data_etl_spark.plans.memo import clear as clear_pair_cache
+from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
 # Shared modulus with functions/quality.py's fingerprint: keeps every
@@ -163,83 +166,21 @@ _NGRAM_ORACLE = f"""
     """
 
 
-# Shared candidate frame, memoized per (application, sf_dir): FIVE
-# registered queries consume the df-capped shingle-intersection pairs
-# (q_dedup_ngram, q_dedup_containment directly; q_dedup_clusters,
-# q_pipeline_curate, q_pipeline_leakage through q_dedup_ngram), and a
-# production curation DAG persists this intermediate once per run
-# rather than re-indexing the corpus per consumer.  The cache holds the
-# LAZY localCheckpoint frame object, so the first action materializes
-# it executor-locally and every later consumer in the same session
-# reads the materialized blocks (VERDICT r4 #3: the measured
-# q_dedup_clusters/q_pipeline_* tail was exactly this recomputation).
-_SIZED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Memoized q_dedup_embed verified-pair frame (r7): consumed by the
-# query itself and q_dedup_threshold_sweep.
-_EMBED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# One RLock guards every memoized build in this module: concurrent
-# plan-producer threads (bench.py r7) must not double-run the EAGER
-# component_labels union-find or double-build the shared pair frame.
-# Reentrant because ngram_component_labels builds THROUGH
-# q_dedup_ngram → sized_shingle_pairs.
-_PAIR_CACHE_LOCK = __import__("threading").RLock()
-
-
-def _evict_dead_sessions(cache: dict, app_id: str) -> None:
-    """Drop entries from other (dead) SparkSessions — a restarting
-    process must not pin Py4J refs into dead JVMs forever.  Caller
-    holds the module lock."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-
-
-def clear_pair_cache() -> None:
-    """Drop memoized candidate frames (tests / fixture swaps).
-
-    Takes the build lock: clearing concurrently with an in-flight
-    memoized build must not let the builder re-insert a frame pinned
-    to the pre-swap file listing right after the clear."""
-    from polybot_data_etl_spark.catalog import clear_table_cache
-    from polybot_data_etl_spark.functions.text import clear_minhash_cache
-    from polybot_data_etl_spark.operators.graph import clear_edges_cache
-    from polybot_data_etl_spark.plans.bounds import clear_bounds_cache
-
-    with _PAIR_CACHE_LOCK:
-        _SIZED_PAIRS_CACHE.clear()
-        _CC_LABELS_CACHE.clear()
-        _EMBED_PAIRS_CACHE.clear()
-    clear_minhash_cache()
-    clear_edges_cache()
-    clear_table_cache()
-    clear_bounds_cache()
-
-
-# Memoized CC labels over the n-gram pair graph, keyed like
-# _SIZED_PAIRS_CACHE: FIVE registered queries consume the cluster
-# assignment (q_dedup_clusters, q_dedup_cluster_sizes, q_mix_dedup_loss
-# directly; q_pipeline_curate and q_pipeline_leakage through the label
-# frame), and component_labels is EAGER (limit probe + local union-find
-# per call) — a production curation DAG materializes the assignment
-# once per run, so the engine does too.
-_CC_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def ngram_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, lbl) for every edge-endpoint doc of the q_dedup_ngram
-    pair graph — memoized per (application, sf_dir); see
-    component_labels for semantics and the eager-execution contract."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PAIR_CACHE_LOCK:
-        cached = _CC_LABELS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        _evict_dead_sessions(_CC_LABELS_CACHE, key[0])
-        pairs = q_dedup_ngram(spark, sf_dir).select("a_id", "b_id")
-        labels = component_labels(pairs)
-        _CC_LABELS_CACHE[key] = labels
-        return labels
+    pair graph; see component_labels for semantics and the
+    eager-execution contract.  Memoized per session: FIVE registered
+    queries consume the cluster assignment (q_dedup_clusters,
+    q_dedup_cluster_sizes, q_mix_dedup_loss directly; q_pipeline_curate
+    and q_pipeline_leakage through the label frame), and a production
+    curation DAG materializes it once per run, so the engine does too."""
+    return memo(
+        spark,
+        ("cc_labels", sf_dir),
+        lambda: component_labels(
+            q_dedup_ngram(spark, sf_dir).select("a_id", "b_id")
+        ),
+    )
 
 
 def sized_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,19 +205,22 @@ def sized_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg below its exchange defeats exchange reuse and the
     shingle explode runs twice).  Candidate pairs are generated INSIDE
     each posting row by a double explode (codegen Generate, no
-    self-join), then one pair-keyed aggregate counts intersections."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PAIR_CACHE_LOCK:
-        cached = _SIZED_PAIRS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        _evict_dead_sessions(_SIZED_PAIRS_CACHE, key[0])
-        return _build_sized_shingle_pairs(spark, sf_dir, key)
+    self-join), then one pair-keyed aggregate counts intersections.
+
+    Memoized per session: FIVE registered queries consume it
+    (q_dedup_ngram, q_dedup_containment directly; q_dedup_clusters,
+    q_pipeline_curate, q_pipeline_leakage through q_dedup_ngram), and
+    the first consumer's action materializes the postings checkpoint
+    that every later one reads (VERDICT r4 #3: the measured
+    q_dedup_clusters/q_pipeline_* tail was this recomputation)."""
+    return memo(
+        spark,
+        ("sized_pairs", sf_dir),
+        lambda: _build_sized_shingle_pairs(spark, sf_dir),
+    )
 
 
-def _build_sized_shingle_pairs(
-    spark: SparkSession, sf_dir: str, key: tuple[str, str]
-) -> DataFrame:
+def _build_sized_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     sh = d.select("doc_id", F.explode(shingles()).alias("s"))
     w_s = Window.partitionBy("s")
@@ -324,7 +268,6 @@ def _build_sized_shingle_pairs(
     # checkpointing `sized` itself was measured 3.5× WORSE on first
     # touch (it materializes every pre-threshold candidate pair instead
     # of letting each consumer's filter stream over them).
-    _SIZED_PAIRS_CACHE[key] = sized
     return sized
 
 
@@ -1087,16 +1030,11 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the MinHash pairs: q_dedup_threshold_sweep consumes it, so a
     session running both pays the hyperplane kernel + tiled verify
     once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PAIR_CACHE_LOCK:
-        cached = _EMBED_PAIRS_CACHE.get(key)
-        if cached is None:
-            _evict_dead_sessions(_EMBED_PAIRS_CACHE, key[0])
-            cached = _build_embed_pairs(spark, sf_dir).localCheckpoint(
-                eager=False
-            )
-            _EMBED_PAIRS_CACHE[key] = cached
-        return cached
+    return memo(
+        spark,
+        ("embed_pairs", sf_dir),
+        lambda: _build_embed_pairs(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 def _build_embed_pairs(

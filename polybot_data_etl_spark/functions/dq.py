@@ -29,9 +29,9 @@ from polybot_data_etl_spark.plans.bounds import (
     bucket_index_sql,
     derived_bucket_count,
     grid_cuts,
-    memoized_bounds,
     probe_rows_and_grid,
 )
+from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
 
@@ -1041,17 +1041,14 @@ def rle_profile_bucketed(
         "l_shipdate",
     )
     base = li.select(*order_cols)
-    # Cut points memoized per (session, sf_dir, key): the sampling pass
-    # is deterministic in the input, so only the FIRST plan build in a
-    # session pays it (VERDICT r11 §wrong #4; job-count pinned in
-    # tests/test_round12.py).  Default path (r13, guide §2.2): ONE job
-    # samples row count + the fixed quantile grid, and the bucket count
-    # derives from the sampled rows — 32 at fixture scale (identical
-    # cuts to the old fixed-32 plan), growing to bound the per-bucket
-    # sort at ×100.  An explicit n_buckets (the pytest cross-checks)
-    # keeps the direct sampling path.
+    # Cut points memoized per session (bounds.py).  Default path (r13,
+    # guide §2.2): ONE job samples row count + the fixed quantile grid,
+    # and the bucket count derives from the sampled rows — 32 at
+    # fixture scale (identical cuts to the old fixed-32 plan), growing
+    # to bound the per-bucket sort at ×100.  An explicit n_buckets (the
+    # pytest cross-checks) keeps the direct sampling path.
     if n_buckets is None:
-        probe = memoized_bounds(
+        probe = memo(
             spark,
             ("rle_probe", sf_dir, GRID),
             lambda: probe_rows_and_grid(base, "l_orderkey"),
@@ -1060,7 +1057,7 @@ def rle_profile_bucketed(
         bounds = grid_cuts(probe, n_buckets)
     else:
         qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memoized_bounds(
+        bounds = memo(
             spark,
             ("rle_bounds", sf_dir, n_buckets),
             lambda: sorted(
@@ -1256,13 +1253,11 @@ def id_gaps_bucketed(
     from pyspark.sql import Window
 
     e = table(spark, sf_dir, "events")
-    # memoized like rle_profile_bucketed's cuts (one sampling job per
-    # session per key); default path derives the bucket count from the
-    # sampled row count (r13, guide §2.2 — fixed 32 at fixture scale,
-    # growing at ×100), explicit n_buckets keeps the direct sampling
-    # path for the pytest cross-checks.
+    # Cuts memoized as in rle_profile_bucketed; the default path
+    # derives the bucket count from the sampled row count, explicit
+    # n_buckets keeps the direct sampling path (pytest cross-checks).
     if n_buckets is None:
-        probe = memoized_bounds(
+        probe = memo(
             spark,
             ("id_gap_probe", sf_dir, GRID),
             lambda: probe_rows_and_grid(e, "event_id"),
@@ -1271,7 +1266,7 @@ def id_gaps_bucketed(
         bounds = grid_cuts(probe, n_buckets)
     else:
         qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memoized_bounds(
+        bounds = memo(
             spark,
             ("id_gap_bounds", sf_dir, n_buckets),
             lambda: sorted(

@@ -1106,9 +1106,9 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_index_sql,
         derived_bucket_count,
         grid_cuts,
-        memoized_bounds,
         probe_rows_and_grid,
     )
+    from polybot_data_etl_spark.plans.memo import memo
 
     li = table(spark, sf_dir, "lineitem")
     # SQL-text expressions (r13, guide §4): identical operator tree to
@@ -1131,7 +1131,7 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived from the sampled part count — 32 at fixture scale,
     # growing at ×100 (r13, guide §2.2); codegen'd O(log B) bucket
     # assignment replaces the O(B) interpreted HOF (bounds.py).
-    probe = memoized_bounds(
+    probe = memo(
         spark,
         ("abc_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(pc, "cents"),

@@ -25,9 +25,9 @@ from polybot_data_etl_spark.plans.bounds import (
     bucket_index_sql,
     derived_bucket_count,
     grid_cuts,
-    memoized_bounds,
     probe_rows_and_grid,
 )
+from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
 
@@ -381,7 +381,7 @@ def rfm_quintiles_scaled(
                 **{k: list(row[k] or []) for k in ("b_r", "b_f", "b_m")},
             }
 
-        probe = memoized_bounds(spark, ("rfm_probe", sf_dir, GRID), _probe)
+        probe = memo(spark, ("rfm_probe", sf_dir, GRID), _probe)
         n_buckets = derived_bucket_count(probe["rows"])
         cut_lists = {
             k: grid_cuts(probe | {"grid": probe[k]}, n_buckets)
@@ -403,7 +403,7 @@ def rfm_quintiles_scaled(
                 for k in ("b_r", "b_f", "b_m")
             }
 
-        cut_lists = memoized_bounds(
+        cut_lists = memo(
             spark, ("rfm_bounds", sf_dir, n_buckets), _sample_cuts
         )
 
@@ -1138,7 +1138,7 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sort_array(collect_set(p)) AS parts")
     )
     baskets = baskets.localCheckpoint(eager=False)
-    max_basket = memoized_bounds(
+    max_basket = memo(
         spark,
         ("basket_max", sf_dir),
         lambda: int(

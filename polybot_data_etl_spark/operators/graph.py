@@ -21,64 +21,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
+from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
 _PR_DAMPING = 0.85
 _PR_ITERS = 3
 
 
-# Memoized co-purchase edge set (round 8): SEVEN graph queries
-# (triangles, degree, assortativity, kcore, clustering, link_predict,
-# centralization) build the IDENTICAL distinct (a < b) part-pair frame
-# over %4-filtered lineitem — the same redundant-kernel shape the r7
-# MinHash signature memo collapsed for the dedup family.  One lazily
-# checkpointed frame per (application, sf_dir): the first consumer
-# materializes ~75 k edges executor-locally, every later graph query
-# reads the blocks.  Built via the basket-bounded explode² (the r6
-# link_predict rewrite — zero join shuffles, fan-out bounded by basket
-# size) rather than the O(rows²/orders) self-join.
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_EDGES_CACHE_LOCK = __import__("threading").RLock()
-
-
-def clear_edges_cache() -> None:
-    """Drop memoized co-purchase edge frames (tests / fixture swaps)."""
-    with _EDGES_CACHE_LOCK:
-        _EDGES_CACHE.clear()
-
-
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (a, b), a < b, over parts
-    with ``l_partkey % 4 == 0`` — the shared base graph of every
-    q_graph_* query.  Memoized per (application, sf_dir), lazily
-    checkpointed; build serialized so bench.py's plan-producer threads
-    cannot double-run the kernel."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _EDGES_CACHE_LOCK:
-        cached = _EDGES_CACHE.get(key)
-        if cached is None:
-            from polybot_data_etl_spark.functions.dedup import (
-                _evict_dead_sessions,
-            )
+    with ``l_partkey % 4 == 0`` — the shared base graph of SEVEN
+    q_graph_* queries (triangles, degree, assortativity, kcore,
+    clustering, link_predict, centralization).  Memoized per session as
+    one lazily checkpointed frame: the first consumer materializes ~75 k
+    edges executor-locally, every later graph query reads the blocks.
+    Built via the basket-bounded explode² (zero join shuffles, fan-out
+    bounded by basket size), not the O(rows²/orders) self-join."""
+    return memo(
+        spark,
+        ("copurchase_edges", sf_dir),
+        lambda: _build_copurchase_edges(spark, sf_dir),
+    )
 
-            _evict_dead_sessions(_EDGES_CACHE, key[0])
-            li = (
-                table(spark, sf_dir, "lineitem")
-                .filter(F.col("l_partkey") % 4 == 0)
-                .select("l_orderkey", "l_partkey")
-            )
-            baskets = li.groupBy("l_orderkey").agg(
-                F.array_sort(F.collect_set("l_partkey")).alias("parts")
-            )
-            ea = baskets.select("parts", F.explode("parts").alias("a"))
-            cached = (
-                ea.select("a", F.explode("parts").alias("b"))
-                .filter(F.col("a") < F.col("b"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            _EDGES_CACHE[key] = cached
-        return cached
+
+def _build_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_partkey") % 4 == 0)
+        .select("l_orderkey", "l_partkey")
+    )
+    baskets = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("parts")
+    )
+    ea = baskets.select("parts", F.explode("parts").alias("a"))
+    return (
+        ea.select("a", F.explode("parts").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -159,6 +140,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )
+    return pagerank_fold(edges, nodes)
+
+
+def pagerank_fold(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(node, n_name, pagerank) over weighted (src, dst, w) edges and
+    (node, n_name) nodes; an edge whose src is not a node carries no
+    mass, as in the oracle's inner join."""
     # r13 (VERDICT r12 §next #5, guide §5): the per-iteration dataflow
     # — broadcast(pr) join → mass groupBy → left-join teleport, ×3 —
     # cost a job WAVE per tiny exchange (19 executed jobs; the old
@@ -181,6 +169,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = nodes.agg(F.expr("sort_array(collect_list(node)) AS ns"))
     pos = "CAST(array_position(ns, e.src) AS INT)"
+    # position 0 = src absent from ns: element_at(_, 0) raises
+    src_pr = f"IF({pos} > 0, element_at(st.pr, {pos}), 0.0D)"
     # out-weight-normalized edge array, bound ONCE as the fold's init
     # (a plain projection would be inlined by CollapseProject and
     # re-evaluated per lambda reference)
@@ -197,7 +187,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (st, it) -> named_struct('pr', transform(ns, j ->"
         f" {1 - _PR_DAMPING}D / CAST(size(ns) AS DOUBLE)"
         f" + {_PR_DAMPING}D * aggregate(filter(st.en, e -> e.dst = j),"
-        f" 0.0D, (acc, e) -> acc + element_at(st.pr, {pos}) * e.p)),"
+        f" 0.0D, (acc, e) -> acc + {src_pr} * e.p)),"
         " 'en', st.en),"
         " st -> st.pr)"
     )

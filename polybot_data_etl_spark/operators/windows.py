@@ -22,9 +22,9 @@ from polybot_data_etl_spark.plans.bounds import (
     bucket_index_sql,
     derived_bucket_count,
     grid_cuts,
-    memoized_bounds,
     probe_rows_and_grid,
 )
+from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
 
@@ -279,12 +279,10 @@ def q_win_dist_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build-time pass is the RangePartitioner-sampling precedent and
     # is hidden by bench's producer pipelining.  In-plan bounds win
     # only over pre-aggregated frames (mannwhitney/kruskal).
-    # ...and memoized per (session, sf_dir) since round 12, so only
-    # the first build pays it (VERDICT r11 §wrong #4).  r13: the same
-    # job counts the rows and the bucket count derives from it (guide
-    # §2.2 — 32 at fixture scale, growing at ×100); the bucket
-    # assignment is the codegen'd O(log B) ladder (bounds.py).
-    probe = memoized_bounds(
+    # Memoized per session (bounds.py); the same job counts the rows
+    # and the bucket count derives from it (guide §2.2); the bucket
+    # assignment is the codegen'd O(log B) ladder.
+    probe = memo(
         spark,
         ("win_dist_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(c, "c_acctbal"),
@@ -532,11 +530,9 @@ def q_win_weighted_median_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hidden by bench's producer pipelining.  The in-plan form wins
     # only when the percentile runs on an already-aggregated small
     # frame (q_stats_mannwhitney / q_stats_kruskal — converted).
-    # ...and memoized per (session, sf_dir) since round 12 (VERDICT
-    # r11 §wrong #4).  r13: the same job counts rows and the bucket
-    # count derives from it (guide §2.2); codegen'd O(log B) bucket
-    # assignment (bounds.py).
-    probe = memoized_bounds(
+    # Memoized per session (bounds.py); the same job counts rows and
+    # the bucket count derives from it; codegen'd O(log B) assignment.
+    probe = memo(
         spark,
         ("wmedian_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(base, "l_quantity"),

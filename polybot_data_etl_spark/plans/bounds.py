@@ -1,71 +1,18 @@
-"""Session-scoped memo for driver-side bucket-bound literals.
+"""Bucket bounds for the bucketed two-pass plans (q_dq_rle,
+q_dq_id_gaps, q_agg_rfm, q_agg_abc, q_win_dist*).
 
-The four plans flipped to their bucketed two-pass recipes in round 11
-(q_dq_rle, q_dq_id_gaps, q_agg_rfm, q_win_dist — plus the round-8
-q_win_weighted_median_scaled) each open with one synchronous
-``percentile_approx(...).first()`` that samples the bucket cut points,
-the RangePartitioner precedent.  That pass is deterministic in
-(fixture dir, source frame, bucket count) but was re-paid on EVERY plan
-construction — measured 4-7 s cold at sf0.1 across the four names
-(SCALE.md, commit 290866b), hidden under bench's producer pipelining
-but billed again by any caller that rebuilds plans in a shared session
-(VERDICT r11 §wrong #4).
-
-``memoized_bounds`` keys the computed plain-Python value by
-(applicationId, caller key): the first build of a (query, sf_dir,
-n_buckets) combination runs the sampling job, every later build in the
-same session re-uses the literals and issues NO Spark job — asserted
-via the status tracker in tests/test_round12.py.  Values are plain
-lists/dicts (no DataFrame, no Py4J ref), so entries from dead sessions
-hold no JVM resources; they are still evicted on app-id change so a
-long-lived process cycling sessions over changing fixture paths cannot
-read stale cuts.
-
-Concurrency: the lock covers only dict access, never the Spark job —
-two plan-producer threads racing the same cold key may both run the
-sampling pass (harmless: the value is deterministic; ``setdefault``
-keeps exactly one), but a cold build never blocks lookups of other
-keys, unlike the module-wide build locks the lazy-frame caches need.
+Each plan opens with one synchronous ``percentile_approx(...).first()``
+that samples its cut points (the RangePartitioner precedent), measured
+4-7 s cold at sf0.1 across four names (SCALE.md, commit 290866b).  The
+sample is deterministic in (fixture dir, source frame, bucket count),
+so callers take it through ``plans.memo.memo``: only the first build
+in a session runs the job, later builds issue NO Spark job (asserted
+in tests/test_round12.py).  Sampled values are plain lists/dicts.
 """
 
 from __future__ import annotations
 
-import threading
-from typing import Any, Callable
-
-from pyspark.sql import SparkSession
-
-_CACHE: dict[tuple, Any] = {}
-_LOCK = threading.Lock()
-_MISSING = object()
-
-
-def memoized_bounds(
-    spark: SparkSession, key: tuple, compute: Callable[[], Any]
-) -> Any:
-    """Return ``compute()``'s value memoized per (session, ``key``).
-
-    ``compute`` must return a plain picklable Python value (bound
-    literals, not frames); it runs outside the lock.
-    """
-    app_id = spark.sparkContext.applicationId
-    full_key = (app_id, *key)
-    with _LOCK:
-        value = _CACHE.get(full_key, _MISSING)
-    if value is not _MISSING:
-        return value
-    value = compute()
-    with _LOCK:
-        for k in [k for k in _CACHE if k[0] != app_id]:
-            del _CACHE[k]
-        return _CACHE.setdefault(full_key, value)
-
-
-def clear_bounds_cache() -> None:
-    """Drop memoized cut points (tests / fixture swaps under one app)."""
-    with _LOCK:
-        _CACHE.clear()
-
+import math
 
 # --- r13: scale-derived bucket counts + codegen'd bucket assignment ---
 #
@@ -125,7 +72,10 @@ def grid_cuts(probe: dict, n_buckets: int, grid: int = GRID) -> list:
     grid (exact: the grid is a superset of every power-of-two
     quantile set up to GRID)."""
     stride = grid // n_buckets
-    return sorted(set(probe["grid"][stride - 1 :: stride]))
+    # Spark's order (NaN above +inf); Python's sort is undefined on NaN
+    return sorted(
+        set(probe["grid"][stride - 1 :: stride]), key=lambda v: (v != v, v)
+    )
 
 
 def bucket_index_sql(cuts: list, col_sql: str) -> str:
@@ -137,7 +87,13 @@ def bucket_index_sql(cuts: list, col_sql: str) -> str:
     def lit(v) -> str:
         if isinstance(v, int):
             return f"{v}L"
-        return f"CAST({float(v)!r} AS DOUBLE)"
+        v = float(v)
+        # repr() gives inf/-inf/nan, which are not SQL literals
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return "CAST('%sInfinity' AS DOUBLE)" % ("-" if v < 0 else "")
+        return f"CAST({v!r} AS DOUBLE)"
 
     def rec(lo: int, hi: int) -> str:
         if lo == hi:

@@ -123,38 +123,3 @@ def test_loader_handles_nanos_layout(spark, tmp_path):
         datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=m)
         for m in micros
     ]
-
-
-def test_clear_table_cache_invalidates_inflight_builds(spark, sf_dir, monkeypatch):
-    """ADVICE r7: table() builds the scan frame OUTSIDE the cache lock
-    (so parallel plan producers can build different tables
-    concurrently), which used to let a build that started before a
-    clear_table_cache() re-insert its stale frame afterwards — undoing
-    the fixture-swap invalidation.  The generation counter makes that
-    late insert a no-op.  Reproduce deterministically by triggering
-    the clear mid-build, from the isdir probe that runs between the
-    generation snapshot and the parquet read."""
-    import os as _os
-
-    from polybot_data_etl_spark import catalog
-
-    catalog.clear_table_cache()
-    real_isdir = _os.path.isdir
-    fired = []
-
-    def clearing_isdir(p):
-        if not fired:  # clear exactly once, mid-build
-            fired.append(True)
-            catalog.clear_table_cache()
-        return real_isdir(p)
-
-    monkeypatch.setattr("os.path.isdir", clearing_isdir)
-    df = catalog.table(spark, sf_dir, "region")
-    monkeypatch.undo()
-    assert df.count() > 0  # the caller still gets a usable frame
-    # ...but the stale frame must NOT have been inserted post-clear
-    key = (spark.sparkContext.applicationId, sf_dir, "region")
-    assert key not in catalog._TABLE_CACHE
-    # a fresh build after the clear caches normally again
-    catalog.table(spark, sf_dir, "region")
-    assert key in catalog._TABLE_CACHE

@@ -962,21 +962,30 @@ def test_agg_abc_shares_one_revenue_frame(spark, sf_dir):
     assert "Scan ExistingRDD" in plan
 
 
-def test_minhash_eval_found_side_is_probe_bounded(spark, sf_dir):
+def test_minhash_eval_found_side_is_probe_bounded(spark, sf_dir, monkeypatch):
     """q_dedup_minhash_eval (r7): BOTH sides are probe-bounded — every
     parquet scan in the plan (the query reads only documents) carries
     the doc_id < 100 pushdown, so the found side runs the signature
     kernel over the probe subset, never the corpus (a corpus scan →
     100-doc kernel at 100 TB).  Banding is per-doc deterministic, so
     probe×probe LSH pairs are identical either way (the oracle keeps
-    the filtered-full-corpus formulation as the independent witness)."""
+    the filtered-full-corpus formulation as the independent witness).
+
+    The lazy localCheckpoints in the MinHash path hide the lineage
+    behind `Scan ExistingRDD`, so the plan is taken with
+    localCheckpoint patched to the identity: the scans it shows are
+    the lineage under those checkpoints."""
     import re
 
     from polybot_data_etl_spark.functions.dedup import clear_pair_cache
 
     clear_pair_cache()  # a memoized corpus pair frame would hide scans
     try:
+        monkeypatch.setattr(
+            type(spark.range(1)), "localCheckpoint", lambda self, *a, **k: self
+        )
         plan = plan_of(spark, sf_dir, "q_dedup_minhash_eval")
+        monkeypatch.undo()
         scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
         assert scans, "expected parquet scans in the plan"
         probe_pushed = [

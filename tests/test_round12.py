@@ -24,44 +24,17 @@ def test_flipped_plan_bounds_memoized(spark, sf_dir):
     build-time quantile pass (measured 4-7 s cold at sf0.1 across the
     four) runs once per (session, sf_dir, n_buckets) and later plan
     constructions re-use the cut-point literals."""
-    from polybot_data_etl_spark.plans.bounds import clear_bounds_cache
+    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
     from polybot_data_etl_spark.registry import queries
 
     q = queries()
     names = ("q_dq_rle", "q_dq_id_gaps", "q_agg_rfm", "q_win_dist")
-    clear_bounds_cache()
+    clear_pair_cache()
     for name in names:
         cold = _job_count(spark, lambda: q[name](spark, sf_dir))
         assert cold >= 1, (name, "first build must run the sampling job")
         warm = _job_count(spark, lambda: q[name](spark, sf_dir))
         assert warm == 0, (name, "second build must be job-free")
-
-
-def test_bounds_memo_keys_isolate(spark, sf_dir, tmp_path):
-    """Different (sf_dir, n_buckets) keys must not share cut points:
-    a fixture swap or a bucket-count change re-samples; the same key
-    re-uses.  Also pins the dead-session eviction sweep."""
-    from polybot_data_etl_spark.plans import bounds as B
-
-    B.clear_bounds_cache()
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return [1.0, 2.0]
-
-    v1 = B.memoized_bounds(spark, ("k", str(tmp_path), 32), compute)
-    v2 = B.memoized_bounds(spark, ("k", str(tmp_path), 32), compute)
-    assert v1 == v2 == [1.0, 2.0] and calls["n"] == 1
-    B.memoized_bounds(spark, ("k", str(tmp_path), 16), compute)
-    assert calls["n"] == 2
-    # a foreign (dead) session's entry is swept on the next insert
-    with B._LOCK:
-        B._CACHE[("dead-app", "k", "x", 8)] = [9.9]
-    B.memoized_bounds(spark, ("k2", str(tmp_path), 32), compute)
-    with B._LOCK:
-        assert ("dead-app", "k", "x", 8) not in B._CACHE
-    B.clear_bounds_cache()
 
 
 def test_flipped_plans_still_match_demoted_after_memo(spark, sf_dir):

@@ -39,6 +39,36 @@ def test_bucket_index_sql_matches_hof(spark):
         assert row["ladder"] == row["hof"], row
 
 
+def test_bucket_index_sql_non_finite(spark):
+    """Cut points sampled from a column salted with ±inf/NaN are
+    non-finite; the ladder must still render valid SQL and equal
+    size(filter(array(cuts), x -> x <= col)) on ±inf, NaN and NULL
+    rows (Spark orders NaN above +inf, and NaN <= NaN holds)."""
+    from polybot_data_etl_spark.plans.bounds import (
+        bucket_index_sql,
+        grid_cuts,
+        probe_rows_and_grid,
+    )
+
+    inf, nan = float("inf"), float("nan")
+    salt = [inf, -inf, nan, None]
+    vals = [float(i) for i in range(40)] + salt * 20
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    sampled = grid_cuts(probe_rows_and_grid(df, "v"), 32)
+    for cuts in (sampled, [-inf, -1.0, 0.5, inf, nan]):
+        got = df.select(
+            F.expr(bucket_index_sql(cuts, "v")).alias("ladder"),
+            F.size(
+                F.filter(
+                    F.array(*[F.lit(c) for c in cuts]),
+                    lambda x: x <= F.col("v"),
+                )
+            ).alias("hof"),
+        ).collect()
+        for row in got:
+            assert row["ladder"] == max(row["hof"], 0), (cuts, row)
+
+
 def test_derived_bucket_count_floor_and_growth():
     """Fixture-scale inputs stay on the historical 32-bucket plan;
     bucket count grows as a power of two with rows and caps at GRID."""
@@ -143,42 +173,22 @@ def test_basket_tiled_pairs_bit_identical(spark):
         )
     )
     assert got_small == want_small
-    assert sorted(map(tuple, small_only.collect())) != []
+    # max_basket <= chunk selects the exchange-free route, which expands
+    # every basket whatever its size
+    assert sorted(map(tuple, small_only.collect())) == want
 
 
-def test_pagerank_fold_equals_unfolded(spark, sf_dir):
-    """The r13 sequence-fold PageRank (one executor-side array fold,
-    no per-iteration exchanges) must equal the classic unfolded
-    3-iteration dataflow it replaced, value for value at 6 dp."""
-    from polybot_data_etl_spark.catalog import table
-    from polybot_data_etl_spark.operators.graph import (
-        _PR_DAMPING,
-        _PR_ITERS,
-        q_graph_pagerank,
-    )
+def _unfolded_pagerank(edges, nodes):
+    """The classic unfolded 3-iteration PageRank dataflow the r13
+    sequence fold replaced (broadcast(pr) join → mass groupBy →
+    left-join teleport, per iteration)."""
+    from polybot_data_etl_spark.operators.graph import _PR_DAMPING, _PR_ITERS
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count("*").cast("double").alias("w"))
-    )
     outw = edges.groupBy("src").agg(F.sum("w").alias("tw"))
     norm = (
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("tw")).alias("p"))
         .localCheckpoint(eager=False)
-    )
-    nodes = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
     )
     nn = nodes.agg(F.count("*").cast("double").alias("N"))
     nodes_n = nodes.crossJoin(F.broadcast(nn))
@@ -199,12 +209,57 @@ def test_pagerank_fold_equals_unfolded(spark, sf_dir):
                 * F.coalesce(F.col("mass"), F.lit(0.0))
             ).alias("pr"),
         )
-    witness = nodes.join(pr, "node").select(
+    return nodes.join(pr, "node").select(
         "node", "n_name", F.round("pr", 6).alias("pagerank")
     )
+
+
+def test_pagerank_fold_equals_unfolded(spark, sf_dir):
+    """The r13 sequence-fold PageRank (one executor-side array fold,
+    no per-iteration exchanges) must equal the classic unfolded
+    3-iteration dataflow it replaced, value for value at 6 dp."""
+    from polybot_data_etl_spark.catalog import table
+    from polybot_data_etl_spark.operators.graph import q_graph_pagerank
+
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    edges = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .groupBy(
+            F.col("c_nationkey").alias("src"),
+            F.col("s_nationkey").alias("dst"),
+        )
+        .agg(F.count("*").cast("double").alias("w"))
+    )
+    nodes = table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("node"), "n_name"
+    )
     got = sorted(map(tuple, q_graph_pagerank(spark, sf_dir).collect()))
-    want = sorted(map(tuple, witness.collect()))
+    want = sorted(map(tuple, _unfolded_pagerank(edges, nodes).collect()))
     assert got == want
+
+
+def test_pagerank_fold_dangling_src(spark):
+    """An edge whose src is not a node (array_position → 0) must carry
+    no mass instead of raising in element_at, matching the unfolded
+    form's inner join (and the oracle's)."""
+    from polybot_data_etl_spark.operators.graph import pagerank_fold
+
+    nodes = spark.createDataFrame(
+        [(0, "A"), (1, "B"), (2, "C")], "node int, n_name string"
+    )
+    edges = spark.createDataFrame(
+        [(0, 1, 2.0), (1, 2, 1.0), (2, 0, 3.0), (9, 1, 5.0), (9, 2, 1.0)],
+        "src int, dst int, w double",
+    )
+    got = sorted(map(tuple, pagerank_fold(edges, nodes).collect()))
+    want = sorted(map(tuple, _unfolded_pagerank(edges, nodes).collect()))
+    assert got == want
+    assert len(got) == 3
 
 
 def test_rle_derived_equals_explicit(spark, sf_dir):
