@@ -328,9 +328,8 @@ def main() -> int:
         "q_udf_pandas",
         # r10: broadcast-index mapInPandas kernel — its plan shape
         # (driver toPandas → sc.broadcast → mapInPandas → BHJ) is the
-        # one family the six above don't compile; unwarmed it pays
-        # ~6-13 s of codegen/Arrow bring-up at the measured scale
-        # because tier-1 enumeration runs it near the suite head
+        # one family the six above don't compile; unwarmed, its
+        # measured run pays ~6-13 s of codegen/Arrow bring-up
         # (measured: 13.99 s cold → 2.6 s with this warm line).
         "q_embed_hubness",
     ):

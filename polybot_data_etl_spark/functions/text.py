@@ -22,7 +22,7 @@ engine-specific and forced a rows-only gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
@@ -297,16 +297,6 @@ def _minhash_sig_sql(n_perms: int = _MINHASH_PERMS) -> str:
                                   s -> {_CHAR_HASH_SQL.format(t='s')}) AS hl
             FROM documents
         )"""
-
-
-def _band_bucket(cols: list[Column]) -> Column:
-    """Portable band key: left fold s -> acc*31 + s (mod p) over the
-    band's signature values — same expression in the oracle SQL (a
-    collision maps both engines to the same candidate set either way)."""
-    acc = cols[0]
-    for c in cols[1:]:
-        acc = (acc * 31 + c) % F.lit(_P)
-    return acc
 
 
 def _band_bucket_sql(band: int) -> str:

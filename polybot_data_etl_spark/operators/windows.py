@@ -212,28 +212,10 @@ def q_win_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Registered plan (round-11 flip, VERDICT r10 §Next-round #1): the
     two-pass range-bucketed rank of :func:`q_win_dist_scaled` — the
-    two registered names deliberately share the scale plan now that
-    the contract (same oracle) is identical; the r1-r10 fixture-scale
-    form (one unpartitioned window = one-task global sort at 100 TB)
-    is demoted to :func:`win_dist_global`, kept as the pytest
-    cross-check pinning the plans value-equal."""
+    two registered names deliberately share the scale plan because the
+    contract (same oracle) is identical; a single unpartitioned window
+    would be a one-task global sort at 100 TB."""
     return q_win_dist_scaled(spark, sf_dir)
-
-
-def win_dist_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixture-scale global-window form of :func:`q_win_dist` —
-    REGISTERED for rounds 1-10, demoted to the test-only cross-check
-    at the round-11 flip (one unpartitioned ntile/percent_rank/
-    cume_dist window — fine at dim-table scale, a one-task sort at
-    100 TB)."""
-    c = table(spark, sf_dir, "customer")
-    w = Window.orderBy("c_acctbal", "c_custkey")
-    return c.select(
-        "c_custkey",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 4).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 4).alias("cume"),
-    )
 
 
 @register(

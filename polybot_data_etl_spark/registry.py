@@ -15,11 +15,23 @@ each registered query: float outputs rounded (2 for money, 4 for
 similarity/stats), embeddings cast to double before arithmetic, every
 computed column aliased identically on both sides, top-k always
 tie-broken by a unique key.
+
+Order: ``queries()`` and ``oracles()`` list the query whose driver
+evidence is stalest first.  The driver records only the first 50
+queries of ``queries()`` each round (every committed
+``CORRECTNESS_r<N>.json`` holds 50 rows), so ordering by the last round
+with a green row rotates every query through that window: a query with
+a red latest row, or none, leads; ties keep registration order.  The
+order is read from the committed records, never kept by hand.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 from typing import Any
 
 QueryFn = Callable[..., Any]  # (SparkSession, str) -> DataFrame
@@ -46,236 +58,6 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Queries that already have a green row in a past driver gate
-# (CORRECTNESS_r01.json + CORRECTNESS_r02.json each recorded only the
-# first 50 enumeration-order entries before stopping). Enumeration puts
-# every *other* query first, so a driver that truncates its run still
-# records the queries with no prior green row. Updated each round with
-# the new greens; queries that ERRORED in a round stay out so they are
-# re-recorded after the fix.
-_R01_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_agg_q1", "q_agg_distinct", "q_agg_grouping_sets", "q_agg_rollup",
-        "q_agg_cube", "q_agg_filtered", "q_agg_stats", "q_agg_percentile",
-        "q_agg_minmax_by", "q_agg_collect", "q_agg_approx",
-        "q_join_inner", "q_join_broadcast", "q_join_multi", "q_join_left",
-        "q_join_full", "q_join_semi", "q_join_anti", "q_join_cross",
-        "q_join_theta", "q_join_range", "q_join_asof",
-        "q_filter_range", "q_predicate_mix", "q_case_when",
-        "q_pivot", "q_unpivot", "q_subquery_scalar", "q_subquery_in",
-        "q_sql_report", "q_sample_stratified",
-        "q_scan_project", "q_scan_count",
-        "q_sort_multi", "q_topk_global", "q_union_all", "q_union_distinct",
-        "q_intersect", "q_except",
-        "q_ts_tumbling", "q_ts_sliding", "q_ts_session", "q_ts_funnel",
-        "q_ts_cohort",
-        "q_win_rank", "q_win_topk_group", "q_win_running", "q_win_moving",
-        "q_win_range_frame", "q_win_lead_lag",
-    }
-)
-
-# CORRECTNESS_r02.json greens (hash_match=true). The 12 ERR rows from
-# that file are deliberately absent — they must be re-recorded now that
-# the events loader is fixed.
-_R02_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_sample_weighted", "q_split_assign", "q_pack_greedy",
-        "q_win_dist", "q_win_dist_scaled",
-        "q_dq_orphans", "q_dq_profile", "q_dq_skew",
-        "q_multimodal_decode", "q_multimodal_histogram", "q_multimodal_join",
-        "q_text_langid", "q_text_quality", "q_text_tokens",
-        "q_text_fingerprint", "q_text_repetition", "q_text_contamination",
-        "q_text_wordcount", "q_text_stats", "q_text_keyword_score",
-        "q_text_tfidf", "q_text_scrub", "q_text_bigrams", "q_text_chunk",
-        "q_fn_string", "q_fn_regex", "q_fn_date", "q_fn_math", "q_fn_array",
-        "q_explode",
-        "q_udf_python", "q_udf_pandas", "q_udtf_split",
-        "q_embed_norm", "q_embed_quantize",
-        "q_mix_budget", "q_dedup_ngram", "q_dedup_simhash",
-    }
-)
-
-# CORRECTNESS_r03.json greens (50 rows, zero err). With these folded in,
-# exactly 58 registered queries have never had a driver-recorded row;
-# they are the oldest evidence debt and must own the head of round 4's
-# ~50-slot recording window (VERDICT r3 §Next-round #1). The ~8 that
-# spill past the window lead round 5's.
-_R03_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_agg_corr", "q_agg_entropy", "q_agg_gini", "q_agg_histogram",
-        "q_agg_mode", "q_agg_moments", "q_agg_pareto", "q_agg_salted",
-        "q_cdc_compact", "q_dedup_clusters", "q_dedup_containment",
-        "q_dedup_embed", "q_dedup_exact", "q_dedup_minhash",
-        "q_dq_freshness", "q_dq_psi", "q_dq_uniqueness",
-        "q_embed_centroid", "q_fn_json", "q_fn_map", "q_graph_pagerank",
-        "q_join_asof_fwd", "q_join_pit_staleness", "q_join_range_bucketed",
-        "q_join_salted", "q_mix_temperature", "q_multimodal_frames",
-        "q_pipeline_curate", "q_pipeline_leakage", "q_scan_time_pruned",
-        "q_scd2_snapshot", "q_sim_pairs", "q_sim_topk", "q_sim_topk_ivf",
-        "q_sim_topk_lsh", "q_text_perplexity", "q_text_vocab",
-        "q_ts_anomaly", "q_ts_autocorr", "q_ts_dau_wau", "q_ts_ewma",
-        "q_ts_funnel3", "q_ts_gapfill", "q_ts_locf", "q_ts_pct_change",
-        "q_ts_resample", "q_ts_rollup", "q_udaf_grouped",
-        "q_win_firstlast", "q_win_streaks",
-    }
-)
-
-# CORRECTNESS_r04.json greens (49 hash_match=true + q_agg_hll_merge's
-# declared rows-only row, zero err). With these folded in, exactly 50
-# registered queries have never had a driver-recorded row (the 8 tier-0
-# spillover from r4's window + the 42 queries first registered in round
-# 4); they own the head of round 5's ~50-slot recording window
-# (VERDICT r4 §Next-round #1).
-_R04_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_agg_bitmap_distinct", "q_agg_bitmap_rolling", "q_agg_cms_topk",
-        "q_agg_hll_merge", "q_agg_rfm", "q_agg_winsorized",
-        "q_attr_last_touch", "q_attr_linear", "q_dq_benford", "q_dq_kanon",
-        "q_dq_outliers", "q_fn_bitwise", "q_fn_hash", "q_fn_null",
-        "q_fn_struct", "q_fn_url", "q_geo_distance", "q_geo_join",
-        "q_graph_triangles", "q_join_null_safe", "q_join_overlap",
-        "q_link_fuzzy", "q_ml_hashing", "q_ml_knn", "q_ml_score",
-        "q_multimodal_audio", "q_sql_lateral", "q_sql_qualify",
-        "q_sql_recursive", "q_stats_chisq", "q_stats_cuped",
-        "q_stats_regression", "q_stats_ttest", "q_text_gopher",
-        "q_text_readability", "q_ts_burst", "q_ts_changepoint",
-        "q_ts_concurrency", "q_ts_forecast_snaive", "q_ts_growth",
-        "q_ts_holt", "q_ts_interp", "q_ts_ltv", "q_ts_m4", "q_ts_markov",
-        "q_ts_paths", "q_ts_retention", "q_ts_seasonality",
-        "q_win_skyline", "q_win_weighted_median",
-    }
-)
-
-_R05_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_attr_position", "q_dedup_cross_source", "q_dedup_lsh_stats",
-        "q_dedup_paragraph", "q_dedup_semantic", "q_dq_drift_ks",
-        "q_dq_expectations", "q_embed_cov", "q_embed_kmeans",
-        "q_embed_outliers", "q_embed_pca", "q_fn_binary",
-        "q_graph_degree", "q_join_nearest", "q_mix_curriculum",
-        "q_mix_epochs", "q_mix_upsample", "q_ml_auc",
-        "q_ml_calibration", "q_ml_confusion", "q_ml_feature_auc",
-        "q_ml_ks", "q_ml_logloss", "q_ml_ndcg", "q_ml_pr_curve",
-        "q_ml_threshold", "q_multimodal_dedup", "q_pipeline_card",
-        "q_pipeline_entities", "q_sample_reservoir", "q_setops_all",
-        "q_stats_kruskal", "q_stats_mad", "q_stats_mannwhitney",
-        "q_stats_proportion", "q_stats_ratio", "q_stats_spearman",
-        "q_stats_wilson", "q_text_boilerplate", "q_text_novelty",
-        "q_text_pmi", "q_text_urldedup", "q_text_zipf", "q_ts_calendar",
-        "q_ts_conversion_window", "q_ts_cumulative_users", "q_ts_gaps",
-        "q_ts_rolling_median", "q_ts_trend",
-        # q_embed_whiten stays OUT: it errored the r5 gate (array output
-        # vs the driver's pandas hasher), so after the r6 long-form fix
-        # it must re-enumerate at the tier-0 head for re-recording.
-    }
-)
-
-# CORRECTNESS_r06.json greens (48 hash_match=true + q_agg_cms_eval's
-# declared rows-only row; the round-7 driver window re-sampled the
-# IDENTICAL 50 queries because this fold-in was missed — VERDICT r7
-# §What's wrong #3 — so the r6 and r7 green sets are the same 49
-# names, recorded here ONCE).  q_stats_fdr stays OUT: red in both
-# rounds (signed-zero divergence, VERDICT r7 #1), requeued below.
-_R06_RECORDED: frozenset[str] = frozenset(
-    {
-        "q_agg_abc", "q_agg_bool", "q_agg_boxplot", "q_agg_cms_eval",
-        "q_agg_hhi", "q_agg_means", "q_agg_stringagg", "q_agg_theil",
-        "q_basket_lift", "q_embed_whiten", "q_fn_surrogate_key",
-        "q_geo_grid", "q_graph_assortativity", "q_graph_centralization",
-        "q_graph_clustering", "q_graph_kcore", "q_graph_link_predict",
-        "q_graph_two_hop", "q_join_lead_time", "q_sample_balanced",
-        "q_sample_neyman", "q_sample_systematic", "q_sql_window_clause",
-        "q_stats_anova", "q_stats_bayes_ab", "q_stats_beta_binomial",
-        "q_stats_bimodality", "q_stats_bootstrap",
-        "q_stats_breusch_pagan", "q_stats_circular", "q_stats_cohens_d",
-        "q_stats_durbin_watson", "q_stats_gamma_mom", "q_stats_gpd_pot",
-        "q_stats_gumbel", "q_stats_hill", "q_stats_jarque_bera",
-        "q_stats_levene", "q_stats_mcnemar", "q_stats_median_ci",
-        "q_stats_negbin_mom", "q_stats_poisson_rate", "q_stats_runs",
-        "q_stats_samplesize", "q_stats_sign_test", "q_stats_simpson",
-        "q_stats_srm", "q_stats_tail_ratio", "q_stats_tost",
-    }
-)
-
-def _driver_evidence() -> tuple[frozenset[str], frozenset[str], dict[str, int]]:
-    """Derive (latest-green, latest-red) name sets from the committed
-    CORRECTNESS_r*.json driver records themselves.
-
-    Round 7 was wasted because a fold-in of the r6 greens into the
-    hand-maintained ``_RECORDED`` set was forgotten (VERDICT r7 #3) —
-    so from round 8 on the fold-in is AUTOMATIC: the moment the driver
-    commits a round's record, the next session's enumeration reflects
-    it, no hand edit possible to forget.  The static ``_R0x_RECORDED``
-    sets above stay as the documented base (and as the fallback if the
-    evidence files are ever absent); ``tests/test_coverage.py`` pins
-    the two sources against each other.
-
-    A name's status is taken from the LATEST round that sampled it:
-    green = hash pass or declared rows-only pass; red = sampled but
-    not green (those re-enumerate at the head for re-recording).
-    Unreadable or malformed files are skipped — a damaged record must
-    never break query enumeration.
-    """
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, bool] = {}
-    rounds: dict[str, int] = {}
-    # lexicographic order == round order (r01..r09 < r10 < ...)
-    for i, path in enumerate(
-        sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))), start=1
-    ):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(row.get("hash_match")) or (
-                row.get("err") == "no_oracle"
-                and (row.get("spark_rows") or 0) > 0
-            )
-            latest[name] = green
-            rounds[name] = i
-    greens = frozenset(n for n, g in latest.items() if g)
-    reds = frozenset(n for n, g in latest.items() if not g)
-    return greens, reds, rounds
-
-
-_DRIVER_GREEN, _DRIVER_RED, _EVIDENCE_ROUND = _driver_evidence()
-
-# A latest-red name must re-record even if an OLDER round (or a static
-# set) once recorded it green — subtracting keeps the two tiers
-# disjoint under any green→red→green history.
-_RECORDED: frozenset[str] = (
-    _R01_RECORDED | _R02_RECORDED | _R03_RECORDED | _R04_RECORDED
-    | _R05_RECORDED | _R06_RECORDED | _DRIVER_GREEN
-) - _DRIVER_RED
-
-
-# Families whose queries cost ≥ ~1.5s at the gate scale (dedup/sim
-# kernels + grouped-map UDAF); they run LAST within their coverage
-# group so a time-capped driver run still records the maximum number of
-# queries before any cutoff.
-_EXPENSIVE_PREFIXES = ("q_dedup_", "q_sim_", "q_udaf", "q_pipeline_")
-
-# Queries whose LATEST driver row is RED: they must be re-recorded
-# before anything else (VERDICT r7 #2 "Done = green q_stats_fdr row in
-# CORRECTNESS_r08"), so they jump to the very head of the enumeration —
-# registration order would otherwise leave them outside the driver's
-# ~50-slot window.  DERIVED from the committed evidence files (same
-# automation as _DRIVER_GREEN): the moment a requeued query's re-record
-# comes back green, it leaves this set and joins _RECORDED with no hand
-# edit.  (q_embed_whiten drained through this slot in r5→r6;
-# q_stats_fdr drained in r8.)
-_REQUEUED_RED: frozenset[str] = _DRIVER_RED
-
 # The declared registry size — ONE place (SURVEY §7 M10 end-state:
 # surface complete; no growth without a VERDICT-named semantic gap).
 # Tests assert against these instead of re-pinning literals (ADVICE
@@ -286,70 +68,60 @@ _REQUEUED_RED: frozenset[str] = _DRIVER_RED
 EXPECTED_QUERY_COUNT = 384
 EXPECTED_ORACLE_COUNT = 382
 
-# Names first registered in the CURRENT build round, as DECLARED by the
-# round (hand-maintained).  Round 12 registers q_dedup_embed_scaled
-# and q_sim_topk_lsh_scaled (VERDICT r11 #2: the 8-bit corpus-scale
-# LSH calibrations as registered queries with their own oracles).  The round's other headline —
-# the q_dedup_simhash combinatorial-banding flip — needs no tier-1 slot
-# because the name already has green driver evidence and the oracle is
-# unchanged.
-_NEW_THIS_ROUND_DECLARED: frozenset[str] = frozenset(
-    {"q_dedup_embed_scaled", "q_sim_topk_lsh_scaled"}
-)
-
-# The EFFECTIVE tier-1 set is derived, not static (VERDICT r9 #1: the
-# static set went stale the moment the driver recorded its member — the
-# r6 declaration `{"q_win_weighted_median_scaled"}` intersected
-# _RECORDED after the r9 fold-in and the coverage pin became
-# unsatisfiable).  Subtracting the recorded/requeued names at
-# derivation makes the set staleness-proof BY CONSTRUCTION: when the
-# r10 driver records these 17, they leave this set automatically and
-# round 11 cannot re-fire the red.
-_NEW_THIS_ROUND: frozenset[str] = (
-    _NEW_THIS_ROUND_DECLARED - _RECORDED - _REQUEUED_RED
-)
+# Where the driver commits its per-round CORRECTNESS_r<N>.json records.
+_RECORDS_DIR = Path(__file__).resolve().parent.parent
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _cost_class(name: str) -> int:
-    return 1 if name.startswith(_EXPENSIVE_PREFIXES) else 0
+@functools.cache
+def _last_green_round(records_dir: Path = _RECORDS_DIR) -> dict[str, int]:
+    """Map each recorded query name to the last driver round whose row
+    for it was green: a hash match, or a declared rows-only
+    (``no_oracle``) row that returned rows.  A name whose LATEST row is
+    red maps to 0, the same as a name with no row at all.
 
-
-def _tier(name: str) -> int:
-    """-1 = fixed-after-red requeue (must re-record first), 0 = never
-    driver-recorded (the evidence debt — owns the head of the driver
-    window), 1 = queries first registered this round (newest debt
-    yields to oldest), 2 = already has a driver row."""
-    if name in _REQUEUED_RED:
-        return -1
-    if name in _RECORDED:
-        return 2
-    if name in _NEW_THIS_ROUND:
-        return 1
-    return 0
-
-
-def _priority_order(names) -> list[str]:
-    """Fixed-after-red requeues first, then never-driver-recorded names
-    (oldest debt before new additions), cheap before expensive inside
-    each tier; within the already-recorded tier, OLDEST evidence first
-    (VERDICT r9 #2: the <50-debt endgame back-fills the driver window
-    with prior greens — spend those slots refreshing r1-era records,
-    not whatever registration order happens to surface); registration
-    order otherwise (Python sort is stable)."""
-    return sorted(
-        names,
-        key=lambda n: (_tier(n), _cost_class(n), _EVIDENCE_ROUND.get(n, 0)),
+    The round is the number in the file name.  A file that cannot be
+    read or parsed is skipped whole, so a damaged record never breaks
+    query enumeration.  Read once per process and directory."""
+    records = sorted(
+        (int(m.group(1)), path)
+        for path in records_dir.glob("CORRECTNESS_r*.json")
+        if (m := _RECORD_NAME.fullmatch(path.name))
     )
+    last: dict[str, int] = {}
+    for rnd, path in records:
+        try:
+            rows = json.loads(path.read_text())
+            status = {
+                name: (
+                    rnd
+                    if row.get("hash_match")
+                    or (row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0)
+                    else 0
+                )
+                for name, row in rows.items()
+            }
+        except (OSError, ValueError, AttributeError, TypeError):
+            continue
+        last.update(status)
+    return last
+
+
+def _stalest_first(names: Iterable[str], records_dir: Path = _RECORDS_DIR) -> list[str]:
+    """``names`` ordered by last green driver round, oldest first; the
+    sort is stable, so ties keep the given (registration) order."""
+    last = _last_green_round(records_dir)
+    return sorted(names, key=lambda n: last.get(n, 0))
 
 
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    return {n: _QUERIES[n] for n in _priority_order(_QUERIES)}
+    return {n: _QUERIES[n] for n in _stalest_first(_QUERIES)}
 
 
 def oracles() -> dict[str, str]:
     _ensure_loaded()
-    return {n: _ORACLES[n] for n in _priority_order(_ORACLES)}
+    return {n: _ORACLES[n] for n in _stalest_first(_ORACLES)}
 
 
 _LOADED = False

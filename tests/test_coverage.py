@@ -1,11 +1,17 @@
 """SURVEY §2 ↔ registry parity: every `q_*` row in the contract table
 must be registered (with an oracle when it claims the hash gate), and
 every registered query must appear in the contract — the drift net
-between the documented surface and the implemented one."""
+between the documented surface and the implemented one.  Also pins the
+registry's enumeration order, which decides what the driver's 50-row
+window records each round."""
 
 from __future__ import annotations
 
+import ast
+import json
+import math
 import os
+import shutil
 
 from scripts.coverage_report import build_report
 
@@ -21,53 +27,6 @@ def test_survey_and_registry_agree():
     # the only rows-only queries are the declared approximate ones
     # (HLL estimates are sketch-library-specific on both engines)
     assert report["rows_only"] == ["q_agg_approx", "q_agg_hll_merge"]
-
-
-def test_driver_window_priority_invariants():
-    """The driver records only the first ~50 enumeration-order queries
-    per round.  Three tiers: (0) the never-driver-recorded evidence
-    debt (VERDICT §Next-round #1 each round) must enumerate first;
-    (1) queries newly registered this round yield to them; (2) already-
-    recorded queries go last.  Cheap before expensive within each tier
-    so a time-capped driver run records the maximum number of rows."""
-    from polybot_data_etl_spark import registry
-
-    names = list(registry.queries())
-    tiers = [registry._tier(n) for n in names]
-    assert tiers == sorted(tiers), "tier order must be monotonic"
-    # Fixed-after-red requeues (tier -1) lead everything: their last
-    # driver row was an ERROR and the fix needs a green row this round.
-    assert names[: len(registry._REQUEUED_RED)] == sorted(
-        registry._REQUEUED_RED,
-        key=lambda n: registry._cost_class(n),
-    ) or set(names[: len(registry._REQUEUED_RED)]) == registry._REQUEUED_RED
-    assert not (registry._REQUEUED_RED & registry._RECORDED)
-    tier0 = [n for n in names if registry._tier(n) == 0]
-    # The tier-0 set is exactly "registered minus recorded minus new
-    # minus requeued": derive the expectation from the same constants
-    # instead of a magic number (ADVICE r4) so a legitimate recording
-    # update can't break the invariant — only genuine drift (a query in
-    # both _RECORDED and _NEW_THIS_ROUND, or a recorded name no longer
-    # registered) does.
-    expected_tier0 = (
-        set(names)
-        - registry._RECORDED
-        - registry._NEW_THIS_ROUND
-        - registry._REQUEUED_RED
-    )
-    assert set(tier0) == expected_tier0
-    assert not (registry._RECORDED & registry._NEW_THIS_ROUND)
-    assert registry._RECORDED <= set(names), (
-        "recorded set names queries that are no longer registered: "
-        f"{sorted(registry._RECORDED - set(names))}"
-    )
-    for n in names:
-        if registry._tier(n) == 0:
-            assert n not in registry._NEW_THIS_ROUND
-    # cheap-before-expensive within each tier
-    for t in (-1, 0, 1, 2):
-        costs = [registry._cost_class(n) for n in names if registry._tier(n) == t]
-        assert costs == sorted(costs)
 
 
 def test_every_registered_query_has_driver_hashable_schema(spark, sf_dir):
@@ -94,131 +53,95 @@ def test_every_registered_query_has_driver_hashable_schema(spark, sf_dir):
     )
 
 
-def test_recorded_set_folds_in_every_committed_driver_green():
-    """Regression pin for VERDICT r7 §What's wrong #3: round 7's driver
-    window re-sampled round 6's EXACT 50 queries because the r6 greens
-    were never folded into ``registry._RECORDED``, so the priority head
-    never advanced and zero evidence debt drained.  This test makes a
-    forgotten fold-in a hard failure: every green row (hash pass, or
-    declared rows-only pass) in any committed CORRECTNESS_r*.json must
-    be in ``_RECORDED``, so no enumeration-head slot is ever wasted on
-    a query that already has driver evidence."""
-    import glob
-    import json
+_GREEN = {"hash_match": True, "spark_rows": 3, "err": None}
+_RED = {"hash_match": False, "spark_rows": 3, "err": None}
 
+
+def _record(records_dir, rnd: int, rows) -> None:
+    (records_dir / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
+
+
+def test_stalest_evidence_enumerates_first(tmp_path):
+    """Order = last green driver round, oldest first: a name whose
+    latest row is red, or that has no row, leads; older green precedes
+    newer green; ties keep registration order; the round is the NUMBER
+    in the file name (r10 after r2, though it sorts first as text); a
+    file that cannot be parsed is skipped whole."""
     from polybot_data_etl_spark import registry
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    greens: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if row.get("hash_match") or (
-                row.get("err") == "no_oracle" and row.get("spark_rows", 0) > 0
-            ):
-                greens.add(name)
-    greens &= set(registry.queries())  # ignore since-renamed keys, if any
-    # A latest-red name is deliberately excluded from _RECORDED even if
-    # an older round once recorded it green — it must requeue at the
-    # head (green→red→re-record is the intended flow, ADVICE r8 #2).
-    missing = sorted(greens - registry._RECORDED - registry._REQUEUED_RED)
-    assert not missing, (
-        "driver-green queries missing from registry._RECORDED — fold "
-        f"them in or the next driver window re-records them: {missing}"
-    )
-    # And the flip side of the same waste — reformulated for the
-    # endgame (VERDICT r8 #1): once the never-recorded debt drops below
-    # the window size, the head MUST back-fill with prior greens, so
-    # "no green in head-50" is unsatisfiable.  The real invariant is
-    # that a prior green never DISPLACES outstanding debt:
-    #   (a) every never-recorded query precedes every prior-green, and
-    #   (b) the head contains ALL never-recorded queries when debt<50
-    #       (else the first 50 slots are all debt).
+    rows_only = {"hash_match": None, "spark_rows": 4, "err": "no_oracle"}
+    empty_rows_only = {"hash_match": None, "spark_rows": 0, "err": "no_oracle"}
+    _record(tmp_path, 2, {"q_old": _GREEN, "q_flaky": _GREEN, "q_fixed": _RED})
+    _record(tmp_path, 10, {
+        "q_new": _GREEN, "q_tie": _GREEN, "q_flaky": _RED, "q_fixed": _GREEN,
+        "q_sketch": rows_only, "q_empty": empty_rows_only,
+    })
+    (tmp_path / "CORRECTNESS_r11.json").write_text('{"q_old": ')
+    _record(tmp_path, 12, ["q_old"])
+    _record(tmp_path, 13, {"q_old": _GREEN, "q_tie": "green"})
+    _record(tmp_path, 14, {"q_new": rows_only, "q_old": {**rows_only, "spark_rows": "4"}})
+
+    assert registry._last_green_round(tmp_path) == {
+        "q_old": 2, "q_flaky": 0, "q_fixed": 10, "q_new": 10, "q_tie": 10,
+        "q_sketch": 10, "q_empty": 0,
+    }
+    registration = [
+        "q_new", "q_sketch", "q_tie", "q_old", "q_flaky", "q_unrecorded",
+        "q_fixed", "q_empty",
+    ]
+    assert registry._stalest_first(registration, tmp_path) == [
+        "q_flaky", "q_unrecorded", "q_empty", "q_old",
+        "q_new", "q_sketch", "q_tie", "q_fixed",
+    ]
+
+
+def test_no_query_starves_out_of_the_driver_window(tmp_path):
+    """The driver records the first 50 names of ``queries()`` per
+    round.  Replay the committed records, then simulate rounds that
+    re-record that head green: every registered query must reach the
+    head within ceil(n/50) rounds.  A cost- or tier-keyed order fails
+    this: it parks the expensive families behind the cheap ones for
+    good, so they are never driver-checked again."""
+    from polybot_data_etl_spark import registry
+
+    window = 50
+    committed = sorted(registry._RECORDS_DIR.glob("CORRECTNESS_r*.json"))
+    for path in committed:
+        shutil.copy(path, tmp_path)
     names = list(registry.queries())
-    debt = [n for n in names if n not in greens and n not in registry._REQUEUED_RED]
-    if debt:
-        last_debt_pos = names.index(debt[-1])
-        displaced = [
-            n
-            for n in names[:last_debt_pos]
-            if n in greens and n not in registry._REQUEUED_RED
-        ]
-        assert not displaced, (
-            "prior-green queries enumerate BEFORE outstanding evidence "
-            f"debt (they would waste driver window slots): {displaced}"
+    registration = list(registry._QUERIES)
+    assert registry._stalest_first(registration, tmp_path) == names
+
+    first = 1 + max(
+        int(registry._RECORD_NAME.fullmatch(p.name).group(1)) for p in committed
+    )
+    reached: set[str] = set()
+    for rnd in range(first, first + math.ceil(len(names) / window)):
+        head = registry._stalest_first(registration, tmp_path)[:window]
+        reached.update(head)
+        _record(tmp_path, rnd, {n: _GREEN for n in head})
+        registry._last_green_round.cache_clear()
+    starved = sorted(set(names) - reached)
+    assert not starved, f"{len(starved)} queries never reach the driver window: {starved}"
+
+
+def test_registry_keeps_no_hand_written_query_name_list():
+    """The enumeration order is derived from the committed driver
+    records.  A set, tuple or list literal of ``q_*`` names in
+    registry.py is the hand-kept tier apparatus growing back."""
+    from polybot_data_etl_spark import registry
+
+    with open(registry.__file__) as f:
+        tree = ast.parse(f.read())
+    literals = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Set, ast.Tuple, ast.List))
+        and any(
+            isinstance(e, ast.Constant)
+            and isinstance(e.value, str)
+            and e.value.startswith("q_")
+            for e in node.elts
         )
-    head = set(names[: max(50, len(registry._REQUEUED_RED) + len(debt))])
-    not_in_head = [n for n in debt[:50] if n not in head]
-    assert not not_in_head, (
-        "never-recorded queries pushed out of the driver's recording "
-        f"window head: {not_in_head}"
-    )
-
-
-def test_endgame_head_backfill_is_not_stale():
-    """Regression pin for VERDICT r8 #1: with fewer than 50 queries of
-    never-recorded debt, the enumeration head necessarily back-fills
-    with prior-green names — that back-fill is CORRECT (the driver
-    re-records them as fresh evidence), not staleness.  Simulate the
-    <50-debt state explicitly: whatever the current debt is, verify
-    the green-displacement invariant holds on a synthetic ordering
-    where greens trail all debt, and FAILS on one where a green
-    displaces debt — i.e. the check tests the right property."""
-    from polybot_data_etl_spark import registry
-
-    names = list(registry.queries())
-    greens = registry._RECORDED
-    debt = [n for n in names if n not in greens and n not in registry._REQUEUED_RED]
-
-    def displaced(order: list[str]) -> list[str]:
-        d = [n for n in order if n in debt]
-        if not d:
-            return []
-        last = order.index(d[-1])
-        return [n for n in order[:last] if n in greens]
-
-    # Current registry order: no green displaces debt.
-    assert displaced(names) == []
-    if debt and len(debt) < len(names):
-        # Synthetic violation: move one green ahead of the debt tail.
-        some_green = next(n for n in names if n in greens)
-        bad = [n for n in names if n != some_green]
-        bad.insert(max(0, len(debt) - 1), some_green)
-        assert displaced(bad) != [], "the displacement check must catch a green ahead of debt"
-
-
-def test_new_this_round_is_staleness_proof():
-    """Regression pin for VERDICT r9 #1 (the SECOND endgame coverage
-    red): a STATIC tier-1 set goes stale by design the moment the
-    driver records its member — r6's `{"q_win_weighted_median_scaled"}`
-    intersected ``_RECORDED`` after the r9 fold-in and
-    ``assert not (_RECORDED & _NEW_THIS_ROUND)`` became unsatisfiable.
-    From round 10 the effective set is DERIVED
-    (declared − recorded − requeued), so the all-recorded +
-    nonempty-declaration endgame — the exact state that fired in r8 AND
-    r9 — is structurally green: simulate it and assert the derivation
-    keeps the tiers disjoint with no hand edit."""
-    from polybot_data_etl_spark import registry
-
-    # The derivation is exactly declared − recorded − requeued.
-    assert registry._NEW_THIS_ROUND == (
-        registry._NEW_THIS_ROUND_DECLARED
-        - registry._RECORDED
-        - registry._REQUEUED_RED
-    )
-    # Simulate the endgame fold-in on a SYNTHETIC nonempty declaration
-    # (round 11+ declares nothing — the M10 end-state — so the live set
-    # can no longer exercise the stale-set class; the formula is what's
-    # under test, not the current declaration).  Pick two recorded
-    # names as the "declared" batch: the exact all-recorded +
-    # nonempty-declaration state that fired in r8 AND r9.
-    declared = frozenset(sorted(registry._RECORDED)[:2])
-    assert declared, "the fleet always has recorded names to simulate with"
-    recorded_after_fold = registry._RECORDED | declared
-    derived = declared - recorded_after_fold - registry._REQUEUED_RED
-    assert not (recorded_after_fold & derived), (
-        "the derived tier-1 set must vanish when its members are "
-        "recorded — a nonempty intersection is the r8/r9 red re-firing"
-    )
-    assert derived == frozenset()
+    ]
+    assert not literals, f"q_* name literals in registry.py at lines {literals}"

@@ -1005,8 +1005,8 @@ def test_minhash_eval_found_side_is_probe_bounded(spark, sf_dir, monkeypatch):
 # window directly over data-sized input (no Aggregate/Limit between the
 # window and a scan).  EMPTY since the round-11 flip (VERDICT r10
 # §Next-round #1): q_dq_rle, q_dq_id_gaps and q_win_dist now register
-# their bucketed two-pass plans (the former naive forms live on as
-# rle_profile_global / id_gaps_global / win_dist_global, pytest
+# their bucketed two-pass plans (the former naive forms of the first
+# two live on as rle_profile_global / id_gaps_global, pytest
 # cross-checks only).  Any future entry here needs a pinned-exact
 # scale twin and a SCALE.md row.
 _GLOBAL_DATA_WINDOW_ALLOWED: set[str] = set()

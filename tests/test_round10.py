@@ -38,10 +38,11 @@ def test_r10_batch_is_registered_with_oracles():
     assert len(qs) == registry.EXPECTED_QUERY_COUNT
     assert len(os_) == registry.EXPECTED_ORACLE_COUNT
     # The r10 driver recorded the whole batch green (CORRECTNESS_r10),
-    # so the names must have left the new-this-round tier and joined
-    # the recorded evidence tier — the derivation is the point.
-    assert R10_BATCH <= registry._RECORDED, sorted(
-        R10_BATCH - registry._RECORDED
+    # so the evidence map read from the committed records must give
+    # every name a green round — the fold-in is automatic.
+    last = registry._last_green_round()
+    assert all(last.get(n, 0) > 0 for n in R10_BATCH), sorted(
+        n for n in R10_BATCH if not last.get(n, 0)
     )
 
 
