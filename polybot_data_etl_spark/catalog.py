@@ -239,9 +239,9 @@ def check_fixture_layouts(sf_dir: str) -> None:
         )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the Spark SQL surface."""
-    for name in TABLES:
+def register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
+    """Register the named tables as temp views for the Spark SQL surface."""
+    for name in names:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 

@@ -17,10 +17,6 @@ driver harness):
 
   SPARK_GRAFT_SF_DIR    fixture directory      (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS      local[] core count     (default: all cores)
-  SPARK_GRAFT_SHUFFLE   shuffle partitions     (default 32)
-  SPARK_GRAFT_APPROX_PERCENTILES   1/true → operators with a sketch
-                        twin (winsorized_means) use approx cutpoints
-                        (default false: exact, the oracle form)
 """
 
 from __future__ import annotations
@@ -38,22 +34,11 @@ SF_DIR_ENV = "SPARK_GRAFT_SF_DIR"
 class EngineConfig:
     sf_dir: str = "/root/testdata/sf0.1"
     cpus: int | None = None          # None → local[*]
-    shuffle_partitions: int = 32
-    # 100 TB switch: operators that publish an approx twin
-    # (operators/aggregates.winsorized_means) take their method from
-    # this knob at the caller boundary; exact stays the default so the
-    # DuckDB differential gate pins true order statistics.
-    approx_percentiles: bool = False
 
     def __post_init__(self) -> None:
         if self.cpus is not None and self.cpus <= 0:
             raise ValueError(
                 f"SPARK_GRAFT_CPUS must be positive, got {self.cpus}"
-            )
-        if self.shuffle_partitions <= 0:
-            raise ValueError(
-                "SPARK_GRAFT_SHUFFLE must be positive, got"
-                f" {self.shuffle_partitions}"
             )
 
     @property
@@ -77,21 +62,9 @@ class EngineConfig:
                     f"{name} must be an integer, got {raw!r}"
                 ) from exc
 
-        def _bool(name: str, default: bool) -> bool:
-            raw = e.get(name, "").strip().lower()
-            if raw == "":
-                return default
-            if raw in ("1", "true", "yes", "on"):
-                return True
-            if raw in ("0", "false", "no", "off"):
-                return False
-            raise ValueError(f"{name} must be a boolean, got {raw!r}")
-
         cfg = EngineConfig(
             sf_dir=e.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
             cpus=_int("SPARK_GRAFT_CPUS", None),
-            shuffle_partitions=_int("SPARK_GRAFT_SHUFFLE", 32),
-            approx_percentiles=_bool("SPARK_GRAFT_APPROX_PERCENTILES", False),
         )
         # Validate the data dir only when SPARK_GRAFT_SF_DIR was set
         # explicitly: the machine-default path need not exist on hosts

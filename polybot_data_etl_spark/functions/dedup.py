@@ -29,6 +29,8 @@ per-row projection (whole-stage codegen, no Python).
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -339,10 +341,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash
 
-def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
-    """(doc_id, b0..b{n-1}): a 16·n_bands-bit SimHash split into
-    n_bands×16-bit band values (default 4 → the 64-bit contract; 8 →
-    the 128-bit width twin, SURVEY r12).
+def simhash_bands(d: DataFrame) -> DataFrame:
+    """(doc_id, b0..b3): the 64-bit SimHash split into 4×16-bit band
+    values.
 
     Bit k (k = 16*band + i) is the sign of Σ_token-occurrences ±1 where
     a token votes +1 iff ``(char_hash(token) * (2k+3)) % p`` is odd — a
@@ -365,7 +366,7 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_bits = n_bands * _SIMHASH_BITS
+    n_bits = _SIMHASH_BANDS * _SIMHASH_BITS
     mult = (2 * np.arange(n_bits, dtype=np.int64) + 3)
     memo: dict = {}
 
@@ -414,7 +415,7 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
             np.add.at(accs, doc_pos, V[codes])
         bits = accs > 0
         out = {"doc_id": pdf["doc_id"].to_numpy()}
-        for b in range(n_bands):
+        for b in range(_SIMHASH_BANDS):
             band = np.zeros(len(pdf), dtype=np.int64)
             for i in range(_SIMHASH_BITS):
                 band += bits[:, _SIMHASH_BITS * b + i].astype(np.int64) << i
@@ -425,7 +426,9 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
         F.col("text").isNotNull()  # NULL text = absent, never a crash
     ).mapInPandas(
         fingerprint,
-        ", ".join(["doc_id long"] + [f"b{b} long" for b in range(n_bands)]),
+        ", ".join(
+            ["doc_id long"] + [f"b{b} long" for b in range(_SIMHASH_BANDS)]
+        ),
     )
 
 
@@ -448,174 +451,81 @@ def _simhash_bands_sql() -> str:
         )"""
 
 
-_SIMHASH_WIDE_BANDS = 8      # 8 x 16 = the 128-bit width twin (r12)
-_WIDE_HAMMING_MAX = 7        # ~ the 64-bit <=3 similarity cut at 2x width
 _SIMHASH_BLOCK_SIZES = (11, 11, 11, 11, 10, 10)   # 6 blocks over 64 bits
 _SIMHASH_BLOCK_AGREE = 3                           # Hamming<=3 corrupts <=3 blocks
+_SIMHASH_BLOCK_STARTS = tuple(
+    sum(_SIMHASH_BLOCK_SIZES[:i]) for i in range(len(_SIMHASH_BLOCK_SIZES))
+)
+# the 20 band keys, in band order: every 3-subset of the 6 blocks
+_SIMHASH_COMBOS = tuple(
+    combinations(range(len(_SIMHASH_BLOCK_SIZES)), _SIMHASH_BLOCK_AGREE)
+)
 
 
-def _simhash_combinatorial_keys(fp64: Column | None = None) -> list:
-    """The C(6,3) = 20 combinatorial band keys over the 64-bit
-    fingerprint.
+def _simhash_blocks(word: Column) -> list:
+    """The 6 blocks (4x11 + 2x10 bits) of a packed 64-bit word."""
+    # unsigned shift: b3 >= 2^15 sets bit 63 and an arithmetic shift
+    # would sign-extend into every high block
+    return [
+        F.shiftrightunsigned(word, start).bitwiseAND(F.lit((1 << size) - 1))
+        for start, size in zip(_SIMHASH_BLOCK_STARTS, _SIMHASH_BLOCK_SIZES)
+    ]
+
+
+def _simhash_combinatorial_keys(fp64: Column) -> list:
+    """The C(6,3) = 20 combinatorial band keys over the packed 64-bit
+    fingerprint ``fp64`` (the ``fp0`` column of :func:`_simhash_pack`).
 
     Split the fingerprint into 6 blocks (4x11 + 2x10 bits); a pair with
     Hamming <= 3 corrupts at most 3 blocks, so it agrees on >= 3 of 6 —
     bucket on every 3-subset of blocks (20 bands, 31-33-bit keys, ~2^32
     band space).  Pigeonhole-complete for <= 3 exactly like 4x16-bit
-    banding, but the band space no longer crowds at ~65k docs.
-
-    ``fp64``: the packed 64-bit fingerprint column.  When None the
-    packing is inlined from the b0..b3 band columns of
-    :func:`simhash_bands` — correct but an ~8x larger expression tree,
-    since Catalyst does not CSE the reassembly across the 20 keys
-    (measured r12: the inlined form's Generate node alone was a
-    multi-hundred-node tree; the registered plan now projects ``fp0``
-    once and passes it here, guide §2.3 "project before the
-    exchange")."""
-    from itertools import combinations
-
-    starts = tuple(
-        sum(_SIMHASH_BLOCK_SIZES[:i]) for i in range(len(_SIMHASH_BLOCK_SIZES))
-    )
-    if fp64 is None:
-        # reassemble the 64-bit fingerprint (bit k lives at position k:
-        # simhash_bands packs bit 16·b + i at bit i of column b{b})
-        fp64 = sum(
-            F.shiftleft(F.col(f"b{b}"), _SIMHASH_BITS * b)
-            for b in range(_SIMHASH_BANDS)
-        )
-    blocks = [
-        # unsigned shift: b3 >= 2^15 sets bit 63 and an arithmetic
-        # shift would sign-extend into every high block
-        F.shiftrightunsigned(fp64, starts[m]).bitwiseAND(
-            F.lit((1 << _SIMHASH_BLOCK_SIZES[m]) - 1)
-        )
-        for m in range(len(_SIMHASH_BLOCK_SIZES))
-    ]
+    banding, but the band space no longer crowds at ~65k docs."""
+    blocks = _simhash_blocks(fp64)
     return [
         (blocks[i] * F.lit(1 << 22)) + (blocks[j] * F.lit(1 << 11)) + blocks[k]
-        for i, j, k in combinations(
-            range(len(_SIMHASH_BLOCK_SIZES)), _SIMHASH_BLOCK_AGREE
-        )
+        for i, j, k in _SIMHASH_COMBOS
     ]
 
 
-def _simhash_pack(n_cols: int) -> list:
-    """Packed-fingerprint projection: the 16-bit band columns b0..b{n-1}
-    of :func:`simhash_bands` packed 4-per-long into fp0[, fp1] — bit
-    16·c + i of the fingerprint lands at bit (16·c + i) mod 64 of word
-    (c // 4).  One long instead of four halves the posting payload and
-    collapses every downstream band/Hamming expression onto a single
-    column (r12 expression-tree fix; see _simhash_combinatorial_keys)."""
-    n_packed = (n_cols + 3) // 4
-    return [
-        sum(
-            F.shiftleft(F.col(f"b{4 * p + i}"), _SIMHASH_BITS * i)
-            for i in range(min(4, n_cols - 4 * p))
-        ).alias(f"fp{p}")
-        for p in range(n_packed)
-    ]
+def _simhash_pack() -> Column:
+    """``fp0``: the 16-bit band columns b0..b3 of :func:`simhash_bands`
+    packed into one long — b{c} holds fingerprint bits 16·c..16·c+15,
+    so fp0 is the 64-bit fingerprint itself.  Projected ONCE before
+    the exchange (guide §2.3): Catalyst does not CSE a reassembly
+    repeated under each of the 20 band keys, and the inlined form was
+    an ~8x larger expression tree (measured r12)."""
+    return sum(
+        F.shiftleft(F.col(f"b{b}"), _SIMHASH_BITS * b)
+        for b in range(_SIMHASH_BANDS)
+    ).alias("fp0")
 
 
-def _simhash_scheme_keys(scheme: str, n_cols: int) -> list:
-    """Band-key expressions over the packed fp0[, fp1] columns, in the
-    scheme's canonical band order.  Values are bit-identical to the
-    historical per-column forms (classic: band m == column b{m}; wide:
-    band m == b{2m} + (b{2m+1} << 16)); only the source columns
-    changed, so posting buckets — and therefore candidate and verified
-    pair sets — are unchanged."""
-    if scheme == "classic":  # band m == 16-bit slice m of fp0
-        return [
-            F.shiftrightunsigned(F.col("fp0"), _SIMHASH_BITS * m).bitwiseAND(
-                F.lit((1 << _SIMHASH_BITS) - 1)
-            )
-            for m in range(_SIMHASH_BANDS)
-        ]
-    if scheme == "wide":  # band m == 32-bit slice m of (fp0, fp1)
-        return [
-            F.shiftrightunsigned(
-                F.col(f"fp{m // 2}"), 32 * (m % 2)
-            ).bitwiseAND(F.lit((1 << 32) - 1))
-            for m in range(n_cols // 2)
-        ]
-    if scheme == "comb":
-        return _simhash_combinatorial_keys(F.col("fp0"))
-    raise ValueError(f"unknown simhash banding scheme {scheme!r}")
-
-
-def _simhash_min_band(xcols: list, scheme: str):
-    """Index of the FIRST band on which two fingerprint records agree
-    (same enumeration order as the scheme's band keys), computed from
-    the pair's PROJECTED xor words x0[, x1] (x{p} = a.fp{p} ^ b.fp{p}).
+def _simhash_min_band(x0: Column) -> Column:
+    """Index of the FIRST combinatorial band on which two fingerprints
+    agree, computed from the pair's xor word x0 = a.fp0 ^ b.fp0.
 
     Multi-band LSH emits every colliding pair once PER agreeing band —
-    an exact duplicate (Hamming 0) agrees on all bands, so the naive
-    chain needs a distinct() over a candidate stream inflated by the
-    band count (20x combinatorial / 4x classic on the dup-heavy part
-    of a corpus — the dominant cost at sf0.1, measured r12).  Keeping
-    a pair only where the CURRENT band equals its minimal agreeing
-    band makes each pair survive exactly once, turning the distinct
-    shuffle into a codegen'd filter.  Band-key equality is block
-    equality (keys are injective packings), so "agrees on band c" is
-    recomputable from the pair's own fingerprints — no extra state.
+    an exact duplicate (Hamming 0) agrees on all 20 bands, so the naive
+    chain needs a distinct() over a candidate stream inflated 20x on
+    the dup-heavy part of a corpus (the dominant cost at sf0.1,
+    measured r12).  Keeping a pair only where the CURRENT band equals
+    its minimal agreeing band makes each pair survive exactly once,
+    turning the distinct shuffle into a codegen'd filter.  Band-key
+    equality is block equality (keys are injective packings), so
+    "agrees on band c" is recomputable from the pair's own xor word.
 
-    Shape matters twice over: a direct 20-way when-chain re-derives
-    the 64-bit xor under every combo term — an expression tree big
-    enough to fall out of whole-stage codegen (measured 6.7 s for
-    674 k rows).  This form reads the xor WORDS (projected once by
-    _simhash_verify_pairs — r12: the previous version re-packed both
-    fingerprints from their b-columns and re-xored under every block
-    term), derives one block-agreement mask, and maps it through a
-    2^n_blocks-entry literal lookup array built driver-side — a
-    handful of shifts and one element_at per row.
-
-    Schemes: ``classic`` (4 bands == 16-bit slices of x0), ``comb``
-    (20 bands == 3-subsets of 6 blocks of x0), ``wide`` (4 bands ==
-    32-bit slices of (x0, x1)).
-    """
-    from itertools import combinations
-
-    if scheme == "classic":  # band m == 16-bit slice m
-        agree = [
-            F.shiftrightunsigned(xcols[0], _SIMHASH_BITS * m).bitwiseAND(
-                F.lit((1 << _SIMHASH_BITS) - 1)
-            )
-            == 0
-            for m in range(_SIMHASH_BANDS)
-        ]
-        combos = [(m,) for m in range(_SIMHASH_BANDS)]
-    elif scheme == "wide":  # band m == 32-bit slice m of (x0, x1)
-        agree = [
-            F.shiftrightunsigned(xcols[m // 2], 32 * (m % 2)).bitwiseAND(
-                F.lit((1 << 32) - 1)
-            )
-            == 0
-            for m in range(_SIMHASH_WIDE_BANDS // 2)
-        ]
-        combos = [(m,) for m in range(_SIMHASH_WIDE_BANDS // 2)]
-    elif scheme == "comb":  # band c == 3-subset c of the 6 blocks
-        starts = tuple(
-            sum(_SIMHASH_BLOCK_SIZES[:i])
-            for i in range(len(_SIMHASH_BLOCK_SIZES))
-        )
-        agree = [
-            F.shiftrightunsigned(xcols[0], starts[m]).bitwiseAND(
-                F.lit((1 << _SIMHASH_BLOCK_SIZES[m]) - 1)
-            )
-            == 0
-            for m in range(len(_SIMHASH_BLOCK_SIZES))
-        ]
-        combos = list(
-            combinations(
-                range(len(_SIMHASH_BLOCK_SIZES)), _SIMHASH_BLOCK_AGREE
-            )
-        )
-    else:
-        raise ValueError(f"unknown simhash banding scheme {scheme!r}")
+    Shape matters: a direct 20-way when-chain re-derives the xor under
+    every combo term — an expression tree big enough to fall out of
+    whole-stage codegen (measured 6.7 s for 674 k rows).  This form
+    derives one block-agreement mask from x0 and maps it through a
+    2^6-entry literal lookup array built driver-side — a handful of
+    shifts and one element_at per row."""
+    agree = [block == 0 for block in _simhash_blocks(x0)]
     n_blocks = len(agree)
 
     def min_band_for_mask(mask: int) -> int:
-        for idx, combo in enumerate(combos):
+        for idx, combo in enumerate(_SIMHASH_COMBOS):
             if all(mask & (1 << m) for m in combo):
                 return idx
         return -1  # no agreeing band: unreachable for a real collision
@@ -627,79 +537,6 @@ def _simhash_min_band(xcols: list, scheme: str):
         agree[m].cast("int") * F.lit(1 << m) for m in range(n_blocks)
     )
     return F.element_at(lookup, mask_col + 1)
-
-
-def _simhash_verify_pairs(
-    fp: DataFrame,
-    scheme: str,
-    n_cols: int = _SIMHASH_BANDS,
-    hamming_max: int = _HAMMING_MAX,
-) -> DataFrame:
-    """Banded-LSH candidate generation + Hamming verify shared by the
-    registered combinatorial plan, the classic 4x16 witness, and the
-    128-bit width twin.
-
-    Candidates come from per-(band, value) posting lists — ONE shuffle
-    keyed by the band value, pairs generated inside each posting row by
-    a double explode (the same pattern as q_dedup_minhash /
-    q_dedup_ngram).  Each posting element carries the doc's full
-    fingerprint, so the Hamming verify reads the exploded pair directly
-    AND the minimal-agreeing-band dedup (:func:`_simhash_min_band`)
-    replaces the final distinct() with a filter: the whole query is ONE
-    linear chain off the Python fingerprint kernel with a single
-    shuffle (the posting groupBy) — no self-join, no join-back to fp,
-    no pair-stream re-shuffle.
-
-    r12 expression-tree fix (guide §2.3/§7.2): the fingerprint is
-    packed 4 band-columns-per-long ONCE (fp0[, fp1] — the posting
-    payload drops from 1+n_cols to 1+⌈n_cols/4⌉ longs), every band key
-    reads the packed word instead of re-assembling it, and the pair
-    stage projects the xor words x{p} = a.fp{p}^b.fp{p} once for both
-    the Hamming sum and the min-band mask.  The previous inlined form
-    repeated the 4-shiftleft packing under each of the 20 Generate
-    keys and 6 more times under the min-band filter — a plan whose
-    codegen/compile alone measurably dominated the query at sf0.1
-    (6.2-7.2 s in-suite vs ~1.2 s warm re-run)."""
-    n_packed = (n_cols + 3) // 4
-    fpk = fp.select("doc_id", *_simhash_pack(n_cols))
-    rec = F.struct(
-        "doc_id", *[F.col(f"fp{p}") for p in range(n_packed)]
-    ).alias("rec")
-    banded = fpk.select(
-        rec,
-        F.posexplode(
-            F.array(*_simhash_scheme_keys(scheme, n_cols))
-        ).alias("band", "value"),
-    )
-    postings = (
-        banded.groupBy("band", "value")
-        .agg(F.collect_list("rec").alias("recs"))
-        .filter(F.size("recs") >= 2)
-    )
-    pairs = (
-        postings.select("band", F.explode("recs").alias("a"), "recs")
-        .select("band", "a", F.explode("recs").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            "band",
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-            *[
-                F.col(f"a.fp{p}").bitwiseXOR(F.col(f"b.fp{p}")).alias(f"x{p}")
-                for p in range(n_packed)
-            ],
-        )
-    )
-    xcols = [F.col(f"x{p}") for p in range(n_packed)]
-    ham = sum(F.bit_count(x) for x in xcols).cast("long")
-    # verify FIRST (bit_count over the projected xor — cheapest), then
-    # keep each surviving pair only at its minimal agreeing band
-    return (
-        pairs.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= hamming_max)
-        .filter(F.col("band") == _simhash_min_band(xcols, scheme))
-        .select("a_id", "b_id", "hamming")
-    )
 
 
 @register(
@@ -729,83 +566,61 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinatorial (Gionis-style) banded-LSH candidate generation,
     Hamming <= 3 verification on candidates.
 
-    Registered plan (round 12, VERDICT r11 #1): C(6,3) = 20 bands over
+    Banding (round 12, VERDICT r11 #1): C(6,3) = 20 bands over
     3-subsets of 6 fingerprint blocks (~2^32 band space) instead of the
     classic 4x16-bit banding (2^16 band space).  Both are
     pigeonhole-complete for Hamming <= 3, so the verified pair set is
-    IDENTICAL (pinned exact-equal vs :func:`simhash_pairs_classic` in
-    tests/test_round11.py) and the DuckDB oracle — which enumerates the
-    classic candidates, a superset-equivalent route to the same <= 3
-    pairs — is unchanged.
+    the same; the DuckDB oracle enumerates the classic candidates and
+    the differential gate checks the two engines agree.  Why: the x100
+    measured point (SCALE.md) showed the classic banding's candidate
+    mass growing x67.6 for x10 docs at 500k docs (2.09G candidate
+    pairs) — chance collisions grow n²/2^16 however sparse real
+    near-dups are once the corpus passes ~65k docs.  The combinatorial
+    form trades 20 posting rows per doc instead of 4 (5x shuffle mass)
+    for a ~2^32 bucket space, good to ~10^9 docs.
 
-    Why the flip: the x100 measured point (SCALE.md) showed the classic
-    banding's candidate mass growing x67.6 for x10 docs at 500k docs
-    (2.09G candidate pairs) — chance collisions grow n²/2^16 no matter
-    how sparse real near-dups are once the corpus passes ~65k docs.
-    The combinatorial form trades 20 posting rows per doc instead of 4
-    (5x shuffle mass) for a 2^16 → ~2^32 bucket space — the right side
-    of that trade everywhere past ~10^5 docs, and band space good to
-    ~10^9 docs."""
-    fp = simhash_bands(table(spark, sf_dir, "documents"))
-    return _simhash_verify_pairs(fp, "comb")
-
-
-def simhash_pairs_classic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The classic 4x16-bit-banding SimHash plan — q_dedup_simhash's
-    registered form through round 11, demoted to a pytest witness when
-    the combinatorial banding took over (VERDICT r11 #1).
-
-    Two docs collide iff >= 1 of the 4 16-bit bands is equal —
-    pigeonhole-complete for Hamming <= 3 like the registered
-    combinatorial form, so the verified pair set is EQUAL (the pin in
-    tests/test_round11.py).  Kept because it is the natural small-corpus
-    plan (4 posting rows per doc instead of 20) and because the
-    equality pin is the registered plan's exactness proof."""
-    fp = simhash_bands(table(spark, sf_dir, "documents"))
-    return _simhash_verify_pairs(fp, "classic")
-
-
-def simhash_pairs_wide(
-    spark: SparkSession, sf_dir: str, hamming_max: int = _WIDE_HAMMING_MAX
-) -> DataFrame:
-    """The 128-bit WIDTH twin (test-only, VERDICT r11 #5): the same
-    Charikar vote formula extended to bits 0..127 (8x16-bit columns),
-    banded 4x32 (band m == the injective packing of columns 2m, 2m+1),
-    Hamming <= 7 verify — ~the 64-bit <=3 similarity cut at twice the
-    width (3.5/64 per-bit error rate).
-
-    What the width buys — MEASURED (r12, sf0.001): the twin is a
-    PRECISION knob, not a recall knob.  Of the 448 pairs the 64-bit
-    <=3 contract emits, 356 (~80%) have second-half Hamming >= 8 —
-    their true per-bit disagreement rate is moderate (~0.1) and the
-    64-bit <=3 hit was a Binomial lucky draw (P(Binom(64, .1) <= 3) is
-    small but the fixture has many moderately-similar pairs to draw
-    from); two pairs even have IDENTICAL first 64 bits while differing
-    on >= 8 of the second 64.  Doubling the width halves the per-bit
-    variance, so the <=7/128 cut (the same nominal rate as 3.5/64)
-    rejects those artifacts while keeping every truly-near pair:
-    text-identical dups have Hamming 0/128, collide on all four bands,
-    and are pinned always-emitted (tests/test_round12.py).  Candidate
-    mass also sharpens: a 32-bit band agreement implies far deeper
-    agreement than a 16-bit one, so the correlated near-miss candidate
-    mass (Hamming 4-6/64 content overlap — 188 k of the 243 k sf0.1
-    candidates under any complete 64-bit banding) drops (pinned).
-
-    Because the emitted SET genuinely differs from the 64-bit contract
-    (deliberately — the rejected 80% are the false-positive tail),
-    this is a NEW semantic: a survey row of its own if ever
-    registered, never a flip of q_dedup_simhash.  Recall caveat at the
-    margin: 4x32 banding is pigeonhole-complete only for <= 3 of 128,
-    so pairs at 4..7/128 with errors spread across all four bands can
-    be missed (28 of 448 measured at sf0.001)."""
-    fp = simhash_bands(
-        table(spark, sf_dir, "documents"), _SIMHASH_WIDE_BANDS
+    Shape: candidates come from per-(band, value) posting lists — ONE
+    shuffle keyed by the band value, pairs generated inside each
+    posting row by a double explode (the q_dedup_minhash /
+    q_dedup_ngram pattern).  Each posting element carries the doc's
+    packed fingerprint, so the Hamming verify reads the exploded pair
+    directly and the minimal-agreeing-band filter
+    (:func:`_simhash_min_band`) replaces a final distinct(): one linear
+    chain off the fingerprint kernel — no self-join, no join-back to
+    fp, no pair-stream re-shuffle.  The pair stage projects the xor
+    word x0 once for both the Hamming count and the min-band mask."""
+    fp = simhash_bands(table(spark, sf_dir, "documents")).select(
+        "doc_id", _simhash_pack()
     )
-    return _simhash_verify_pairs(
-        fp,
-        "wide",
-        n_cols=_SIMHASH_WIDE_BANDS,
-        hamming_max=hamming_max,
+    banded = fp.select(
+        F.struct("doc_id", "fp0").alias("rec"),
+        F.posexplode(
+            F.array(*_simhash_combinatorial_keys(F.col("fp0")))
+        ).alias("band", "value"),
+    )
+    postings = (
+        banded.groupBy("band", "value")
+        .agg(F.collect_list("rec").alias("recs"))
+        .filter(F.size("recs") >= 2)
+    )
+    pairs = (
+        postings.select("band", F.explode("recs").alias("a"), "recs")
+        .select("band", "a", F.explode("recs").alias("b"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            "band",
+            F.col("a.doc_id").alias("a_id"),
+            F.col("b.doc_id").alias("b_id"),
+            F.col("a.fp0").bitwiseXOR(F.col("b.fp0")).alias("x0"),
+        )
+    )
+    # verify FIRST (bit_count over the projected xor — cheapest), then
+    # keep each surviving pair only at its minimal agreeing band
+    return (
+        pairs.withColumn("hamming", F.bit_count("x0").cast("long"))
+        .filter(F.col("hamming") <= _HAMMING_MAX)
+        .filter(F.col("band") == _simhash_min_band(F.col("x0")))
+        .select("a_id", "b_id", "hamming")
     )
 
 
@@ -1152,7 +967,6 @@ def q_dedup_embed_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dedup cluster assignment (connected components over near-dup pairs)
 
-_CC_MAX_ITERS = 20
 # Edge-count ceiling for the driver-local union-find fast path; above
 # it the distributed min-label supersteps run.  100k 16-byte pairs is a
 # ~2 MB driver pull — far under any broadcast threshold.
@@ -1191,10 +1005,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     conduct, not a collect of data.  Lineage is truncated per step with
     localCheckpoint so plan depth stays O(1).  Near-dup clusters are
     dense (band collisions link most members pairwise), so convergence
-    takes ~2-3 supersteps; a worst-case long-path graph would switch to
-    the alternating large-star/small-star formulation (O(log n)
-    supersteps, same join shapes).  Oracle: DuckDB recursive CTE over
-    the identical pair graph.
+    takes ~2-3 supersteps; a long-path graph costs O(diameter)
+    supersteps and still runs to its fixpoint.  Oracle: DuckDB
+    recursive CTE over the identical pair graph.
     """
     d = table(spark, sf_dir, "documents")
     nodes = d.select(F.col("doc_id").alias("node"))
@@ -1208,9 +1021,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Min-label connected components over an undirected pair graph.
 
     ``nodes``: one column ``node`` (every vertex, including isolated
@@ -1222,25 +1033,46 @@ def connected_components(
     that appear in an edge.  Isolated nodes (the overwhelming majority
     of a corpus under near-dup thresholds) never enter the iteration;
     they are labeled by a single left join at the end."""
-    labels = component_labels(pairs, max_iters=max_iters)
+    labels = component_labels(pairs)
     return nodes.join(labels, "node", "left").select(
         "node", F.coalesce("lbl", "node").alias("lbl")
     )
 
 
+def union_find_labels(pdf):
+    """(node, lbl = component min) for every endpoint of the ``a_id``/
+    ``b_id`` edges in the pandas frame ``pdf``, nodes ascending — the
+    in-memory union-find behind component_labels' driver-local path and
+    q_pipeline_entities' per-block applyInPandas.  Endpoints are read
+    by column NAME, never position.  Union by MIN root, so a node's
+    final root IS its label."""
+    import pandas as pd
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]   # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(pdf["a_id"], pdf["b_id"]):
+        a, b = int(a), int(b)
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = sorted(parent)
+    return pd.DataFrame(
+        {"node": nodes, "lbl": [find(n) for n in nodes]}, dtype="int64"
+    )
+
+
 def component_labels(
-    pairs: DataFrame,
-    max_iters: int = _CC_MAX_ITERS,
-    algorithm: str = "propagation",
-    local_threshold: int = _CC_LOCAL_EDGES,
+    pairs: DataFrame, local_threshold: int = _CC_LOCAL_EDGES
 ) -> DataFrame:
     """Min-label propagation restricted to edge-endpoint nodes.
-
-    ``algorithm="star"`` switches to the alternating large-star/
-    small-star formulation (component_labels_star) — O(log n)-ish
-    supersteps on ANY graph shape vs propagation's O(diameter).
-    Near-dup graphs are dense (2-3 supersteps), so propagation is the
-    default; the star fallback is for pathological long-path graphs.
 
     Returns (node, lbl) for every node with degree ≥ 1 only.  Each
     superstep shuffles O(|E|) rows — the dup-pair graph, not the corpus
@@ -1248,15 +1080,17 @@ def component_labels(
     table size (at 100 TB the pair graph is orders of magnitude smaller
     than the document set).
 
+    Supersteps run to the fixpoint, so a deep graph costs
+    O(diameter) supersteps (each advances labels two hops).  The loop
+    always terminates: the label sum is a non-increasing integer, and
+    an unchanged sum means no label changed.  Near-dup graphs are
+    dense (2-3 supersteps).
+
     Execution contract: EAGER.  The pair frame is materialized at call
     time (localCheckpoint + size probe) to pick the local-vs-superstep
     path; below ``local_threshold`` edges the returned frame is a
     driver-materialized createDataFrame.  Callers must pass exactly the
     two edge-endpoint columns (``a_id``, ``b_id``); extras raise."""
-    if algorithm == "star":
-        return component_labels_star(pairs, max_iters=max_iters)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown CC algorithm: {algorithm!r}")
     # Size-adaptive local fast path: near-dup pair graphs are orders of
     # magnitude smaller than the corpus, and below _CC_LOCAL_EDGES the
     # distributed supersteps pay 4-6 jobs of fixed overhead to shuffle
@@ -1279,28 +1113,9 @@ def component_labels(
     pairs = pairs.select("a_id", "b_id").localCheckpoint(eager=False)
     pdf = pairs.limit(local_threshold + 1).toPandas()
     if len(pdf) <= local_threshold:
-        # name-addressed, not positional — a reordered projection must
-        # not silently swap edge endpoints (ADVICE r4)
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(pdf["a_id"], pdf["b_id"]):
-            a, b = int(a), int(b)
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        rows = [(n, find(n)) for n in parent]
-        spark = pairs.sparkSession
-        if not rows:
-            return spark.createDataFrame([], "node long, lbl long")
-        return spark.createDataFrame(rows, "node long, lbl long")
+        lab = union_find_labels(pdf)
+        rows = list(zip(lab["node"].tolist(), lab["lbl"].tolist()))
+        return pairs.sparkSession.createDataFrame(rows, "node long, lbl long")
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
@@ -1331,7 +1146,7 @@ def component_labels(
         )
 
     prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(max_iters):
+    while True:
         # TWO hops per checkpointed superstep: the checkpoint + scalar
         # convergence collect dominate wall time at toy scale (fixed job
         # overhead ≫ the O(|E|) shuffle), so batching two propagations
@@ -1342,104 +1157,8 @@ def component_labels(
         labels = one_hop(one_hop(labels)).localCheckpoint(eager=True)
         new_sum = labels.agg(F.sum("lbl")).collect()[0][0]
         if new_sum == prev_sum:
-            break
+            return labels
         prev_sum = new_sum
-    return labels
-
-
-def component_labels_star(
-    pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (the
-    MapReduce CC construction of Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC 2014) — the documented fallback for
-    pathological long-path graphs where min-label propagation needs
-    O(diameter) supersteps.
-
-    Each round rewrites the undirected edge set with two neighborhood-
-    min operations (each one groupBy + join over O(|E|) rows):
-      * large-star(u): every neighbor v > u re-attaches to
-        m = min(Γ(u) ∪ {u});
-      * small-star(u): every neighbor v ≤ u (and u itself) attaches
-        to m.
-    The edge set converges to a star forest rooted at each component's
-    min node in O(log² n) rounds (O(log n) observed); labels are then
-    read straight off the star edges.  Returns (node, lbl) for
-    degree-≥1 nodes only, exactly like component_labels."""
-    # canonical undirected orientation (u < v); self-pairs drop out
-    e = (
-        pairs.select(
-            F.least("a_id", "b_id").alias("u"),
-            F.greatest("a_id", "b_id").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sym(edges: DataFrame) -> DataFrame:
-        return edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    def _canon(emitted: DataFrame) -> DataFrame:
-        return (
-            emitted.select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _checksum(edges: DataFrame):
-        row = edges.agg(
-            F.count("*").alias("n"),
-            # xor-fold, not sum: ANSI mode makes a long sum of 2^63-range
-            # hashes an overflow error
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = _checksum(e)
-    for _ in range(max_iters):
-        # large-star: neighbors v > u hook onto u's neighborhood min
-        sym = _sym(e)
-        nmin = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = _canon(
-            sym.filter(F.col("v") > F.col("u"))
-            .join(nmin, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        # small-star: neighbors v ≤ u (plus u) hook onto the min
-        sym = _sym(large)
-        nmin = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        small = _canon(
-            sym.filter(F.col("v") < F.col("u"))
-            .join(nmin, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                nmin.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        ).localCheckpoint(eager=True)
-        cur = _checksum(small)
-        e = small
-        if cur == prev:
-            break
-        prev = cur
-    # fixpoint = star forest with canonical edges (root, v): the u side
-    # is the component min.  Roots label themselves.
-    return (
-        e.select(F.col("v").alias("node"), F.col("u").alias("lbl"))
-        .unionByName(
-            e.select(F.col("u").alias("node"), F.col("u").alias("lbl"))
-        )
-        .groupBy("node")
-        .agg(F.min("lbl").alias("lbl"))
-    )
 
 
 @register(

@@ -416,8 +416,7 @@ def q_dq_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two passes like every parametric audit: a 5-row stats aggregate
     broadcast back, then one conditional count.  The robust variant
     (median/MAD cutoffs) is the same plan with percentile cutpoints —
-    see q_agg_winsorized for that shape and its approx_percentile
-    scale path.
+    see q_agg_winsorized for that shape.
     """
     e = table(spark, sf_dir, "events")
     stats = e.groupBy("event_type").agg(

@@ -638,47 +638,19 @@ def q_agg_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     [p05, p95] band — the robust location estimate reporting pipelines
     use so a single fat-finger order can't move a revenue KPI.
 
-    This registered form uses EXACT percentile cutpoints (the oracle
-    form — DuckDB quantile_cont parity).  The 100 TB path is
-    ``winsorized_means(..., method="approx")``: t-digest cutpoints via
-    approx_percentile, whose aggregation state is partial-merged
-    map-side (a bounded digest per group, not every value through the
-    shuffle) — measured 2.4× faster at sf0.1 and the only shape that
-    survives a fat group at scale.  Selected via
-    ``EngineConfig.approx_percentiles`` at the caller boundary; exact
-    stays the default so the differential gate pins true quantiles.
-    Cutpoint parity between the two methods is band-tested in
-    tests/test_aggregates.py; the approx plan shape is pinned in
-    tests/test_plans.py.
-    """
-    return winsorized_means(spark, sf_dir, method="exact")
-
-
-def winsorized_means(
-    spark: SparkSession, sf_dir: str, method: str = "exact"
-) -> DataFrame:
-    """Winsorized-mean builder with a selectable cutpoint estimator.
-
-    ``method="exact"``: F.percentile (every value shuffles into per-
-    group sort buffers — exact order statistics, fine up to ~10⁸ rows
-    per group).  ``method="approx"``: F.approx_percentile with accuracy
-    10 000 (Greenwald-Khanna sketch, O(accuracy) state per group,
-    map-side combined — the shape that scales to arbitrarily fat
-    groups).  Two passes either way (cutpoints are needed before the
-    clamp); the 3-row cutpoint frame broadcasts back onto the fact
-    table and the clamped avg is a codegen projection.
+    EXACT percentile cutpoints (DuckDB quantile_cont parity):
+    F.percentile ships every value into per-group sort buffers — exact
+    order statistics, fine up to ~10⁸ rows per group.  Two passes
+    (cutpoints are needed before the clamp); the 3-row cutpoint frame
+    broadcasts back onto the fact table and the clamped avg is a
+    codegen projection.
     """
     li = table(spark, sf_dir, "lineitem")
     # both cutpoints from ONE percentile buffer per group (the
     # q_agg_percentile lesson: an array of percentages sorts once)
     pcts = F.array(F.lit(0.05), F.lit(0.95))
-    if method == "exact":
-        ps = F.percentile("l_extendedprice", pcts)
-    elif method == "approx":
-        ps = F.approx_percentile("l_extendedprice", pcts, F.lit(10000))
-    else:
-        raise ValueError(f"unknown winsorize method: {method!r}")
-    cuts = li.groupBy("l_linestatus").agg(ps.alias("ps")).select(
+    ps = F.percentile("l_extendedprice", pcts).alias("ps")
+    cuts = li.groupBy("l_linestatus").agg(ps).select(
         "l_linestatus",
         F.col("ps")[0].alias("p05"),
         F.col("ps")[1].alias("p95"),

@@ -927,9 +927,10 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel (collect_set per order → in-array pair generation, zero
     join shuffles, fan-out bounded by basket size — the r6
     link_predict recipe) and feeds the ≥2-weight survivors to the
-    engine's superstep CC kernel (functions/dedup.component_labels:
-    min-label propagation, O(|E|) shuffle per superstep, local fast
-    path under the edge threshold).  The oracle replays it as a
+    engine's CC kernel (functions/dedup.component_labels: driver-local
+    union-find under the edge threshold, else min-label propagation
+    with an O(|E|) shuffle per superstep, run to the fixpoint in
+    O(diameter) supersteps).  The oracle replays it as a
     recursive CTE whose tuple space is pruned to (node, smaller-
     reachable-label) — the min label still reaches every node because
     every path from the component minimum is monotonically

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from polybot_data_etl_spark.catalog import table
+from polybot_data_etl_spark.catalog import register_views, table
 from polybot_data_etl_spark.registry import register
 
 # Closed event-type domain (FIXTURES.md §events, verified on fixtures).
@@ -99,11 +99,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
-    for name in names:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 @register(
     "q_subquery_scalar",
     oracle="""
@@ -120,7 +115,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     average.  Catalyst decorrelates this into an aggregate + equi-join
     (RewriteCorrelatedScalarSubquery) — no per-row re-execution, which
     is the difference between O(n) and O(n²) at scale."""
-    _register_views(spark, sf_dir, ["part"])
+    register_views(spark, sf_dir, ["part"])
     return spark.sql(
         """
         SELECT p_partkey, p_brand,
@@ -152,7 +147,7 @@ def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst to left-semi / null-aware left-anti joins.  (The fixture
     keys are non-null, so NOT IN's three-valued-logic trap does not
     change the result; both engines agree.)"""
-    _register_views(spark, sf_dir, ["customer", "orders"])
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(
         """
         SELECT c_custkey, c_mktsegment
@@ -188,7 +183,7 @@ def q_sql_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory: the same string runs on Spark and (as the oracle) on
     DuckDB.  Catalyst broadcast-joins the three dimension tables and
     shuffles only the two fact tables."""
-    _register_views(
+    register_views(
         spark, sf_dir, ["customer", "orders", "lineitem", "nation", "region"]
     )
     return spark.sql(_Q5_SQL)
@@ -531,7 +526,7 @@ def q_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hand-rolled superstep loop in connected components, but
     planner-managed.
     """
-    _register_views(spark, sf_dir, ["customer"])
+    register_views(spark, sf_dir, ["customer"])
     return spark.sql(_RECURSIVE_SQL)
 
 
@@ -562,7 +557,7 @@ def q_sql_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     a registered query precisely because users write this form and an
     engine that executed it row-at-a-time would be unusable at scale.
     """
-    _register_views(spark, sf_dir, ["customer", "orders"])
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(_LATERAL_SQL)
 
 

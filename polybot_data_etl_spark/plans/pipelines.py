@@ -318,41 +318,6 @@ def q_pipeline_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_CARD_SPARK_SQL)
 
 
-def _block_union_find(pdf):
-    """Per-block union-find: one blocking key's match edges →
-    (node, entity_id = component min). Runs entirely in memory — valid
-    because the blocking key BOUNDS the component (no edge crosses
-    blocks by construction)."""
-    import pandas as pd
-
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:        # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in zip(pdf["a_id"], pdf["b_id"]):
-        a, b = int(a), int(b)
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by MIN root so the final root IS the entity id
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    nodes = sorted(parent)
-    return pd.DataFrame(
-        {"node": nodes, "lbl": [find(n) for n in nodes]}
-    )
-
-
-
 @register(
     "q_pipeline_entities",
     oracle="""
@@ -402,8 +367,10 @@ def q_pipeline_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     name-chain graphs are DEEP, unlike the dense near-dup clusters
     q_dedup_clusters handles) — blocks are memory-bounded by
     construction (that is what a blocking key is for); an unblocked
-    graph falls back to functions/dedup.component_labels. The oracle
-    replays the identical graph through a recursive CTE."""
+    graph falls back to functions/dedup.component_labels, whose
+    driver-local path runs the same union_find_labels kernel. The
+    oracle replays the identical graph through a recursive CTE."""
+    from polybot_data_etl_spark.functions.dedup import union_find_labels
     from polybot_data_etl_spark.operators.joins import fuzzy_pairs
 
     pairs = fuzzy_pairs(spark, sf_dir).select(
@@ -412,7 +379,7 @@ def q_pipeline_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ck_b").alias("b_id"),
     )
     labels = pairs.groupBy("nationkey").applyInPandas(
-        lambda pdf: _block_union_find(pdf), "node long, lbl long"
+        union_find_labels, "node long, lbl long"
     )
     return (
         labels.groupBy(F.col("lbl").alias("entity_id"))

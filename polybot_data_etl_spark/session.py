@@ -66,12 +66,8 @@ def build_session(
         # 32 cores; lowering the floor to 128 KB → 32-task scans, −25%
         # on a 20-query light-tail sum, best-of-3).  128 KB keeps the
         # small-file packing charge meaningful while letting the
-        # scale-adaptive term own split sizing.  Env-overridable for
-        # cluster postures that want the classic HDFS charge back.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(128 * 1024)),
-        )
+        # scale-adaptive term own split sizing.
+        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         # Plan-construction overhead (r13, guide §4 driver boundary):
         # PySpark 4 wraps every DataFrame/Column API call in a
         # call-site-capture decorator that costs ~4 extra Py4J

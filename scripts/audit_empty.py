@@ -41,6 +41,9 @@ def make_fixtures(spark, src: str, out: str, n_rows: int) -> None:
 
 
 def run_audit(spark, fixture_dir: str, label: str) -> dict[str, str]:
+    """Run every registered query over ``fixture_dir`` to a noop sink;
+    print and return {query: error}.  Shared by audit_nulls.py and
+    audit_nan.py."""
     from polybot_data_etl_spark import registry
     from polybot_data_etl_spark.functions.dedup import clear_pair_cache
 

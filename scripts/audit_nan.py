@@ -32,24 +32,20 @@ from pyspark.sql import types as T
 
 from polybot_data_etl_spark.catalog import TABLES
 from polybot_data_etl_spark.session import build_session
-
-_KEEP = {"doc_id", "vec_id", "event_id"}
-
-
-def _is_key(col: str) -> bool:
-    return col in _KEEP or col.endswith("key")
+from scripts.audit_empty import run_audit
+from scripts.audit_nulls import is_key
 
 
 def make_nan_fixtures(spark, src: str, out: str) -> None:
     for t in TABLES:
         df = spark.read.parquet(f"{src}/{t}.parquet")
-        key = next((c for c in df.columns if _is_key(c)), df.columns[0])
+        key = next((c for c in df.columns if is_key(c)), df.columns[0])
         salted = F.pmod(F.hash(F.col(key)), F.lit(10)) == 0
         cols = []
         for f in df.schema.fields:
             if isinstance(
                 f.dataType, (T.DoubleType, T.FloatType)
-            ) and not _is_key(f.name):
+            ) and not is_key(f.name):
                 cols.append(
                     F.when(salted, F.lit(float("nan")).cast(f.dataType))
                     .otherwise(F.col(f.name))
@@ -62,27 +58,6 @@ def make_nan_fixtures(spark, src: str, out: str) -> None:
         )
 
 
-def run_audit(spark, fixture_dir: str) -> dict[str, str]:
-    from polybot_data_etl_spark import registry
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
-
-    clear_pair_cache()
-    ok, errs = 0, {}
-    for name, fn in registry.queries().items():
-        try:
-            fn(spark, fixture_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            ok += 1
-        except Exception as exc:  # noqa: BLE001 — audit, report all
-            errs[name] = f"{type(exc).__name__}: {str(exc)[:160]}"
-    clear_pair_cache()
-    print(f"[nan] OK {ok} / {ok + len(errs)}")
-    for k, v in sorted(errs.items()):
-        print(" [nan] ERR", k, v)
-    return errs
-
-
 def main() -> int:
     spark = build_session(
         app_name="nan-audit",
@@ -93,7 +68,7 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="nan_")
     try:
         make_nan_fixtures(spark, "/root/testdata/sf0.001", work)
-        errs = run_audit(spark, work)
+        errs = run_audit(spark, work, "nan")
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return 1 if errs else 0

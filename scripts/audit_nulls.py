@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import TABLES
 from polybot_data_etl_spark.session import build_session
+from scripts.audit_empty import run_audit
 
 # columns that stay non-NULL: join/group keys and identity columns —
 # nulling those audits a different invariant (and the fixtures declare
@@ -39,7 +40,7 @@ _KEEP = {
 }
 
 
-def _is_key(col: str) -> bool:
+def is_key(col: str) -> bool:
     return col in _KEEP or col.endswith("key")
 
 
@@ -47,12 +48,12 @@ def make_nulled_fixtures(spark, src: str, out: str) -> None:
     for t in TABLES:
         df = spark.read.parquet(f"{src}/{t}.parquet")
         key = next(
-            (c for c in df.columns if _is_key(c)), df.columns[0]
+            (c for c in df.columns if is_key(c)), df.columns[0]
         )
         salted = F.pmod(F.hash(F.col(key)), F.lit(10)) == 0
         cols = []
         for field in df.schema.fields:
-            if _is_key(field.name):
+            if is_key(field.name):
                 cols.append(F.col(field.name))
             else:
                 cols.append(
@@ -65,27 +66,6 @@ def make_nulled_fixtures(spark, src: str, out: str) -> None:
         )
 
 
-def run_audit(spark, fixture_dir: str) -> dict[str, str]:
-    from polybot_data_etl_spark import registry
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
-
-    clear_pair_cache()
-    ok, errs = 0, {}
-    for name, fn in registry.queries().items():
-        try:
-            fn(spark, fixture_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            ok += 1
-        except Exception as exc:  # noqa: BLE001 — audit, report all
-            errs[name] = f"{type(exc).__name__}: {str(exc)[:160]}"
-    clear_pair_cache()
-    print(f"[nulls] OK {ok} / {ok + len(errs)}")
-    for k, v in sorted(errs.items()):
-        print(" [nulls] ERR", k, v)
-    return errs
-
-
 def main() -> int:
     spark = build_session(
         app_name="null-audit",
@@ -96,7 +76,7 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="nulls_")
     try:
         make_nulled_fixtures(spark, "/root/testdata/sf0.001", work)
-        errs = run_audit(spark, work)
+        errs = run_audit(spark, work, "nulls")
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return 1 if errs else 0

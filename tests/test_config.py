@@ -16,7 +16,6 @@ def test_defaults_and_master():
     c = EngineConfig.from_env({})
     assert c.sf_dir == "/root/testdata/sf0.1"
     assert c.master == "local[*]"
-    assert c.shuffle_partitions == 32
     assert EngineConfig.from_env({"SPARK_GRAFT_CPUS": "8"}).master == "local[8]"
 
 
@@ -25,8 +24,6 @@ def test_invalid_values_name_the_variable():
         EngineConfig.from_env({"SPARK_GRAFT_CPUS": "eight"})
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         EngineConfig.from_env({"SPARK_GRAFT_CPUS": "-4"})
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
-        EngineConfig.from_env({"SPARK_GRAFT_SHUFFLE": "0"})
     with pytest.raises(ValueError, match="SPARK_GRAFT_SF_DIR"):
         EngineConfig.from_env({"SPARK_GRAFT_SF_DIR": "/no/such/dir"})
 

@@ -142,56 +142,3 @@ def test_pr_curve_emits_full_threshold_grid(spark, sf_dir):
     grid side is a LEFT join — ADVICE r4); thresholds are exact."""
     got = registry.queries()["q_ml_pr_curve"](spark, sf_dir).toPandas()
     assert sorted(got["threshold"]) == [i / 10 for i in range(10)]
-
-
-def test_winsorized_approx_matches_exact_within_band(spark, sf_dir):
-    """method="approx" (the 100 TB sketch path) must agree with the
-    exact oracle form within the sketch contract: the GK estimator
-    returns an actual data value where quantile_cont interpolates
-    between adjacent order statistics, so the cutpoints (and hence the
-    clamped mean) may differ by up to one inter-value gap — a relative
-    band, not exactness."""
-    from polybot_data_etl_spark.operators.aggregates import winsorized_means
-
-    exact = {
-        r["l_linestatus"]: r
-        for r in winsorized_means(spark, sf_dir, method="exact").collect()
-    }
-    approx = {
-        r["l_linestatus"]: r
-        for r in winsorized_means(spark, sf_dir, method="approx").collect()
-    }
-    assert exact.keys() == approx.keys()
-    for k in exact:
-        assert exact[k]["mean_raw"] == approx[k]["mean_raw"]
-        assert (
-            abs(exact[k]["mean_winsorized"] - approx[k]["mean_winsorized"])
-            <= 0.001 * exact[k]["mean_winsorized"]
-        )
-        assert abs(exact[k]["p05"] - approx[k]["p05"]) <= 0.02 * exact[k]["p05"]
-        assert abs(exact[k]["p95"] - approx[k]["p95"]) <= 0.02 * exact[k]["p95"]
-
-
-def test_winsorized_unknown_method_raises(spark, sf_dir):
-    from polybot_data_etl_spark.operators.aggregates import winsorized_means
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="winsorize method"):
-        winsorized_means(spark, sf_dir, method="nope")
-
-
-def test_config_approx_percentiles_knob():
-    from polybot_data_etl_spark.config import EngineConfig
-
-    assert EngineConfig.from_env({}).approx_percentiles is False
-    assert (
-        EngineConfig.from_env(
-            {"SPARK_GRAFT_APPROX_PERCENTILES": "1"}
-        ).approx_percentiles
-        is True
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="SPARK_GRAFT_APPROX_PERCENTILES"):
-        EngineConfig.from_env({"SPARK_GRAFT_APPROX_PERCENTILES": "maybe"})

@@ -216,38 +216,21 @@ def test_component_labels_match_union_find(spark, edges):
         assert got == want, kw
 
 
-@settings(max_examples=8, deadline=None)
-@given(_EDGES)
-def test_component_labels_star_match_union_find(spark, edges):
-    """The large-star/small-star fallback (VERDICT r3 #9) must agree
-    with driver-side union-find on every node's component label —
-    including the long-chain graphs it exists for."""
+def test_component_labels_deep_chain_reaches_fixpoint(spark):
+    """A 100-edge path — diameter 100, the O(diameter) worst case for
+    min-label propagation — forced onto the distributed supersteps
+    must still label every node with the chain minimum: the superstep
+    loop runs to its fixpoint."""
     from polybot_data_etl_spark.functions.dedup import component_labels
 
     pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges], "a_id long, b_id long"
+        [(i, i + 1) for i in range(100)], "a_id long, b_id long"
     )
     got = {
         r["node"]: r["lbl"]
-        for r in component_labels(pairs, algorithm="star").collect()
+        for r in component_labels(pairs, local_threshold=0).collect()
     }
-    assert got == _union_find(edges)
-
-
-def test_component_labels_star_long_chain(spark):
-    """A 40-node path — the O(diameter) worst case for propagation —
-    must converge for the star formulation well inside the iteration
-    cap (O(log n) rounds)."""
-    from polybot_data_etl_spark.functions.dedup import component_labels_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "a_id long, b_id long"
-    )
-    got = {
-        r["node"]: r["lbl"]
-        for r in component_labels_star(pairs, max_iters=10).collect()
-    }
-    assert got == {i: 0 for i in range(41)}
+    assert got == {i: 0 for i in range(101)}
 
 
 # --- hypothesis: forward as-of vs brute force --------------------------
@@ -322,7 +305,7 @@ def test_cms_estimate_one_sided(spark, sf_dir):
         assert est <= n_total
 
 
-# --- hypothesis: per-block union-find vs BFS reference -----------------
+# --- hypothesis: shared union-find kernel vs BFS reference -------------
 
 @settings(max_examples=200, deadline=None)
 @given(
@@ -333,19 +316,20 @@ def test_cms_estimate_one_sided(spark, sf_dir):
     )
 )
 def test_block_union_find_matches_bfs(edges):
-    """q_pipeline_entities' in-memory kernel must label every
-    edge-endpoint node with its component minimum — checked against a
-    plain BFS on arbitrary small graphs (self-loops included)."""
+    """The shared union-find kernel (q_pipeline_entities' per-block
+    applyInPandas and component_labels' driver-local path) must label
+    every edge-endpoint node with its component minimum — checked
+    against a plain BFS on arbitrary small graphs (self-loops and the
+    empty edge list included)."""
     import pandas as pd
 
-    from polybot_data_etl_spark.plans.pipelines import _block_union_find
+    from polybot_data_etl_spark.functions.dedup import union_find_labels
 
     pdf = pd.DataFrame(
         {"a_id": [a for a, _ in edges], "b_id": [b for _, b in edges]}
     )
-    got = dict(
-        zip(*(lambda f: (f["node"], f["lbl"]))(_block_union_find(pdf)))
-    ) if len(edges) else {}
+    f = union_find_labels(pdf)
+    got = dict(zip(f["node"], f["lbl"]))
 
     adj: dict[int, set[int]] = {}
     for a, b in edges:

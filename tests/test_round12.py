@@ -128,6 +128,7 @@ def test_simhash_registered_plan_is_combinatorial(spark, sf_dir):
     # shifted block arithmetic
     assert "shiftrightunsigned" in plan
     assert plan.count("shiftleft") >= 3  # fp64 reassembly present
+    assert df.take(1), "fixture must contain at least one simhash near-dup pair"
 
 
 def test_hubness_range_guard_trips_before_int64_wrap(spark, tmp_path):
@@ -159,190 +160,54 @@ def test_hubness_range_guard_trips_before_int64_wrap(spark, tmp_path):
             q_embed_hubness(spark, str(d)).collect()
 
 
-def test_simhash_wide_twin_exactness_on_controlled_corpus(spark, tmp_path):
-    """VERDICT r11 #5, exactness half: on a controlled corpus (base
-    docs + exact copies + 1-word-changed copies + every-3rd-word-
-    changed copies) the wide twin's emitted set must EQUAL the
-    brute-force prediction from its own fingerprints — {pairs with
-    Hamming ≤ 7/128 that agree on ≥ 1 of the 4 32-bit bands} — with
-    exact copies present at Hamming 0.  This is the pair-layer oracle
-    the width twin can't get from DuckDB (test-only semantic)."""
-    import itertools
-
-    from polybot_data_etl_spark.catalog import table
-    from polybot_data_etl_spark.functions.dedup import (
-        _SIMHASH_WIDE_BANDS,
-        _WIDE_HAMMING_MAX,
-        simhash_bands,
-        simhash_pairs_wide,
-    )
-
-    rng = np.random.default_rng(12)
-    vocab = [f"w{v}" for v in range(500)]
-    texts, kinds = [], []
-    for b in range(60):
-        toks = list(rng.choice(vocab, size=40))
-        texts.append(" ".join(toks)); kinds.append("base")
-        texts.append(" ".join(toks)); kinds.append("exact")
-        light = toks.copy(); light[7] = f"x{b}"
-        texts.append(" ".join(light)); kinds.append("light")
-        mod = [f"y{b}_{i}" if i % 3 == 0 else t for i, t in enumerate(toks)]
-        texts.append(" ".join(mod)); kinds.append("moderate")
-    pd.DataFrame(
-        {
-            "doc_id": np.arange(len(texts), dtype=np.int64),
-            "text": texts,
-            "n_chars": [len(t) for t in texts],
-        }
-    ).to_parquet(tmp_path / "documents.parquet", index=False)
-
-    got = {
-        (r.a_id, r.b_id): r.hamming
-        for r in simhash_pairs_wide(spark, str(tmp_path)).collect()
-    }
-    fp = (
-        simhash_bands(
-            table(spark, str(tmp_path), "documents"), _SIMHASH_WIDE_BANDS
-        )
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    cols = [fp[f"b{i}"].to_numpy() for i in range(_SIMHASH_WIDE_BANDS)]
-    want = {}
-    for a, b in itertools.combinations(range(len(fp)), 2):
-        h = sum(int(c[a] ^ c[b]).bit_count() for c in cols)
-        bands_agree = any(
-            c0[a] == c0[b] and c1[a] == c1[b]
-            for c0, c1 in zip(cols[0::2], cols[1::2])
-        )
-        if h <= _WIDE_HAMMING_MAX and bands_agree:
-            want[(a, b)] = h
-    assert got == want
-    # every exact-copy pair is present at Hamming 0
-    exact_pairs = {(4 * b, 4 * b + 1) for b in range(60)}
-    assert exact_pairs <= set(got)
-    assert all(got[p] == 0 for p in exact_pairs)
-
-
-def test_simhash_wide_twin_precision_and_sharper_candidates(spark, sf_dir):
-    """VERDICT r11 #5, with the MEASURED correction: the 128-bit width
-    twin (8×16-bit columns, 4×32 banding, Hamming ≤ 7 ≈ the 64-bit ≤3
-    rate at 2× width) is a PRECISION knob, not a recall knob — ~80% of
-    the 64-bit ≤3 contract pairs on the fixture are Binomial lucky
-    draws (second-half Hamming ≥ 8, true disagreement rate ~0.1) that
-    the wide cut rejects, so the r11-suggested superset pin would be
-    wrong.  Pins: (a) the wide cut rejects PART of the contract set
-    but keeps its truly-near core; (b) every emitted pair verifies at
-    ≤ 7/128; (c) candidate pair mass at 32-bit bands is below the
-    16-bit mass (the correlated near-miss pruning the width exists
-    for)."""
-    from polybot_data_etl_spark.catalog import table
-    from polybot_data_etl_spark.functions.dedup import (
-        _SIMHASH_BANDS,
-        _SIMHASH_BITS,
-        _SIMHASH_WIDE_BANDS,
-        _WIDE_HAMMING_MAX,
-        clear_pair_cache,
-        q_dedup_simhash,
-        simhash_bands,
-        simhash_pairs_wide,
-    )
-
-    clear_pair_cache()
-    wide = {
-        (r.a_id, r.b_id): r.hamming
-        for r in simhash_pairs_wide(spark, sf_dir).collect()
-    }
-    contract = {
-        (r.a_id, r.b_id) for r in q_dedup_simhash(spark, sf_dir).collect()
-    }
-    assert wide and contract
-    assert all(h <= _WIDE_HAMMING_MAX for h in wide.values())
-    kept = contract & set(wide)
-    # the precision claim: a real, non-trivial split of the contract set
-    assert kept, "the truly-near core must survive the wide cut"
-    assert len(kept) < len(contract), "the wide cut must reject the lucky tail"
-
-    # (c) candidate sharpness: 32-bit bands commit less pair mass
-    def mass(n_bands, keys_of):
-        fp = simhash_bands(table(spark, sf_dir, "documents"), n_bands)
-        banded = fp.select(
-            "doc_id", F.posexplode(F.array(*keys_of())).alias("band", "value")
-        )
-        row = (
-            banded.groupBy("band", "value")
-            .agg(F.count("*").alias("n"))
-            .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m"))
-            .first()
-        )
-        return int(row["m"] or 0)
-
-    m16 = mass(
-        _SIMHASH_BANDS,
-        lambda: [F.col(f"b{b}") for b in range(_SIMHASH_BANDS)],
-    )
-    m32 = mass(
-        _SIMHASH_WIDE_BANDS,
-        lambda: [
-            F.col(f"b{2 * m}")
-            + F.shiftleft(F.col(f"b{2 * m + 1}"), _SIMHASH_BITS)
-            for m in range(_SIMHASH_WIDE_BANDS // 2)
-        ],
-    )
-    assert m32 < m16, (m16, m32)
-
-
 # --- round-12 optimization pins (plan shrink without value change) -------
 
 
 def test_simhash_packed_band_keys_equal_column_forms(spark):
-    """r12 packing fix: the packed-word band keys must be bit-identical
-    to the historical per-column forms for every scheme — posting
-    buckets (and so the verified pair sets) then cannot move."""
-    import pandas as pd
+    """r12 packing fix: the combinatorial band keys read the packed
+    fp0 word, and must equal the block keys computed straight from the
+    16-bit band columns b0..b3 — posting buckets (and so the verified
+    pair set) then cannot move."""
+    from itertools import combinations
 
     from polybot_data_etl_spark.functions.dedup import (
         _SIMHASH_BANDS,
         _SIMHASH_BITS,
-        _SIMHASH_WIDE_BANDS,
         _simhash_combinatorial_keys,
         _simhash_pack,
-        _simhash_scheme_keys,
     )
 
-    rng = __import__("numpy").random.default_rng(12)
+    rng = np.random.default_rng(12)
     n = 500
-    cols = {"doc_id": range(n)}
-    for b in range(_SIMHASH_WIDE_BANDS):
-        cols[f"b{b}"] = rng.integers(0, 1 << 16, size=n).tolist()
-    fp = spark.createDataFrame(pd.DataFrame(cols))
+    bands = rng.integers(0, 1 << 16, size=(_SIMHASH_BANDS, n))
+    cols = {f"b{b}": bands[b] for b in range(_SIMHASH_BANDS)}
+    fp = spark.createDataFrame(pd.DataFrame({"doc_id": range(n), **cols}))
+    packed = fp.select("doc_id", _simhash_pack()).select(
+        "doc_id",
+        F.array(*_simhash_combinatorial_keys(F.col("fp0"))).alias("k"),
+    )
+    got = {r.doc_id: r.k for r in packed.collect()}
 
-    # classic + comb read fp0 (4 cols); wide reads fp0/fp1 (8 cols)
-    for scheme, n_cols, legacy in (
-        (
-            "classic",
-            _SIMHASH_BANDS,
-            [F.col(f"b{m}") for m in range(_SIMHASH_BANDS)],
-        ),
-        ("comb", _SIMHASH_BANDS, _simhash_combinatorial_keys()),
-        (
-            "wide",
-            _SIMHASH_WIDE_BANDS,
-            [
-                F.col(f"b{2 * m}")
-                + F.shiftleft(F.col(f"b{2 * m + 1}"), _SIMHASH_BITS)
-                for m in range(_SIMHASH_WIDE_BANDS // 2)
-            ],
-        ),
-    ):
-        packed = fp.select("doc_id", *_simhash_pack(n_cols)).select(
-            "doc_id", F.array(*_simhash_scheme_keys(scheme, n_cols)).alias("k")
-        )
-        col_form = fp.select("doc_id", F.array(*legacy).alias("k"))
-        a = {r.doc_id: r.k for r in packed.collect()}
-        b = {r.doc_id: r.k for r in col_form.collect()}
-        assert a == b, scheme
+    # bit 16·b + i of the fingerprint is bit i of b{b}; 6 blocks of
+    # 11, 11, 11, 11, 10, 10 bits; key = block_i·2²² + block_j·2¹¹ + block_k
+    fp64 = sum(
+        bands[b].astype(np.uint64) << np.uint64(_SIMHASH_BITS * b)
+        for b in range(_SIMHASH_BANDS)
+    )
+    sizes = (11, 11, 11, 11, 10, 10)
+    starts = np.cumsum((0,) + sizes[:-1])
+    blocks = [
+        ((fp64 >> np.uint64(s)) & np.uint64((1 << w) - 1)).astype(np.int64)
+        for s, w in zip(starts, sizes)
+    ]
+    want = {
+        d: [
+            int((blocks[i][d] << 22) + (blocks[j][d] << 11) + blocks[k][d])
+            for i, j, k in combinations(range(6), 3)
+        ]
+        for d in range(n)
+    }
+    assert got == want
 
 
 def test_fused_bucketed_plans_are_single_scan(spark, sf_dir):
