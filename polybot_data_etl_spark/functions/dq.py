@@ -24,14 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
-from polybot_data_etl_spark.plans.bounds import (
-    GRID,
-    bucket_index_sql,
-    derived_bucket_count,
-    grid_cuts,
-    probe_rows_and_grid,
-)
-from polybot_data_etl_spark.plans.memo import memo
+from polybot_data_etl_spark.plans.bounds import add_buckets
 from polybot_data_etl_spark.registry import register
 
 
@@ -919,14 +912,126 @@ def q_dq_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the current order is why you re-cluster; the Z-order machinery in
     tests/test_layout.py is the fix this measures the need for).
 
-    Registered plan (round-11 flip, VERDICT r10 §Next-round #1): the
-    two-pass bucket-offset recipe of :func:`rle_profile_bucketed` —
-    per-orderkey-range lag windows plus a bounded boundary stitch, no
-    global data sort.  The r1-r10 fixture-scale form (one lag window
-    over the whole logical order — a one-task global sort at 100 TB)
-    is demoted to :func:`rle_profile_global`, kept as the pytest
-    cross-check that pins the two plans value-equal."""
-    return rle_profile_bucketed(spark, sf_dir)
+    Registered plan since the round-11 flip (VERDICT r10 §Next-round
+    #1; SURVEY §2 #423): no global data sort.  The r1-r10
+    fixture-scale form (one lag window over the whole logical order —
+    a one-task global sort at 100 TB) is demoted to
+    :func:`rle_profile_global`, kept as the pytest witness.
+    Two-pass bucket-offset construction (the q_win_dist_scaled /
+    q_stats_mannwhitney recipe, adapted to a LAG across boundaries):
+
+    1. Bucket rows by sampled ``l_orderkey`` quantile literals
+       (driver-side sampling — the RangePartitioner precedent).
+       Buckets are orderkey RANGES, so global logical order ==
+       (bucket, local order): every task sorts only its own slice.
+    2. Per-bucket lag windows count LOCAL run starts (each bucket's
+       first row counts as a start), one map-side-combined agg per
+       bucket.
+    3. Boundary stitch on the one-row-per-bucket summary: per bucket,
+       ``min_by``/``max_by`` over the full sort-key struct yield the
+       first/last row's profiled values; where bucket k's first value
+       equals bucket k−1's last, the local pass double-counted that
+       run — subtract.  The only unpartitioned window runs over this
+       bounded summary, never the data.
+
+    Ties in the full sort key are identical in every profiled column
+    (the rle_profile_global determinism argument), so min_by/max_by
+    tie choice cannot move a boundary comparison.  tests/test_round8.py
+    pins this plan equal to the global-window witness at bucket counts
+    1-32, tests/test_oracle.py at 256+ buckets; the bkt-partitioned
+    plan shape is pinned in tests/test_plans.py."""
+    from pyspark.sql import Window
+
+    li = table(spark, sf_dir, "lineitem")
+    order_cols = (
+        "l_orderkey",
+        "l_linenumber",
+        "l_returnflag",
+        "l_linestatus",
+        "l_shipdate",
+    )
+    base = li.select(*order_cols)
+    bb = add_buckets(
+        spark, ("rle_probe", sf_dir), base, {"bkt": "l_orderkey"}
+    )
+    w = Window.partitionBy("bkt").orderBy(*order_cols)
+    local = bb.select(
+        "bkt",
+        *order_cols,
+        F.lag("l_returnflag").over(w).alias("p_rf"),
+        F.lag("l_linestatus").over(w).alias("p_ls"),
+        F.lag("l_shipdate").over(w).alias("p_sd"),
+    )
+
+    def run(c: str, p: str):
+        return F.sum(
+            F.when(F.col(p).isNull() | (F.col(c) != F.col(p)), 1).otherwise(0)
+        )
+
+    key = F.struct(*[F.col(c) for c in order_cols])
+    vals = F.struct(
+        F.col("l_returnflag").alias("rf"),
+        F.col("l_linestatus").alias("ls"),
+        F.col("l_shipdate").alias("sd"),
+    )
+    # ONE combined per-bucket aggregate off the window output (r12):
+    # the local run counts AND the boundary min_by/max_by group by the
+    # same ``bkt`` the window just partitioned on, so fusing them rides
+    # the window's exchange (no second Exchange) and the boundary
+    # branch's separate scan+bucket pass disappears — executed plan
+    # went 2 lineitem scans / 3 Exchange → 1 scan / 1 Exchange
+    # (min_by/max_by read the same rows the lag window sorted; values
+    # and tie behavior are unchanged).
+    lruns = local.groupBy("bkt").agg(
+        run("l_returnflag", "p_rf").alias("r_rf"),
+        run("l_linestatus", "p_ls").alias("r_ls"),
+        run("l_shipdate", "p_sd").alias("r_sd"),
+        F.count("*").alias("n"),
+        F.min_by(vals, key).alias("first"),
+        F.max_by(vals, key).alias("last"),
+    )
+    # Stitch + totals in ONE chain off the bounded summary (r12): the
+    # lag window rides over the one-row-per-bucket summary carrying
+    # the run counts along, and a single final aggregate computes totals and
+    # boundary-continuation subtractions together — the old
+    # tot ⨯ broadcast(adj) crossJoin hung TWO consumers off `lruns`,
+    # which duplicated the whole scan→window→agg subtree per consumer
+    # (the SCALE.md shared-subtree trap, here on the hot path).
+    w_seq = Window.orderBy("bkt")  # one summary row per bucket
+    stitched = lruns.select(
+        "r_rf", "r_ls", "r_sd", "n", "first",
+        F.lag("last").over(w_seq).alias("prev_last"),
+    )
+
+    def cont(field: str):
+        return F.sum(
+            F.when(
+                F.col(f"prev_last.{field}") == F.col(f"first.{field}"), 1
+            ).otherwise(0)
+        )
+
+    runs = stitched.agg(
+        (F.sum("r_rf") - cont("rf")).alias("r_rf"),
+        (F.sum("r_ls") - cont("ls")).alias("r_ls"),
+        (F.sum("r_sd") - cont("sd")).alias("r_sd"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
+    )
+    return runs.select(
+        F.expr(
+            "stack(3,"
+            " 'l_returnflag', cast(n as bigint), cast(r_rf as bigint),"
+            " 'l_linestatus', cast(n as bigint), cast(r_ls as bigint),"
+            " 'l_shipdate',   cast(n as bigint), cast(r_sd as bigint))"
+            " as (col, n_rows, n_runs)"
+        )
+    ).select(
+        "col",
+        "n_rows",
+        "n_runs",
+        F.round(F.col("n_rows") / F.col("n_runs") + F.lit(1e-9), 4).alias(
+            "avg_run_len"
+        ),
+    )
 
 
 def rle_profile_global(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,7 +1040,7 @@ def rle_profile_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the round-11 flip (the registered plan is now the bucketed
     recipe; this form's single unpartitioned lag window is a one-task
     global sort at 100 TB).  tests/test_round8.py pins it value-equal
-    to the registered plan at multiple bucket counts.
+    to the registered plan at bucket counts 1-32.
 
     Determinism: (l_orderkey, l_linenumber) is NOT unique in the
     synthetic lineitem, and tie order under a non-total sort is
@@ -996,166 +1101,6 @@ def rle_profile_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rle_profile_bucketed(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    """THE registered plan of :func:`q_dq_rle` since the round-11 flip
-    (SURVEY §2 #423): the run-length report without any global data
-    sort — the demoted :func:`rle_profile_global` form's single lag
-    window over the whole logical order was the one remaining
-    global-sort-over-data shape in the fleet, fine at fixture scale
-    but a one-task sort at 100 TB.
-
-    Two-pass bucket-offset construction (the q_win_dist_scaled /
-    q_stats_mannwhitney recipe, adapted to a LAG across boundaries):
-
-    1. Bucket rows by sampled ``l_orderkey`` quantile literals
-       (driver-side sampling — the RangePartitioner precedent).
-       Buckets are orderkey RANGES, so global logical order ==
-       (bucket, local order): every task sorts only its own slice.
-    2. Per-bucket lag windows count LOCAL run starts (each bucket's
-       first row counts as a start), one map-side-combined agg per
-       bucket.
-    3. Boundary stitch on the ≤``n_buckets``-row summary: per bucket,
-       ``min_by``/``max_by`` over the full sort-key struct yield the
-       first/last row's profiled values; where bucket k's first value
-       equals bucket k−1's last, the local pass double-counted that
-       run — subtract.  The only unpartitioned window runs over this
-       bounded summary, never the data.
-
-    Ties in the full sort key are identical in every profiled column
-    (the rle_profile_global determinism argument), so min_by/max_by
-    tie choice cannot move a boundary comparison.  Value-equality with
-    the demoted global-window form is pinned at multiple bucket counts
-    in tests/test_round8.py; the bkt-partitioned plan shape in
-    tests/test_plans.py."""
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem")
-    order_cols = (
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        "l_linestatus",
-        "l_shipdate",
-    )
-    base = li.select(*order_cols)
-    # Cut points memoized per session (bounds.py).  Default path (r13,
-    # guide §2.2): ONE job samples row count + the fixed quantile grid,
-    # and the bucket count derives from the sampled rows — 32 at
-    # fixture scale (identical cuts to the old fixed-32 plan), growing
-    # to bound the per-bucket sort at ×100.  An explicit n_buckets (the
-    # pytest cross-checks) keeps the direct sampling path.
-    if n_buckets is None:
-        probe = memo(
-            spark,
-            ("rle_probe", sf_dir, GRID),
-            lambda: probe_rows_and_grid(base, "l_orderkey"),
-        )
-        n_buckets = derived_bucket_count(probe["rows"])
-        bounds = grid_cuts(probe, n_buckets)
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memo(
-            spark,
-            ("rle_bounds", sf_dir, n_buckets),
-            lambda: sorted(
-                set(
-                    base.agg(
-                        F.percentile_approx(
-                            "l_orderkey", qs, 10_000
-                        ).alias("bounds")
-                    ).first()["bounds"]
-                    or []
-                )
-            ),
-        )
-    bounds = [int(b) for b in bounds]
-    # codegen'd O(log B) bucket assignment — the interpreted
-    # size(filter(array, ...)) HOF was O(B) per row (bounds.py, r13)
-    bb = base.withColumn(
-        "bkt", F.expr(bucket_index_sql(bounds, "l_orderkey"))
-    )
-    w = Window.partitionBy("bkt").orderBy(*order_cols)
-    local = bb.select(
-        "bkt",
-        *order_cols,
-        F.lag("l_returnflag").over(w).alias("p_rf"),
-        F.lag("l_linestatus").over(w).alias("p_ls"),
-        F.lag("l_shipdate").over(w).alias("p_sd"),
-    )
-
-    def run(c: str, p: str):
-        return F.sum(
-            F.when(F.col(p).isNull() | (F.col(c) != F.col(p)), 1).otherwise(0)
-        )
-
-    key = F.struct(*[F.col(c) for c in order_cols])
-    vals = F.struct(
-        F.col("l_returnflag").alias("rf"),
-        F.col("l_linestatus").alias("ls"),
-        F.col("l_shipdate").alias("sd"),
-    )
-    # ONE combined per-bucket aggregate off the window output (r12):
-    # the local run counts AND the boundary min_by/max_by group by the
-    # same ``bkt`` the window just partitioned on, so fusing them rides
-    # the window's exchange (no second Exchange) and the boundary
-    # branch's separate scan+bucket pass disappears — executed plan
-    # went 2 lineitem scans / 3 Exchange → 1 scan / 1 Exchange
-    # (min_by/max_by read the same rows the lag window sorted; values
-    # and tie behavior are unchanged).
-    lruns = local.groupBy("bkt").agg(
-        run("l_returnflag", "p_rf").alias("r_rf"),
-        run("l_linestatus", "p_ls").alias("r_ls"),
-        run("l_shipdate", "p_sd").alias("r_sd"),
-        F.count("*").alias("n"),
-        F.min_by(vals, key).alias("first"),
-        F.max_by(vals, key).alias("last"),
-    )
-    # Stitch + totals in ONE chain off the bounded summary (r12): the
-    # lag window rides over the ≤n_buckets+1 rows carrying the run
-    # counts along, and a single final aggregate computes totals and
-    # boundary-continuation subtractions together — the old
-    # tot ⨯ broadcast(adj) crossJoin hung TWO consumers off `lruns`,
-    # which duplicated the whole scan→window→agg subtree per consumer
-    # (the SCALE.md shared-subtree trap, here on the hot path).
-    w_seq = Window.orderBy("bkt")  # ≤n_buckets+1 summary rows
-    stitched = lruns.select(
-        "r_rf", "r_ls", "r_sd", "n", "first",
-        F.lag("last").over(w_seq).alias("prev_last"),
-    )
-
-    def cont(field: str):
-        return F.sum(
-            F.when(
-                F.col(f"prev_last.{field}") == F.col(f"first.{field}"), 1
-            ).otherwise(0)
-        )
-
-    runs = stitched.agg(
-        (F.sum("r_rf") - cont("rf")).alias("r_rf"),
-        (F.sum("r_ls") - cont("ls")).alias("r_ls"),
-        (F.sum("r_sd") - cont("sd")).alias("r_sd"),
-        F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
-    )
-    return runs.select(
-        F.expr(
-            "stack(3,"
-            " 'l_returnflag', cast(n as bigint), cast(r_rf as bigint),"
-            " 'l_linestatus', cast(n as bigint), cast(r_ls as bigint),"
-            " 'l_shipdate',   cast(n as bigint), cast(r_sd as bigint))"
-            " as (col, n_rows, n_runs)"
-        )
-    ).select(
-        "col",
-        "n_rows",
-        "n_runs",
-        F.round(F.col("n_rows") / F.col("n_runs") + F.lit(1e-9), 4).alias(
-            "avg_run_len"
-        ),
-    )
-
-
 @register(
     "q_dq_id_gaps",
     oracle="""
@@ -1184,14 +1129,81 @@ def q_dq_id_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row count alone hides (10k rows with a 5k-wide hole means a
     range didn't land).
 
-    Registered plan (round-11 flip, VERDICT r10 §Next-round #1): the
-    two-pass bucket-offset recipe of :func:`id_gaps_bucketed` — ids
-    are the natural range partitioner, so per-bucket lead() windows
-    plus a bounded next-bucket-min stitch replace the global id sort.
-    The r1-r10 fixture-scale form (one unpartitioned lead() — a
-    one-task global sort at 100 TB) is demoted to
-    :func:`id_gaps_global`, kept as the pytest cross-check."""
-    return id_gaps_bucketed(spark, sf_dir)
+    Registered plan since the round-11 flip (VERDICT r10 §Next-round
+    #1; SURVEY §2 #424): the LEAD variant of q_dq_rle's two-pass
+    bucket-offset recipe, no global id sort.  The r1-r10
+    fixture-scale form (one unpartitioned lead() — a one-task global
+    sort at 100 TB) is demoted to :func:`id_gaps_global`, kept as the
+    pytest witness.
+
+    1. Bucket rows by sampled ``event_id`` quantile literals: buckets
+       are id RANGES, so global id order == (bucket, local order).
+    2. Per-bucket lead() pairs each id with its in-bucket successor.
+    3. Each bucket's LAST row has no local successor; its true
+       successor is the NEXT bucket's minimum id — a lead() over the
+       one-row-per-bucket min summary.  (Consecutive-pair multisets
+       are tie-order-invariant under duplicate ids, so the stitch is
+       exact, not approximate.)
+
+    Pinned EXACTLY equal to the global-window witness at bucket counts
+    1-32 in tests/test_round8.py; guarded fleet-wide by the
+    global-window-over-data plan sweep in tests/test_plans.py."""
+    from pyspark.sql import Window
+
+    e = table(spark, sf_dir, "events")
+    b = add_buckets(
+        spark,
+        ("id_gap_probe", sf_dir),
+        e.select("event_id"),
+        {"bkt": "event_id"},
+    )
+    w = Window.partitionBy("bkt").orderBy("event_id")
+    local = b.withColumn("nxt_local", F.lead("event_id").over(w))
+    # ONE per-bucket aggregate off the window output (r12, the
+    # q_dq_rle fusion): local gap stats, bucket min/max,
+    # and the row count all group by the ``bkt`` the window just
+    # partitioned on, so they ride its exchange — the old shape ran
+    # THREE passes over events (window pass, per-bucket-min pass, and
+    # a separate n_rows/id_span scan) plus a join-back of the stitch.
+    # Executed plan went 3 scans / 3 Exchange → 1 scan / 1 Exchange.
+    lgap = F.col("nxt_local") - F.col("event_id")
+    summary = local.groupBy("bkt").agg(
+        F.count("*").alias("n_b"),
+        F.min("event_id").alias("min_b"),
+        F.max("event_id").alias("max_b"),
+        F.sum(F.when(lgap > 1, 1).otherwise(0)).alias("g_l"),
+        F.sum(F.when(lgap > 1, lgap - 1).otherwise(0)).alias("m_l"),
+        F.max(F.when(lgap > 1, lgap - 1)).alias("x_l"),
+    )
+    # Boundary stitch on the bounded summary: each bucket's last row's
+    # true successor is the next NON-EMPTY bucket's min (lead over the
+    # bkt order skips absent buckets exactly like the old per-bucket-
+    # min lead did); consecutive-pair multisets are tie-order-invariant
+    # under duplicate ids, so the stitch stays exact.
+    w_seq = Window.orderBy("bkt")  # one summary row per bucket
+    bgap = F.lead("min_b").over(w_seq) - F.col("max_b")
+    stitched = summary.select(
+        "n_b", "min_b", "max_b", "g_l", "m_l", "x_l",
+        F.when(bgap > 1, bgap - 1).alias("b_miss"),
+    )
+    return stitched.agg(
+        F.coalesce(F.sum("n_b"), F.lit(0)).cast("bigint").alias("n_rows"),
+        (F.max("max_b") - F.min("min_b") + 1).cast("bigint").alias("id_span"),
+        F.coalesce(
+            F.sum("g_l")
+            + F.sum(F.when(F.col("b_miss").isNotNull(), 1).otherwise(0)),
+            F.lit(0),
+        ).cast("bigint").alias("n_gaps"),
+        F.coalesce(
+            F.sum("m_l") + F.sum(F.coalesce(F.col("b_miss"), F.lit(0))),
+            F.lit(0),
+        ).cast("bigint").alias("n_missing"),
+        # greatest() yields the largest NON-null argument (null only
+        # when both are), so a single coalesce restores the 0 default
+        F.coalesce(
+            F.greatest(F.max("x_l"), F.max("b_miss")), F.lit(0)
+        ).cast("bigint").alias("max_gap"),
+    )
 
 
 def id_gaps_global(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,7 +1212,7 @@ def id_gaps_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the round-11 flip.  Shape: one lead() over the id order → gap
     rows → a 1-row reduce; the span/count cross-checks come from a
     plain min/max agg.  tests/test_round8.py pins it value-equal to
-    the registered bucketed plan at multiple bucket counts."""
+    the registered bucketed plan at bucket counts 1-32."""
     from pyspark.sql import Window
 
     e = table(spark, sf_dir, "events")
@@ -1226,110 +1238,6 @@ def id_gaps_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_gaps").cast("bigint").alias("n_gaps"),
         F.col("n_missing").cast("bigint").alias("n_missing"),
         F.col("max_gap").cast("bigint").alias("max_gap"),
-    )
-
-
-def id_gaps_bucketed(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    """THE registered plan of :func:`q_dq_id_gaps` since the round-11
-    flip (SURVEY §2 #424): the five-number continuity report without
-    the global id sort — the LEAD variant of the two-pass
-    bucket-offset recipe (#423 covered LAG).
-
-    1. Bucket rows by sampled ``event_id`` quantile literals: buckets
-       are id RANGES, so global id order == (bucket, local order).
-    2. Per-bucket lead() pairs each id with its in-bucket successor.
-    3. Each bucket's LAST row has no local successor; its true
-       successor is the NEXT bucket's minimum id — a lead() over the
-       ≤``n_buckets``-row per-bucket min summary, broadcast back.
-       (Consecutive-pair multisets are tie-order-invariant under
-       duplicate ids, so the stitch is exact, not approximate.)
-
-    Pinned EXACTLY equal to the demoted global-window form at multiple
-    bucket counts in tests/test_round8.py; guarded fleet-wide by the
-    global-window-over-data plan sweep in tests/test_plans.py."""
-    from pyspark.sql import Window
-
-    e = table(spark, sf_dir, "events")
-    # Cuts memoized as in rle_profile_bucketed; the default path
-    # derives the bucket count from the sampled row count, explicit
-    # n_buckets keeps the direct sampling path (pytest cross-checks).
-    if n_buckets is None:
-        probe = memo(
-            spark,
-            ("id_gap_probe", sf_dir, GRID),
-            lambda: probe_rows_and_grid(e, "event_id"),
-        )
-        n_buckets = derived_bucket_count(probe["rows"])
-        bounds = grid_cuts(probe, n_buckets)
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memo(
-            spark,
-            ("id_gap_bounds", sf_dir, n_buckets),
-            lambda: sorted(
-                set(
-                    e.agg(
-                        F.percentile_approx(
-                            "event_id", qs, 10_000
-                        ).alias("bounds")
-                    ).first()["bounds"]
-                    or []
-                )
-            ),
-        )
-    bounds = [int(b) for b in bounds]
-    # codegen'd O(log B) bucket assignment (bounds.py, r13)
-    b = e.select("event_id").withColumn(
-        "bkt", F.expr(bucket_index_sql(bounds, "event_id"))
-    )
-    w = Window.partitionBy("bkt").orderBy("event_id")
-    local = b.withColumn("nxt_local", F.lead("event_id").over(w))
-    # ONE per-bucket aggregate off the window output (r12, the
-    # rle_profile_bucketed fusion): local gap stats, bucket min/max,
-    # and the row count all group by the ``bkt`` the window just
-    # partitioned on, so they ride its exchange — the old shape ran
-    # THREE passes over events (window pass, per-bucket-min pass, and
-    # a separate n_rows/id_span scan) plus a join-back of the stitch.
-    # Executed plan went 3 scans / 3 Exchange → 1 scan / 1 Exchange.
-    lgap = F.col("nxt_local") - F.col("event_id")
-    summary = local.groupBy("bkt").agg(
-        F.count("*").alias("n_b"),
-        F.min("event_id").alias("min_b"),
-        F.max("event_id").alias("max_b"),
-        F.sum(F.when(lgap > 1, 1).otherwise(0)).alias("g_l"),
-        F.sum(F.when(lgap > 1, lgap - 1).otherwise(0)).alias("m_l"),
-        F.max(F.when(lgap > 1, lgap - 1)).alias("x_l"),
-    )
-    # Boundary stitch on the bounded summary: each bucket's last row's
-    # true successor is the next NON-EMPTY bucket's min (lead over the
-    # bkt order skips absent buckets exactly like the old per-bucket-
-    # min lead did); consecutive-pair multisets are tie-order-invariant
-    # under duplicate ids, so the stitch stays exact.
-    w_seq = Window.orderBy("bkt")  # ≤n_buckets+1 summary rows
-    bgap = F.lead("min_b").over(w_seq) - F.col("max_b")
-    stitched = summary.select(
-        "n_b", "min_b", "max_b", "g_l", "m_l", "x_l",
-        F.when(bgap > 1, bgap - 1).alias("b_miss"),
-    )
-    return stitched.agg(
-        F.coalesce(F.sum("n_b"), F.lit(0)).cast("bigint").alias("n_rows"),
-        (F.max("max_b") - F.min("min_b") + 1).cast("bigint").alias("id_span"),
-        F.coalesce(
-            F.sum("g_l")
-            + F.sum(F.when(F.col("b_miss").isNotNull(), 1).otherwise(0)),
-            F.lit(0),
-        ).cast("bigint").alias("n_gaps"),
-        F.coalesce(
-            F.sum("m_l") + F.sum(F.coalesce(F.col("b_miss"), F.lit(0))),
-            F.lit(0),
-        ).cast("bigint").alias("n_missing"),
-        # greatest() yields the largest NON-null argument (null only
-        # when both are), so a single coalesce restores the 0 default
-        F.coalesce(
-            F.greatest(F.max("x_l"), F.max("b_miss")), F.lit(0)
-        ).cast("bigint").alias("max_gap"),
     )
 
 

@@ -1070,23 +1070,14 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: exact integer cents per part, total order
     (cents DESC, partkey).  Scale: the descending cumulative uses the
     two-pass bucket-offset recipe (quantile-literal cents buckets →
-    bucket-local cumsums → ≤32-row carry prefix, the q_stats_kruskal /
+    bucket-local cumsums → ≤1024-row carry prefix, the q_stats_kruskal /
     q_mix_budget construction) — no single task ever sorts the whole
     part dimension; the oracle replays the plain window form."""
-    from polybot_data_etl_spark.plans.bounds import (
-        GRID,
-        bucket_index_sql,
-        derived_bucket_count,
-        grid_cuts,
-        probe_rows_and_grid,
-    )
-    from polybot_data_etl_spark.plans.memo import memo
+    from polybot_data_etl_spark.plans.bounds import add_buckets
 
     li = table(spark, sf_dir, "lineitem")
     # SQL-text expressions (r13, guide §4): identical operator tree to
-    # the Column-method form, ~⅓ the Py4J round-trips per build; the
-    # percentile probe joins the r12 bounds memo so repeat builds in a
-    # session issue no sampling job (bounds.py contract).
+    # the Column-method form, ~⅓ the Py4J round-trips per build.
     pc = li.groupBy("l_partkey").agg(
         F.expr(
             "sum(try_cast(round(l_extendedprice * 100) AS BIGINT))"
@@ -1096,21 +1087,10 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pc feeds four consumers (percentile probe, bucketed rows, bucket
     # offsets, grand total): cut the lineage once so the scan+shuffle
     # runs once, not per consumer (SCALE.md §shared-subtree; the
-    # percentile .first() below is the materializing action).
+    # sampling job in add_buckets is the materializing action).
     pc = pc.localCheckpoint(eager=False)
 
-    # ONE sampling job (row count + fixed quantile grid); bucket count
-    # derived from the sampled part count — 32 at fixture scale,
-    # growing at ×100 (r13, guide §2.2); codegen'd O(log B) bucket
-    # assignment replaces the O(B) interpreted HOF (bounds.py).
-    probe = memo(
-        spark,
-        ("abc_probe", sf_dir, GRID),
-        lambda: probe_rows_and_grid(pc, "cents"),
-    )
-    n_buckets = derived_bucket_count(probe["rows"])
-    bounds = [int(b) for b in grid_cuts(probe, n_buckets)]
-    pcb = pc.withColumn("bkt", F.expr(bucket_index_sql(bounds, "cents")))
+    pcb = add_buckets(spark, ("abc_probe", sf_dir), pc, {"bkt": "cents"})
     offsets = (
         pcb.groupBy("bkt")
         .agg(F.expr("sum(cents) AS bc"))

@@ -20,13 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
-from polybot_data_etl_spark.plans.bounds import (
-    GRID,
-    bucket_index_sql,
-    derived_bucket_count,
-    grid_cuts,
-    probe_rows_and_grid,
-)
+from polybot_data_etl_spark.plans.bounds import add_buckets
 from polybot_data_etl_spark.plans.memo import memo
 from polybot_data_etl_spark.registry import register
 
@@ -280,65 +274,25 @@ def q_agg_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     of Recency (latest order first), Frequency, and Monetary value,
     rolled up to segment sizes — the standard CRM / lifecycle cut.
 
-    Registered plan (round-11 flip, VERDICT r10 §Next-round #3): the
-    two-pass bucketed rank of :func:`rfm_quintiles_scaled` — the
-    windows run over the per-customer AGGREGATE, an ENTITY-keyed frame
-    that grows with data (10⁹ customers at 100 TB), which the static
-    global-window plan sweep cannot flag; the bucketed recipe is
-    EXACTLY ntile-equal, not cutpoint-approximate.  The r1-r10
-    fixture-scale form (three global ntile sorts) is demoted to
-    :func:`rfm_global`, kept as the pytest cross-check."""
-    return rfm_quintiles_scaled(spark, sf_dir)
-
-
-def rfm_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixture-scale form of :func:`q_agg_rfm` — REGISTERED for
-    rounds 1-10, demoted to the test-only cross-check at the round-11
-    flip (three global ntile sorts over the per-customer aggregate,
-    each a one-task sort once customers number in the billions).  The
-    custkey tiebreak makes every ntile boundary deterministic."""
-    o = table(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count("*").alias("frequency"),
-        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-    )
-    w_r = Window.orderBy(F.desc("last_order"), F.asc("o_custkey"))
-    w_f = Window.orderBy(F.desc("frequency"), F.asc("o_custkey"))
-    w_m = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
-    return (
-        per_cust.select(
-            F.ntile(5).over(w_r).alias("r"),
-            F.ntile(5).over(w_f).alias("f"),
-            F.ntile(5).over(w_m).alias("m"),
-        )
-        .groupBy("r", "f", "m")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
-def rfm_quintiles_scaled(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    """THE registered plan of :func:`q_agg_rfm` since the round-11
-    flip (SURVEY §2 #425): the (r, f, m) segment-size report with the
-    three global ntile sorts over the per-customer frame replaced by
-    the two-pass bucketed rank of q_win_dist_scaled — the entity-keyed
-    case the global-window plan sweep cannot flag statically (the
-    per-customer Aggregate bounds nothing at 10⁹ customers).
+    Registered plan (round-11 flip, VERDICT r10 §Next-round #3; SURVEY
+    §2 #425): the three global ntile sorts over the per-customer frame
+    are replaced by the two-pass bucketed rank of q_win_dist_scaled —
+    the windows run over the per-customer AGGREGATE, an ENTITY-keyed
+    frame that grows with data (10⁹ customers at 100 TB), which the
+    static global-window plan sweep cannot flag.
 
     Per dimension: sampled quantile literals bucket the frame by
     VALUE range (all three bounds arrays come from ONE build-time
     pass), a bucket-partitioned window ranks locally under the exact
     registered order (value DESC, custkey ASC), and the global rank
     is local rank + the prefix-summed counts of HIGHER-value buckets
-    (a ≤``n_buckets``-row summary window).  ntile(5) is then the
+    (a summary window over one row per bucket).  ntile(5) is then the
     closed-form first-(n mod 5)-tiles-get-ceil(n/5) rule on
     (rank, n) — exactly Spark's ntile semantics, so the plan is
-    EXACTLY equal to the demoted :func:`rfm_global` form, not
-    cutpoint-approximate (ties share a value bucket; the custkey
-    tiebreak is total).  Pinned equal at several bucket counts in
-    tests/test_round8.py."""
+    EXACTLY equal to the r1-r10 fixture-scale form, demoted to
+    :func:`rfm_global`, not cutpoint-approximate (ties share a value
+    bucket; the custkey tiebreak is total).  tests/test_round8.py pins
+    the two equal at bucket counts 1-32."""
     o = table(spark, sf_dir, "orders")
     # SQL-text expressions throughout (r13, guide §4): identical
     # operator tree to the Column-method form it replaces (938 Py4J
@@ -357,77 +311,25 @@ def rfm_quintiles_scaled(
             "CAST(unix_micros(CAST(last_order AS TIMESTAMP)) AS DOUBLE)"
         ),
     )
-    # all three dimensions' cut points from ONE sampling job, memoized
-    # per (session, sf_dir, key) — only the first plan build in a
-    # session pays it (VERDICT r11 §wrong #4).  Default path (r13,
-    # guide §2.2): the same job also counts the entity frame and the
-    # bucket count derives from it — fixed 32 at fixture scale,
-    # growing at ×100; explicit n_buckets (pytest cross-checks) keeps
-    # the direct sampling path.
-    if n_buckets is None:
-
-        def _probe() -> dict:
-            qs_g = [i / GRID for i in range(1, GRID)]
-            row = per_cust.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.percentile_approx("rv", qs_g, 10_000).alias("b_r"),
-                F.percentile_approx(
-                    F.col("frequency").cast("double"), qs_g, 10_000
-                ).alias("b_f"),
-                F.percentile_approx("monetary", qs_g, 10_000).alias("b_m"),
-            ).first()
-            return {
-                "rows": int(row["rows"]),
-                **{k: list(row[k] or []) for k in ("b_r", "b_f", "b_m")},
-            }
-
-        probe = memo(spark, ("rfm_probe", sf_dir, GRID), _probe)
-        n_buckets = derived_bucket_count(probe["rows"])
-        cut_lists = {
-            k: grid_cuts(probe | {"grid": probe[k]}, n_buckets)
-            for k in ("b_r", "b_f", "b_m")
-        }
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-
-        def _sample_cuts() -> dict:
-            row = per_cust.agg(
-                F.percentile_approx("rv", qs, 10_000).alias("b_r"),
-                F.percentile_approx(
-                    F.col("frequency").cast("double"), qs, 10_000
-                ).alias("b_f"),
-                F.percentile_approx("monetary", qs, 10_000).alias("b_m"),
-            ).first()
-            return {
-                k: sorted(set(row[k] or []))
-                for k in ("b_r", "b_f", "b_m")
-            }
-
-        cut_lists = memo(
-            spark, ("rfm_bounds", sf_dir, n_buckets), _sample_cuts
-        )
-
+    # all three dimensions bucketed from ONE sampling job, memoized
+    # per (session, sf_dir) — only the first plan build in a session
+    # pays it (VERDICT r11 §wrong #4); the bucket count derives from
+    # the entity-frame row count (bounds.py).
     dims = (
-        ("r", "rv", "b_r"),
-        ("f", "frequency", "b_f"),
-        ("m", "monetary", "b_m"),
+        ("r", "rv"),
+        ("f", "frequency"),
+        ("m", "monetary"),
     )
-    scored = per_cust
-    for name, col, key in dims:
-        # codegen'd O(log B) bucket assignment (bounds.py, r13)
-        scored = scored.withColumn(
-            f"bkt_{name}",
-            F.expr(
-                bucket_index_sql(
-                    [float(b) for b in cut_lists[key]],
-                    f"CAST({col} AS DOUBLE)",
-                )
-            ),
-        )
+    scored = add_buckets(
+        spark,
+        ("rfm_probe", sf_dir),
+        per_cust,
+        {f"bkt_{name}": f"CAST({col} AS DOUBLE)" for name, col in dims},
+    )
     # three bucket-partitioned local ranks chained on ONE frame (the
     # registered form's three windows, each now parallel over ~32
     # buckets instead of one task)
-    for name, col, _ in dims:
+    for name, col in dims:
         scored = scored.withColumn(
             f"lrn_{name}",
             F.expr(
@@ -437,7 +339,7 @@ def rfm_quintiles_scaled(
         )
     totals = scored.agg(F.expr("count(*) AS n_total"))
     out = scored
-    for name, _, _ in dims:
+    for name, _ in dims:
         counts = scored.groupBy(f"bkt_{name}").agg(
             F.expr("count(*) AS cnt")
         )
@@ -471,6 +373,32 @@ def rfm_quintiles_scaled(
         )
         .groupBy("r", "f", "m")
         .agg(F.expr("count(*) AS n_customers"))
+    )
+
+
+def rfm_global(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixture-scale form of :func:`q_agg_rfm` — REGISTERED for
+    rounds 1-10, demoted to the test-only cross-check at the round-11
+    flip (three global ntile sorts over the per-customer aggregate,
+    each a one-task sort once customers number in the billions).  The
+    custkey tiebreak makes every ntile boundary deterministic."""
+    o = table(spark, sf_dir, "orders")
+    per_cust = o.groupBy("o_custkey").agg(
+        F.max("o_orderdate").alias("last_order"),
+        F.count("*").alias("frequency"),
+        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
+    )
+    w_r = Window.orderBy(F.desc("last_order"), F.asc("o_custkey"))
+    w_f = Window.orderBy(F.desc("frequency"), F.asc("o_custkey"))
+    w_m = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
+    return (
+        per_cust.select(
+            F.ntile(5).over(w_r).alias("r"),
+            F.ntile(5).over(w_f).alias("f"),
+            F.ntile(5).over(w_m).alias("m"),
+        )
+        .groupBy("r", "f", "m")
+        .agg(F.count("*").alias("n_customers"))
     )
 
 

@@ -17,14 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
-from polybot_data_etl_spark.plans.bounds import (
-    GRID,
-    bucket_index_sql,
-    derived_bucket_count,
-    grid_cuts,
-    probe_rows_and_grid,
-)
-from polybot_data_etl_spark.plans.memo import memo
+from polybot_data_etl_spark.plans.bounds import add_buckets
 from polybot_data_etl_spark.registry import register
 
 
@@ -261,18 +254,9 @@ def q_win_dist_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build-time pass is the RangePartitioner-sampling precedent and
     # is hidden by bench's producer pipelining.  In-plan bounds win
     # only over pre-aggregated frames (mannwhitney/kruskal).
-    # Memoized per session (bounds.py); the same job counts the rows
-    # and the bucket count derives from it (guide §2.2); the bucket
-    # assignment is the codegen'd O(log B) ladder.
-    probe = memo(
-        spark,
-        ("win_dist_probe", sf_dir, GRID),
-        lambda: probe_rows_and_grid(c, "c_acctbal"),
+    bucketed = add_buckets(
+        spark, ("win_dist_probe", sf_dir), c, {"bkt": "c_acctbal"}
     )
-    n_buckets = derived_bucket_count(probe["rows"])
-    bounds = [float(b) for b in grid_cuts(probe, n_buckets)]
-    bkt_sql = bucket_index_sql(bounds, "c_acctbal")
-    bucketed = c.withColumn("bkt", F.expr(f"CAST({bkt_sql} AS INT)"))
     w_local = Window.partitionBy("bkt").orderBy("c_acctbal", "c_custkey")
     local = bucketed.withColumn("lrn", F.row_number().over(w_local))
     counts = bucketed.groupBy("bkt").agg(F.count("*").alias("cnt"))
@@ -512,17 +496,9 @@ def q_win_weighted_median_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hidden by bench's producer pipelining.  The in-plan form wins
     # only when the percentile runs on an already-aggregated small
     # frame (q_stats_mannwhitney / q_stats_kruskal — converted).
-    # Memoized per session (bounds.py); the same job counts rows and
-    # the bucket count derives from it; codegen'd O(log B) assignment.
-    probe = memo(
-        spark,
-        ("wmedian_probe", sf_dir, GRID),
-        lambda: probe_rows_and_grid(base, "l_quantity"),
+    bucketed = add_buckets(
+        spark, ("wmedian_probe", sf_dir), base, {"bkt": "l_quantity"}
     )
-    n_buckets = derived_bucket_count(probe["rows"])
-    bounds = [float(b) for b in grid_cuts(probe, n_buckets)]
-    bkt_sql = bucket_index_sql(bounds, "l_quantity")
-    bucketed = base.withColumn("bkt", F.expr(f"CAST({bkt_sql} AS INT)"))
     w_local = (
         Window.partitionBy("l_returnflag", "bkt")
         .orderBy("l_quantity", "l_orderkey", "l_linenumber")

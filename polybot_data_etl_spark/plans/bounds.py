@@ -1,81 +1,96 @@
 """Bucket bounds for the bucketed two-pass plans (q_dq_rle,
-q_dq_id_gaps, q_agg_rfm, q_agg_abc, q_win_dist*).
+q_dq_id_gaps, q_agg_rfm, q_agg_abc, q_win_dist_scaled,
+q_win_weighted_median_scaled).
 
-Each plan opens with one synchronous ``percentile_approx(...).first()``
-that samples its cut points (the RangePartitioner precedent), measured
-4-7 s cold at sf0.1 across four names (SCALE.md, commit 290866b).  The
-sample is deterministic in (fixture dir, source frame, bucket count),
-so callers take it through ``plans.memo.memo``: only the first build
-in a session runs the job, later builds issue NO Spark job (asserted
-in tests/test_round12.py).  Sampled values are plain lists/dicts.
+Every one of them buckets its rows through :func:`add_buckets`: ONE
+synchronous ``percentile_approx(...).first()`` samples the row count
+and a fixed quantile grid of every bucketed column (the
+RangePartitioner precedent), measured 4-7 s cold at sf0.1 across four
+names (SCALE.md, commit 290866b).  The sample is deterministic in
+(fixture dir, source frame, grid), so it is taken through
+``plans.memo.memo``: only the first build in a session runs the job,
+later builds issue NO Spark job (asserted in tests/test_round12.py).
+
+The bucket count derives from the sampled row count (guide §2.2:
+derive partition counts from input size) — a power of two ≈ rows /
+``TARGET_ROWS``, clamped to [``MIN_BUCKETS``, ``GRID``].  The floor of
+32 keeps every sub-8M-row input on the historical fixed-32 plan: the
+grid subsample at stride GRID/n lands on exactly the i/n quantiles of
+the same sketch.  The assignment is a balanced comparison ladder —
+O(log n) codegen'd CASE nesting computing exactly ``count(cuts <=
+col)`` including the NULL case — instead of the interpreted
+``size(filter(array(cuts), x -> x <= col))`` HOF, measured 3× slower
+at 32 cuts and 6× at 256.
+
+The four tuning values are module constants read at call time, so a
+test forces another bucket count by monkeypatching one of them.
 """
 
 from __future__ import annotations
 
 import math
 
-# --- r13: scale-derived bucket counts + codegen'd bucket assignment ---
-#
-# The bucketed two-pass plans share two defects the r12 verdict named:
-# (a) `n_buckets` was a fixed 32 — fine at fixture scale, but at ×100
-#     each bucket holds ~1.8 M rows in ONE sorted partition (guide
-#     §2.2: derive partition counts from input size); and
-# (b) the bucket assignment `size(filter(array(cuts), x -> x <= col))`
-#     is an interpreted higher-order function costing O(n_buckets) per
-#     row — measured 3× the codegen'd ladder at 32 cuts and 6× at 256
-#     (the per-row cost that made larger bucket counts a regression).
-#
-# `probe_rows_and_grid` samples the row count AND a fixed power-of-two
-# quantile grid in ONE job; `derived_bucket_count` turns the sampled
-# row count into a power-of-two bucket count (floor 32 keeps every
-# fixture-scale plan byte-identical to the old fixed-32 form — the
-# grid subsample at stride G/n lands on exactly the i/n quantiles of
-# the same sketch); `bucket_index_sql` renders the assignment as a
-# balanced comparison ladder — O(log n_buckets) codegen'd CASE nesting
-# that computes exactly `count(cuts <= col)` including the NULL case
-# (every NULL comparison descends left → 0, matching size(filter(..))
-# on a NULL input).
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-GRID = 1024
+from polybot_data_etl_spark.plans.memo import memo
+
+GRID = 1024  # sampled quantile grid points + 1; also the bucket-count cap
+MIN_BUCKETS = 32
+TARGET_ROWS = 250_000
+ACCURACY = 10_000  # percentile_approx accuracy
 
 
-def probe_rows_and_grid(
-    df, col: str, accuracy: int = 10_000, grid: int = GRID
-) -> dict:
-    """ONE sampling job: row count + the (grid−1)-point quantile grid
-    of ``col`` (plain Python values — memo-safe)."""
-    from pyspark.sql import functions as F
+def add_buckets(
+    spark: SparkSession, key: tuple, df: DataFrame, cols: dict[str, str]
+) -> DataFrame:
+    """``df`` plus one bucket-index column per ``cols`` entry (bucket
+    column name → SQL expression it buckets), all sampled in ONE job
+    memoized under ``key``.  Buckets are value RANGES in ascending
+    order, so (bucket, value order) is the global value order."""
+    probe = memo(
+        spark, (*key, GRID, ACCURACY), lambda: probe_rows_and_grid(df, cols)
+    )
+    n = derived_bucket_count(probe["rows"])
+    for name, sql in cols.items():
+        cuts = grid_cuts(probe["grids"][name], n)
+        df = df.withColumn(name, F.expr(bucket_index_sql(cuts, sql)))
+    return df
 
-    qs = [i / grid for i in range(1, grid)]
-    row = df.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.percentile_approx(col, qs, accuracy).alias("cuts"),
+
+def probe_rows_and_grid(df: DataFrame, cols: dict[str, str]) -> dict:
+    """ONE sampling job: the row count + the (GRID−1)-point quantile
+    grid of every ``cols`` expression (plain Python values — memo-safe)."""
+    qs = [i / GRID for i in range(1, GRID)]
+    rows, *grids = df.agg(
+        F.count(F.lit(1)),
+        *(F.percentile_approx(F.expr(s), qs, ACCURACY) for s in cols.values()),
     ).first()
-    return {"rows": int(row["rows"]), "grid": list(row["cuts"] or [])}
+    return {
+        "rows": int(rows),
+        "grids": {name: list(g or []) for name, g in zip(cols, grids)},
+    }
 
 
-def derived_bucket_count(
-    rows: int, target_rows: int = 250_000, floor: int = 32, cap: int = GRID
-) -> int:
-    """Power-of-two bucket count ≈ rows / target_rows, clamped to
-    [floor, cap].  floor=32 keeps sub-8M-row inputs on the historical
-    fixed-32 plan; cap=GRID bounds the boundary-stitch summary and
-    matches the sampled grid."""
-    n = floor
-    while n < cap and rows // target_rows > n:
+def derived_bucket_count(rows: int) -> int:
+    """Power-of-two bucket count ≈ rows / TARGET_ROWS, clamped to
+    [MIN_BUCKETS, GRID] (GRID bounds the boundary-stitch summary and
+    matches the sampled grid)."""
+    n = MIN_BUCKETS
+    while n < GRID and rows // TARGET_ROWS > n:
         n *= 2
     return n
 
 
-def grid_cuts(probe: dict, n_buckets: int, grid: int = GRID) -> list:
-    """The i/n_buckets quantile cut points, subsampled from the fixed
-    grid (exact: the grid is a superset of every power-of-two
-    quantile set up to GRID)."""
-    stride = grid // n_buckets
+def grid_cuts(grid: list, n: int) -> list:
+    """The i/n quantile cut points (0 < i < n), read off the sampled
+    grid — exact for power-of-two n: grid index i·GRID/n − 1 holds
+    quantile i/n — as sorted distinct values."""
+    if not grid:
+        return []
+    picks = {grid[i * GRID // n - 1] for i in range(1, n)}
     # Spark's order (NaN above +inf); Python's sort is undefined on NaN
-    return sorted(
-        set(probe["grid"][stride - 1 :: stride]), key=lambda v: (v != v, v)
-    )
+    return sorted(picks, key=lambda v: (v != v, v))
 
 
 def bucket_index_sql(cuts: list, col_sql: str) -> str:

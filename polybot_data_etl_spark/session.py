@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from polybot_data_etl_spark.config import EngineConfig
+
 
 def build_session(
     app_name: str = "polybot-data-etl-spark",
@@ -24,15 +26,20 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """``extra_conf`` entries are applied last (they win over the
-    defaults above) — JVM-launch settings like spark.driver.memory only
-    take effect if this call actually creates the JVM (first session in
-    the process)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    default_master = f"local[{cpus}]" if cpus else "local[*]"
+    """``master`` defaults to :class:`EngineConfig`'s (``local[N]`` from
+    SPARK_GRAFT_CPUS, else ``local[*]``; a malformed value raises the
+    named ValueError).  ``extra_conf`` entries are applied last (they
+    win over the defaults above) — JVM-launch settings like
+    spark.driver.memory only take effect if this call actually creates
+    the JVM (first session in the process)."""
+    if master is None:
+        # only the core count: a SPARK_GRAFT_SF_DIR naming a missing
+        # directory is the data layer's error, not the session's
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+        master = EngineConfig.from_env({"SPARK_GRAFT_CPUS": cpus}).master
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or default_master)
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -37,6 +37,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -241,11 +242,6 @@ def _migrate_legacy(path: str) -> None:
     _commit(path, version)
 
 
-def append_load(df: DataFrame, path: str) -> None:
-    """Append-only load (the event-stream table shape)."""
-    df.write.mode("append").parquet(path)
-
-
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -277,17 +273,39 @@ def merge_upsert(
     callers see the old version until the commit instant and the new
     one after — never a mix, never missing files.
     """
-    n_updates = updates.count()
-    n_keys = updates.select(*key).distinct().count()
-    if n_updates != n_keys:
+    _check_key_unique(updates, key, "update batch must be key-unique on")
+    _merge(spark, path, key, lambda target: updates, allow_new_columns)
+
+
+def _check_key_unique(df: DataFrame, key: list[str], what: str) -> None:
+    """Raise unless ``df`` has one row per ``key`` — rows and distinct
+    key structs counted in ONE aggregate pass (a struct is never NULL,
+    so NULL keys count as one distinct value, as ``distinct()`` does)."""
+    n_rows, n_keys = df.agg(
+        F.count(F.lit(1)), F.count_distinct(F.struct(*key))
+    ).first()
+    if n_rows != n_keys:
         raise ValueError(
-            f"update batch must be key-unique on {key}: "
-            f"{n_updates} rows, {n_keys} distinct keys"
+            f"{what} {key}: {n_rows} rows, {n_keys} distinct keys"
         )
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    key: list[str],
+    updates_from: Callable[[DataFrame], DataFrame],
+    allow_new_columns: bool = False,
+) -> None:
+    """The SCD-1 merge of :func:`merge_upsert`, with the update batch
+    built by ``updates_from(target)`` from the version read UNDER the
+    writer lock — a batch derived from the target (``refresh_rollup``)
+    then cannot lose a commit that landed before the lock was taken."""
     if not is_managed(path):
         _migrate_legacy(path)
     with table_lock(path):
         target = read_table(spark, path)
+        updates = updates_from(target)
         missing = set(target.columns) - set(updates.columns)
         added = set(updates.columns) - set(target.columns)
         if missing:
@@ -362,53 +380,54 @@ def scd2_merge(
     merge, and the commit is the same atomic manifest swap as
     ``merge_upsert``.
     """
-    n_updates = updates.count()
-    n_keys = updates.select(*key).distinct().count()
-    if n_updates != n_keys:
-        raise ValueError(
-            f"update batch must be key-unique on {key}: "
-            f"{n_updates} rows, {n_keys} distinct keys"
-        )
-    target = read_table(spark, path)
-    attrs = [c for c in updates.columns if c not in key]
-    eff = F.lit(effective_ts).cast("timestamp")
-
-    cur = target.filter(F.col("is_current"))
-    hist = target.filter(~F.col("is_current"))
-    # Presence markers: never-null columns on each side, so outer-join
-    # row provenance doesn't depend on attr/key nullability.
-    c = cur.withColumn("__c", F.lit(True)).alias("c")
-    u = updates.withColumn("__u", F.lit(True)).alias("u")
-    cond = F.expr(" AND ".join(f"c.{k} <=> u.{k}" for k in key))
-    joined = c.join(u, cond, "full_outer")
-
-    differs = F.lit(False)
-    for a in attrs:
-        differs = differs | ~F.col(f"c.{a}").eqNullSafe(F.col(f"u.{a}"))
-    has_c = F.col("c.__c").isNotNull()
-    has_u = F.col("u.__u").isNotNull()
-
-    cur_cols = [F.col(f"c.{col}").alias(col) for col in cur.columns]
-    # 1) current rows that stay open: no update, or update equal
-    kept = joined.filter(has_c & (~has_u | ~differs)).select(*cur_cols)
-    # 2) current rows closed by a differing update
-    closed = joined.filter(has_c & has_u & differs).select(
-        *[F.col(f"c.{col}").alias(col) for col in cur.columns
-          if col not in ("valid_to", "is_current")],
-        eff.alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    ).select(*[F.col(col) for col in cur.columns])
-    # 3) new open rows: new key, or differing update
-    fresh = joined.filter(has_u & (~has_c | differs)).select(
-        *[F.col(f"u.{k}").alias(k) for k in key],
-        *[F.col(f"u.{a}").alias(a) for a in attrs],
-        eff.alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    ).select(*[F.col(col) for col in cur.columns])
-
-    merged = hist.unionByName(kept).unionByName(closed).unionByName(fresh)
+    _check_key_unique(updates, key, "update batch must be key-unique on")
+    # read the target UNDER the lock: a commit landing between read
+    # and swap would otherwise be silently dropped
     with table_lock(path):
+        target = read_table(spark, path)
+        attrs = [c for c in updates.columns if c not in key]
+        eff = F.lit(effective_ts).cast("timestamp")
+
+        cur = target.filter(F.col("is_current"))
+        hist = target.filter(~F.col("is_current"))
+        # Presence markers: never-null columns on each side, so
+        # outer-join row provenance doesn't depend on attr/key
+        # nullability.
+        c = cur.withColumn("__c", F.lit(True)).alias("c")
+        u = updates.withColumn("__u", F.lit(True)).alias("u")
+        cond = F.expr(" AND ".join(f"c.{k} <=> u.{k}" for k in key))
+        joined = c.join(u, cond, "full_outer")
+
+        differs = F.lit(False)
+        for a in attrs:
+            differs = differs | ~F.col(f"c.{a}").eqNullSafe(
+                F.col(f"u.{a}")
+            )
+        has_c = F.col("c.__c").isNotNull()
+        has_u = F.col("u.__u").isNotNull()
+
+        cur_cols = [F.col(f"c.{col}").alias(col) for col in cur.columns]
+        # 1) current rows that stay open: no update, or update equal
+        kept = joined.filter(has_c & (~has_u | ~differs)).select(*cur_cols)
+        # 2) current rows closed by a differing update
+        closed = joined.filter(has_c & has_u & differs).select(
+            *[F.col(f"c.{col}").alias(col) for col in cur.columns
+              if col not in ("valid_to", "is_current")],
+            eff.alias("valid_to"),
+            F.lit(False).alias("is_current"),
+        ).select(*[F.col(col) for col in cur.columns])
+        # 3) new open rows: new key, or differing update
+        fresh = joined.filter(has_u & (~has_c | differs)).select(
+            *[F.col(f"u.{k}").alias(k) for k in key],
+            *[F.col(f"u.{a}").alias(a) for a in attrs],
+            eff.alias("valid_from"),
+            F.lit(None).cast("timestamp").alias("valid_to"),
+            F.lit(True).alias("is_current"),
+        ).select(*[F.col(col) for col in cur.columns])
+
+        merged = (
+            hist.unionByName(kept).unionByName(closed).unionByName(fresh)
+        )
         version = _new_version()
         _write_version(merged, path, version)
         _commit(path, version)
@@ -499,38 +518,41 @@ def cluster_table(
             f"(partition spec {part}); cluster within partitions via a "
             "per-partition rewrite instead"
         )
-    df = read_table(spark, path)
+    with table_lock(path):
+        df = read_table(spark, path)
 
-    def _as_long(c: str):
-        dt = dict(df.dtypes)[c]
-        col = F.col(c)
-        return F.unix_timestamp(col) if dt.startswith("timestamp") else col.cast("long")
+        def _as_long(c: str):
+            dt = dict(df.dtypes)[c]
+            col = F.col(c)
+            if dt.startswith("timestamp"):
+                return F.unix_timestamp(col)
+            return col.cast("long")
 
-    stats = df.agg(
-        *(F.min(_as_long(c)).alias(f"mn_{i}") for i, c in enumerate(cols)),
-        *(F.max(_as_long(c)).alias(f"mx_{i}") for i, c in enumerate(cols)),
-    ).first()
+        stats = df.agg(
+            *(F.min(_as_long(c)).alias(f"mn_{i}") for i, c in enumerate(cols)),
+            *(F.max(_as_long(c)).alias(f"mx_{i}") for i, c in enumerate(cols)),
+        ).first()
 
-    def _bucket(c: str, i: int):
-        mn, mx = stats[f"mn_{i}"], stats[f"mx_{i}"]
-        span = max(1, mx - mn)
-        return F.least(
-            F.lit(65535),
-            ((_as_long(c) - F.lit(mn)) * 65535 / F.lit(span)).cast("long"),
+        def _bucket(c: str, i: int):
+            mn, mx = stats[f"mn_{i}"], stats[f"mx_{i}"]
+            span = max(1, mx - mn)
+            return F.least(
+                F.lit(65535),
+                ((_as_long(c) - F.lit(mn)) * 65535 / F.lit(span)).cast("long"),
+            )
+
+        z = _spread16(_bucket(cols[0], 0)).bitwiseOR(
+            F.shiftleft(_spread16(_bucket(cols[1], 1)), 1)
         )
-
-    z = _spread16(_bucket(cols[0], 0)).bitwiseOR(
-        F.shiftleft(_spread16(_bucket(cols[1], 1)), 1)
-    )
-    version = _new_version()
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.parquet(os.path.join(path, version))
-    )
-    _commit(path, version)
+        version = _new_version()
+        (
+            df.withColumn("__z", z)
+            .repartitionByRange(n_files, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__z")
+            .write.parquet(os.path.join(path, version))
+        )
+        _commit(path, version)
 
 
 def refresh_rollup(
@@ -559,24 +581,23 @@ def refresh_rollup(
     the manifest-swap versioning (each refresh lands as one committed
     version) and an upstream batch id when replays are possible.
     """
-    n_delta = delta_agg.count()
-    n_keys = delta_agg.select(*key).distinct().count()
-    if n_delta != n_keys:
-        raise ValueError(
-            f"delta batch must be pre-aggregated to the rollup grain "
-            f"{key}: {n_delta} rows, {n_keys} distinct keys"
+    _check_key_unique(
+        delta_agg, key, "delta batch must be pre-aggregated to the rollup"
+        " grain"
+    )
+
+    def folded(target: DataFrame) -> DataFrame:
+        t, d = target.alias("t"), delta_agg.alias("d")
+        refreshed = t.join(d, key, "inner").select(
+            *[F.col(f"t.{k}").alias(k) for k in key],
+            *[
+                (F.col(f"t.{m}") + F.col(f"d.{m}")).alias(m)
+                for m in measures
+            ],
         )
-    target = read_table(spark, path)
-    t, d = target.alias("t"), delta_agg.alias("d")
-    touched = t.join(d, key, "inner")
-    refreshed = touched.select(
-        *[F.col(f"t.{k}").alias(k) for k in key],
-        *[
-            (F.col(f"t.{m}") + F.col(f"d.{m}")).alias(m)
-            for m in measures
-        ],
-    )
-    new_keys = d.join(t.select(*key), key, "left_anti").select(
-        *key, *measures
-    )
-    merge_upsert(spark, path, refreshed.unionByName(new_keys), key)
+        new_keys = d.join(t.select(*key), key, "left_anti").select(
+            *key, *measures
+        )
+        return refreshed.unionByName(new_keys)
+
+    _merge(spark, path, key, folded)

@@ -1,6 +1,7 @@
 """Shared test/verification utilities: canonical frame comparison
 (mirrors the driver's row-count + schema + order-insensitive value-hash
-gate) and the events replay harness for streaming tests.
+gate — the one hasher, shared by tier-1 and scripts/check_oracle.py)
+and the events replay harness for streaming tests.
 """
 
 from __future__ import annotations
@@ -18,9 +19,18 @@ def canon_cell(v) -> str:
         return "NULL"
     if isinstance(v, float):
         if math.isnan(v):
+            # NaN→NULL is representation-forced, not a leniency: pandas
+            # float64 (the dtype both spark.toPandas() and duckdb.df()
+            # produce) stores SQL NULL as NaN, so the two are already
+            # indistinguishable by the time any pandas-based hasher
+            # sees the cell.
             return "NULL"
-        if v == 0.0:
-            return "0.0"  # normalize -0.0
+        # NO -0.0 normalization: the gate this mirrors is signed-zero-
+        # strict (repr(-0.0) == '-0.0' != '0.0'), and a fold here once
+        # masked a real deterministic red for two rounds (q_stats_fdr,
+        # VERDICT r7 §What's wrong #1/#2).  Signed-zero divergences
+        # must be fixed at the query's emit side (+ 0.0 on both
+        # engines), never in the hasher.
         return repr(v)
     if isinstance(v, pd.Timestamp):
         return v.isoformat()

@@ -12,58 +12,19 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import hashlib
-import math
 import os
 import sys
 import time
 import traceback
 
 import duckdb
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from polybot_data_etl_spark.catalog import TABLES
 from polybot_data_etl_spark.session import build_session
+from polybot_data_etl_spark.testing import canon_frame
 from __spark_entry__ import oracle_sql, queries
-
-
-def canon_cell(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            # NaN→NULL is representation-forced, not a leniency: pandas
-            # float64 (the dtype both spark.toPandas() and duckdb.df()
-            # produce) stores SQL NULL as NaN, so the two are already
-            # indistinguishable by the time any pandas-based hasher —
-            # ours or the driver's — sees the cell.
-            return "NULL"
-        # NO -0.0 normalization: the driver's hasher is signed-zero-
-        # strict (repr(-0.0) == '-0.0' != '0.0'), and the old fold here
-        # masked a real deterministic driver red for two rounds
-        # (q_stats_fdr, VERDICT r7 §What's wrong #1/#2).  Signed-zero
-        # divergences must be fixed at the query's emit side (+ 0.0 on
-        # both engines), never in the hasher.
-        return repr(v)
-    if isinstance(v, pd.Timestamp):
-        return v.isoformat()
-    if isinstance(v, bool):
-        return str(bool(v))
-    return str(v)
-
-
-def canon_frame(df: pd.DataFrame) -> tuple[int, list[str], str, list[str]]:
-    """Return (row_count, sorted columns, value hash, sample rows)."""
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for tup in df.itertuples(index=False, name=None):
-        rows.append("\x1f".join(canon_cell(v) for v in tup))
-    rows.sort()
-    h = hashlib.md5("\x1e".join(rows).encode()).hexdigest()
-    return len(rows), cols, h, rows[:5]
 
 
 def dtype_class(dt) -> str:
@@ -83,7 +44,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="0.001")
     ap.add_argument("-q", "--query", action="append", default=None)
-    ap.add_argument("--keep-going", action="store_true", default=True)
     args = ap.parse_args()
     sf_dir = f"/root/testdata/sf{args.sf}"
 
@@ -145,10 +105,6 @@ def main() -> int:
             print(f"  types spark={stypes} duck={dtypes}")
             print(f"  hash  spark={shash} duck={dhash}")
             if sn and dn and scols == dcols:
-                sset, dset = set(), set()
-                _, _, _, _ = sn, dn, srows, drows
-                for r in srows:
-                    sset.add(r)
                 print("  spark sample:", srows[:3])
                 print("  duck  sample:", drows[:3])
     print(

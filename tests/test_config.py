@@ -45,3 +45,22 @@ def test_env_reads_confined_to_config_boundary():
     ).stdout.splitlines()
     allowed = {"config.py", "session.py"}
     assert all(os.path.basename(p) in allowed for p in out), out
+
+
+def test_build_session_master_from_engine_config(spark, monkeypatch):
+    """build_session takes its default master from EngineConfig, so a
+    malformed SPARK_GRAFT_CPUS raises the named ValueError instead of
+    reaching Spark as ``local[eight]``; a SPARK_GRAFT_SF_DIR naming no
+    directory does not make it fail."""
+    from polybot_data_etl_spark.session import build_session
+
+    for bad in ("eight", "-4"):
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_CPUS", bad)
+            with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+                build_session()
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/no/such/dir")
+    # same app name and partitions as the fixture: getOrCreate re-applies
+    # only runtime settings, all equal to the fixture's
+    s = build_session(app_name="polyspark-tests", shuffle_partitions=8)
+    assert s.sparkContext.applicationId == spark.sparkContext.applicationId

@@ -26,8 +26,8 @@ def clean_memo():
 
 
 def test_memo_keys_isolate(spark, tmp_path, clean_memo):
-    """Different (sf_dir, n_buckets) keys must not share cut points:
-    a fixture swap or a bucket-count change re-samples; the same key
+    """Different (sf_dir, grid) keys must not share cut points:
+    a fixture swap or a grid change re-samples; the same key
     re-uses.  Also pins the dead-session eviction sweep."""
     calls = {"n": 0}
 

@@ -29,6 +29,43 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
     assert ok, f"{name}: {why}"
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_agg_abc",
+        "q_agg_rfm",
+        "q_dq_id_gaps",
+        "q_dq_rle",
+        "q_win_dist_scaled",
+        "q_win_weighted_median_scaled",
+    ],
+)
+def test_bucketed_plan_at_forced_scale_matches_oracle(
+    spark, duck, sf_dir, monkeypatch, name
+):
+    """The bucketed two-pass plans derive more than 32 buckets only
+    above ~8M rows, which no fixture reaches.  One target row per
+    bucket forces that branch at fixture size (128-1024 buckets: the
+    count doubles past the row count up to the GRID cap) and the
+    result must still hash-match the query's DuckDB oracle."""
+    from polybot_data_etl_spark.plans import bounds
+
+    counts = []
+    real_cuts = bounds.grid_cuts
+
+    def spy(grid, n):
+        counts.append(n)
+        return real_cuts(grid, n)
+
+    monkeypatch.setattr(bounds, "TARGET_ROWS", 1)
+    monkeypatch.setattr(bounds, "grid_cuts", spy)
+    spark_pd = registry.queries()[name](spark, sf_dir).toPandas()
+    assert counts and min(counts) >= 128, counts
+    duck_pd = duck.execute(ORACLES[name]).fetchdf()
+    ok, why = frames_match(spark_pd, duck_pd)
+    assert ok, f"{name}: {why}"
+
+
 def test_every_oracle_has_query():
     assert set(ORACLES) <= set(registry.queries())
 

@@ -4,6 +4,7 @@ partition-overwrite isolation."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -533,3 +534,102 @@ def test_refresh_rollup_multi_batch_sequence(spark, sf_dir, tmp_path):
     ).toPandas()
     ok, why = frames_match(got, want)
     assert ok, why
+
+
+@pytest.mark.parametrize(
+    "writer", ["scd2_merge", "cluster_table", "refresh_rollup"]
+)
+def test_writer_reads_target_under_lock(spark, tmp_path, monkeypatch, writer):
+    """Every mutation must resolve its target version UNDER the writer
+    lock: a commit that lands while the writer waits for the lock must
+    survive the writer's own commit.  Deterministic form of the race:
+    the patched lock lets a second writer commit on entry, then takes
+    the real lock."""
+    path = str(tmp_path / writer)
+    if writer == "scd2_merge":
+        repo.create_scd2_table(
+            spark.createDataFrame([(1, "x"), (2, "x")], "k int, a string"),
+            path,
+            "2024-01-01 00:00:00",
+        )
+        # the second writer inserts open key 9
+        def second(cur):
+            return cur.unionByName(
+                cur.filter("k = 1").withColumn("k", F.lit(9))
+            )
+
+        def run():
+            batch = spark.createDataFrame([(1, "y")], "k int, a string")
+            repo.scd2_merge(spark, path, batch, ["k"], "2024-02-01 00:00:00")
+
+        want = {(1, "x", False), (1, "y", True), (2, "x", True),
+                (9, "x", True)}
+
+        def got():
+            return {
+                (r.k, r.a, r.is_current)
+                for r in repo.read_table(spark, path).collect()
+            }
+    elif writer == "cluster_table":
+        repo.create_table(
+            spark.range(20).selectExpr("id AS a", "id * 7 % 20 AS b"), path
+        )
+
+        def second(cur):
+            return cur.unionByName(spark.createDataFrame([(99, 99)], "a long, b long"))
+
+        def run():
+            repo.cluster_table(spark, path, ["a", "b"], n_files=2)
+
+        want = {(i, i * 7 % 20) for i in range(20)} | {(99, 99)}
+
+        def got():
+            return {(r.a, r.b) for r in repo.read_table(spark, path).collect()}
+    else:
+        repo.create_table(
+            spark.createDataFrame([(1, 10), (2, 10)], "k int, n long"), path
+        )
+        # the second writer's refresh adds 5 to key 1
+        def second(cur):
+            return cur.withColumn(
+                "n", F.expr("CASE WHEN k = 1 THEN n + 5 ELSE n END")
+            )
+
+        def run():
+            delta = spark.createDataFrame([(1, 1), (3, 1)], "k int, n long")
+            repo.refresh_rollup(spark, path, delta, ["k"], ["n"])
+
+        want = {(1, 16), (2, 10), (3, 1)}
+
+        def got():
+            return {(r.k, r.n) for r in repo.read_table(spark, path).collect()}
+
+    real_lock = repo.table_lock
+    entered = []
+
+    @contextlib.contextmanager
+    def racing_lock(p, *args, **kwargs):
+        if not entered:
+            entered.append(p)
+            version = repo._new_version()
+            repo._write_version(
+                second(repo.read_table(spark, p)), p, version
+            )
+            repo._commit(p, version)
+        with real_lock(p, *args, **kwargs):
+            yield
+
+    monkeypatch.setattr(repo, "table_lock", racing_lock)
+    run()
+    assert entered, f"{writer} never took the writer lock"
+    assert got() == want
+
+
+def test_key_uniqueness_counts_null_keys_once(spark):
+    """The one-pass uniqueness check keeps distinct()'s NULL handling:
+    two NULL keys are one key (rejected), NULL next to 1 is two."""
+    dup = spark.createDataFrame([(None, 1), (None, 2)], "k int, v int")
+    with pytest.raises(ValueError, match="2 rows, 1 distinct keys"):
+        repo._check_key_unique(dup, ["k"], "batch must be unique on")
+    ok = spark.createDataFrame([(None, 1), (1, 2)], "k int, v int")
+    repo._check_key_unique(ok, ["k"], "batch must be unique on")

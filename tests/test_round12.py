@@ -22,7 +22,7 @@ def test_flipped_plan_bounds_memoized(spark, sf_dir):
     """VERDICT r11 §next #4 'Done' criterion: the second `queries()`
     build of each flipped name issues NO new Spark job — the
     build-time quantile pass (measured 4-7 s cold at sf0.1 across the
-    four) runs once per (session, sf_dir, n_buckets) and later plan
+    four) runs once per (session, sf_dir) and later plan
     constructions re-use the cut-point literals."""
     from polybot_data_etl_spark.functions.dedup import clear_pair_cache
     from polybot_data_etl_spark.registry import queries

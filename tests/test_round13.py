@@ -54,7 +54,7 @@ def test_bucket_index_sql_non_finite(spark):
     salt = [inf, -inf, nan, None]
     vals = [float(i) for i in range(40)] + salt * 20
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    sampled = grid_cuts(probe_rows_and_grid(df, "v"), 32)
+    sampled = grid_cuts(probe_rows_and_grid(df, {"b": "v"})["grids"]["b"], 32)
     for cuts in (sampled, [-inf, -1.0, 0.5, inf, nan]):
         got = df.select(
             F.expr(bucket_index_sql(cuts, "v")).alias("ladder"),
@@ -97,7 +97,7 @@ def test_grid_cuts_subsample_is_exact_quantile_set(spark, sf_dir):
     )
 
     base = table(spark, sf_dir, "lineitem").select("l_orderkey")
-    probe = probe_rows_and_grid(base, "l_orderkey")
+    grid = probe_rows_and_grid(base, {"b": "l_orderkey"})["grids"]["b"]
     n = 32
     qs = [i / n for i in range(1, n)]
     direct = sorted(
@@ -107,7 +107,7 @@ def test_grid_cuts_subsample_is_exact_quantile_set(spark, sf_dir):
             ).first()["b"]
         )
     )
-    assert grid_cuts(probe, n) == direct
+    assert grid_cuts(grid, n) == direct
 
 
 def test_basket_tiled_pairs_bit_identical(spark):
@@ -260,21 +260,3 @@ def test_pagerank_fold_dangling_src(spark):
     want = sorted(map(tuple, _unfolded_pagerank(edges, nodes).collect()))
     assert got == want
     assert len(got) == 3
-
-
-def test_rle_derived_equals_explicit(spark, sf_dir):
-    """The derived-bucket default path must produce exactly the
-    explicit-32 plan's values (and both equal the demoted global
-    witness via the existing round-8 pins)."""
-    from polybot_data_etl_spark.functions.dq import rle_profile_bucketed
-
-    got = sorted(
-        map(tuple, rle_profile_bucketed(spark, sf_dir).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            rle_profile_bucketed(spark, sf_dir, n_buckets=32).collect(),
-        )
-    )
-    assert got == want

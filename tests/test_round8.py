@@ -1,4 +1,5 @@
-"""Round-8 additions: the bucketed RLE scale twin (#423) and the
+"""Round-8 additions: the bucketed two-pass plans (#423-#425) pinned
+to their global-window witnesses at forced bucket counts, and the
 signed-zero emit convention (SURVEY §2.1.13)."""
 
 from __future__ import annotations
@@ -6,31 +7,42 @@ from __future__ import annotations
 import pytest
 
 
-def test_rle_bucketed_matches_global_window(spark, sf_dir):
+def _rows(df) -> list:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _equal_at_floors(monkeypatch, spark, sf_dir, build, witness, floors):
+    """The REGISTERED builder at each forced bucket-count floor (every
+    fixture is far below the rows that grow the count past the floor,
+    so the floor IS the bucket count) against its global-window
+    witness; the memoized sample is shared across floors."""
+    from polybot_data_etl_spark.plans import bounds
+
+    want = _rows(witness(spark, sf_dir))
+    for k in floors:
+        monkeypatch.setattr(bounds, "MIN_BUCKETS", k)
+        assert _rows(build(spark, sf_dir)) == want, f"{k} buckets"
+
+
+def test_rle_bucketed_matches_global_window(spark, sf_dir, monkeypatch):
     """#423: the registered q_dq_rle runs the two-pass bucket-offset
     plan since the round-11 flip (per-orderkey-range lag windows + a
     bounded boundary stitch, no global data sort); the demoted
     rle_profile_global form is the independent witness — the two must
     produce the IDENTICAL 3-row report.  The boundary arithmetic
     (local run starts minus cross-bucket continuations) is exact, not
-    approximate, so this is a strict equality, not a band."""
+    approximate, so this is a strict equality, not a band — and it
+    stays exact when the bucket count (hence every boundary position)
+    changes."""
     from polybot_data_etl_spark.functions.dq import (
         q_dq_rle,
-        rle_profile_bucketed,
         rle_profile_global,
     )
 
-    a = sorted(tuple(r) for r in rle_profile_global(spark, sf_dir).collect())
-    b = sorted(tuple(r) for r in q_dq_rle(spark, sf_dir).collect())
-    assert a == b
-    # ...and stays exact when the bucket count (hence every boundary
-    # position) changes — 5 buckets puts boundaries in completely
-    # different places than 32.
-    c = sorted(
-        tuple(r)
-        for r in rle_profile_bucketed(spark, sf_dir, n_buckets=5).collect()
+    _equal_at_floors(
+        monkeypatch, spark, sf_dir, q_dq_rle, rle_profile_global,
+        (3, 5, 7, 32),
     )
-    assert a == c
 
 
 def test_rle_bucketed_no_global_data_sort(spark, sf_dir):
@@ -38,9 +50,9 @@ def test_rle_bucketed_no_global_data_sort(spark, sf_dir):
     orderkey-range bucket (its exchange hashes on bkt); the only
     unpartitioned windows/aggregates run over the ≤33-row bucket
     summary — never the fact table."""
-    from polybot_data_etl_spark.functions.dq import rle_profile_bucketed
+    from polybot_data_etl_spark.functions.dq import q_dq_rle
 
-    plan = rle_profile_bucketed(spark, sf_dir)._jdf.queryExecution().explainString(
+    plan = q_dq_rle(spark, sf_dir)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "simple"
         )
@@ -83,27 +95,24 @@ def test_rounded_float_outputs_normalize_signed_zero(spark, sf_dir):
                     )
 
 
-@pytest.mark.parametrize("n_buckets", [1, 2])
-def test_rle_bucketed_degenerate_bucket_counts(spark, sf_dir, n_buckets):
+@pytest.mark.parametrize("floor", [1, 2])
+def test_rle_bucketed_degenerate_bucket_counts(
+    spark, sf_dir, monkeypatch, floor
+):
     """1 bucket = the global form (no boundaries); 2 buckets = a single
     boundary — both must still equal the demoted global-window
     witness."""
     from polybot_data_etl_spark.functions.dq import (
-        rle_profile_bucketed,
+        q_dq_rle,
         rle_profile_global,
     )
 
-    a = sorted(tuple(r) for r in rle_profile_global(spark, sf_dir).collect())
-    b = sorted(
-        tuple(r)
-        for r in rle_profile_bucketed(
-            spark, sf_dir, n_buckets=n_buckets
-        ).collect()
+    _equal_at_floors(
+        monkeypatch, spark, sf_dir, q_dq_rle, rle_profile_global, (floor,)
     )
-    assert a == b
 
 
-def test_id_gaps_bucketed_matches_global_window(spark, sf_dir):
+def test_id_gaps_bucketed_matches_global_window(spark, sf_dir, monkeypatch):
     """#424: the registered q_dq_id_gaps runs the LEAD variant of the
     bucket-offset recipe since the round-11 flip (per-id-range lead
     windows; each bucket's last row stitches to the next non-empty
@@ -111,22 +120,17 @@ def test_id_gaps_bucketed_matches_global_window(spark, sf_dir):
     IDENTICAL five-number continuity report at wildly different
     boundary placements."""
     from polybot_data_etl_spark.functions.dq import (
-        id_gaps_bucketed,
         id_gaps_global,
+        q_dq_id_gaps,
     )
 
-    a = sorted(tuple(r) for r in id_gaps_global(spark, sf_dir).collect())
-    for n_buckets in (1, 2, 7, 32):
-        b = sorted(
-            tuple(r)
-            for r in id_gaps_bucketed(
-                spark, sf_dir, n_buckets=n_buckets
-            ).collect()
-        )
-        assert a == b, f"n_buckets={n_buckets}"
+    _equal_at_floors(
+        monkeypatch, spark, sf_dir, q_dq_id_gaps, id_gaps_global,
+        (1, 2, 3, 5, 7, 32),
+    )
 
 
-def test_rfm_scaled_matches_global_ntiles(spark, sf_dir):
+def test_rfm_scaled_matches_global_ntiles(spark, sf_dir, monkeypatch):
     """#425: the registered q_agg_rfm runs the two-pass bucketed-rank
     + closed-form ntile(5) plan since the round-11 flip (the
     entity-keyed-Aggregate case the global-window plan sweep cannot
@@ -136,22 +140,17 @@ def test_rfm_scaled_matches_global_ntiles(spark, sf_dir):
     global rank — and therefore every ntile boundary — is
     identical."""
     from polybot_data_etl_spark.operators.behavior import (
+        q_agg_rfm,
         rfm_global,
-        rfm_quintiles_scaled,
     )
 
-    a = sorted(tuple(r) for r in rfm_global(spark, sf_dir).collect())
-    for n_buckets in (1, 3, 32):
-        b = sorted(
-            tuple(r)
-            for r in rfm_quintiles_scaled(
-                spark, sf_dir, n_buckets=n_buckets
-            ).collect()
-        )
-        assert a == b, f"n_buckets={n_buckets}"
+    _equal_at_floors(
+        monkeypatch, spark, sf_dir, q_agg_rfm, rfm_global,
+        (1, 2, 3, 5, 7, 32),
+    )
     # plan shape: every data-sized rank window partitions by its value
     # bucket — no unpartitioned window over the customer frame
-    plan = rfm_quintiles_scaled(spark, sf_dir)._jdf.queryExecution().explainString(
+    plan = q_agg_rfm(spark, sf_dir)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "simple"
         )
@@ -166,8 +165,8 @@ def test_rfm_scaled_degenerate_cardinalities(spark, sf_dir, tmp_path):
     ntile(5) hands each row its own tile — the closed-form rule's
     base == 0 branch.  Exercise 1- and 3-customer fixtures."""
     from polybot_data_etl_spark.operators.behavior import (
+        q_agg_rfm,
         rfm_global,
-        rfm_quintiles_scaled,
     )
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -179,6 +178,6 @@ def test_rfm_scaled_degenerate_cardinalities(spark, sf_dir, tmp_path):
         )
         a = sorted(tuple(r) for r in rfm_global(spark, tiny).collect())
         b = sorted(
-            tuple(r) for r in rfm_quintiles_scaled(spark, tiny).collect()
+            tuple(r) for r in q_agg_rfm(spark, tiny).collect()
         )
         assert a == b, n_cust
