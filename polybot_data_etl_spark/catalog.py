@@ -2,25 +2,30 @@
 
 Mirrors the reference's typed-row-model + repository layers
 (SURVEY.md §1.1 [REC src/etl/.DS_Store:4368,4824]): every table has a
-fixed, declared schema; reads are schema-on-file (Parquet self-describes)
-with an explicit StructType assertion available for tests.
+fixed, declared schema, and `table()` reads every fixture with it after
+one parquet footer check — the one place that knows how a fixture table
+is laid out, ns/µs timestamps included.
 
-Schemas transcribed from the driver fixtures (FIXTURES.md, read from
-/root/testdata/sf0.001/*.parquet).
+Schemas transcribed from the fixture files (FIXTURES.md).
 
-Scale posture: loaders return plain `spark.read.parquet` DataFrames so
+Scale posture: loaders return plain schema-pinned parquet scans so
 Catalyst keeps full pushdown/pruning freedom; nothing here collects or
 caches implicitly. At 100 TB these same paths would point at a
-date-partitioned lake layout — `partition_hint` documents the layout each
+date-partitioned lake layout — `PARTITION_HINTS` documents the layout each
 table would use (and the sink tests in tests/test_sources.py exercise
 `partitionBy` writes).
 """
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from polybot_data_etl_spark.plans.memo import memo
 
@@ -137,22 +142,21 @@ PARTITION_HINTS: dict[str, str] = {
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (schema-on-file).
+    """Load one fixture table, read with its pinned schema: no schema
+    inference, so a cold table starts no Spark job.
 
-    events.ts has shipped in two physical parquet layouts across fixture
-    generations: TIMESTAMP(MICROS) (reads directly as TIMESTAMP_NTZ, the
-    pinned type) and TIMESTAMP(NANOS) (Spark 4 refuses it as a timestamp
-    unless `spark.sql.legacy.parquet.nanosAsLong` maps it to raw long).
-    We dispatch on the dtype the reader actually produced: a LongType
-    `ts` means the nanos layout, so rebuild a µs TIMESTAMP_NTZ (lossless:
-    the ns fixtures were µs-resolution, and DuckDB's ns→µs cast truncates
-    identically); a timestamp `ts` passes through untouched. The
-    nanosAsLong conf itself is set once at session construction
-    (session.build_session) — harmless on µs files, required for ns ones.
+    The parquet footer, read once inside the memoized build (`_footer`),
+    decides the layout.  A missing pinned column or a physical type that
+    does not read as the pinned type raises the named "fixture layout
+    drift" RuntimeError — given a schema, the reader would fill a
+    missing column with NULLs and read a UTC-adjusted timestamp as
+    TIMESTAMP_NTZ without complaint.  A TIMESTAMP(NANOS) column (the
+    round-1 fixture layout) is read as its raw long, which needs no
+    `nanosAsLong` setting, and rebuilt to a µs TIMESTAMP_NTZ, truncating
+    as DuckDB's ns→µs cast does.
 
-    Memoized per (session, sf_dir, name): consumers share the immutable
-    plan instead of re-paying a footer read + schema analysis (~20-90 ms
-    of Py4J) on each of the suite's ~550 calls.
+    Memoized per (session, sf_dir, name): the suite's ~550 calls share
+    one plan instead of re-paying the footer read and Py4J analysis.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -162,81 +166,82 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Lazy data-dir validation (ADVICE r4): config.from_env only checks
-    # the fixture-dir env var when it is explicitly set, so a missing
-    # machine-default dir must still fail HERE with the variable named
-    # (config.SF_DIR_ENV), not as an opaque parquet read error deep in
-    # a plan.
-    import os
-
+    # a missing default fixture dir fails here with the variable named,
+    # not as an opaque read error deep in a plan (ADVICE r4)
     if not os.path.isdir(sf_dir):
         from polybot_data_etl_spark.config import SF_DIR_ENV
 
         raise ValueError(f"{SF_DIR_ENV}={sf_dir!r} is not a directory")
-    try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    except Exception:
-        if name != "events":
-            raise
-        # External session + TIMESTAMP(NANOS) layout: the reader refuses
-        # ns timestamps unless nanosAsLong is on. Engine sessions set it
-        # at construction; cover the external-session path once here.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
+    path = f"{sf_dir}/{name}.parquet"
+    problems, nanos = _footer(path, name)
+    if problems:
+        _drift(problems)
+    schema = T.StructType(
+        [
+            T.StructField(f.name, T.LongType()) if f.name in nanos else f
+            for f in SCHEMAS[name].fields
+        ]
+    )
+    df = spark.read.schema(schema).parquet(path)
+    if nanos:
+        df = df.withColumns(
+            {
+                c: F.expr(
+                    f"timestampadd(MICROSECOND, {c} div 1000,"
+                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                )
+                for c in nanos
+            }
         )
     return df
 
 
-# Physical parquet layouts the engine's loaders understand, per column
-# that has ever drifted between fixture generations. Checked by
-# `check_fixture_layouts` — the fail-fast canary that turns a driver
-# fixture regeneration into one clear message instead of dozens of
-# opaque AnalysisExceptions deep inside query plans (the round-2
-# failure mode: events.ts silently moved ns→µs).
-_SUPPORTED_PHYSICAL: dict[tuple[str, str], tuple[str, ...]] = {
-    ("events", "ts"): ("timestamp[us]", "timestamp[ns]"),
-    ("orders", "o_orderdate"): ("timestamp[us]", "timestamp[ns]"),
-    ("lineitem", "l_shipdate"): ("timestamp[us]", "timestamp[ns]"),
-}
+def _footer(path: str, name: str) -> tuple[list[str], list[str]]:
+    """(drift problems, timestamp columns stored as ns) of ``path``'s
+    parquet footer against ``SCHEMAS[name]``.  Footer only, no data IO;
+    a directory of part files is read through its first part."""
+    try:
+        arrow_schema = ds.dataset(path, format="parquet").schema
+    except (OSError, pa.ArrowException) as exc:
+        return [f"{name}.parquet unreadable: {exc}"], []
+    problems: list[str] = []
+    nanos: list[str] = []
+    for field in SCHEMAS[name].fields:
+        i = arrow_schema.get_field_index(field.name)
+        if i < 0:
+            problems.append(f"{name}.{field.name}: column missing from fixture")
+            continue
+        physical = arrow_schema.field(i).type
+        unit = getattr(physical, "unit", None)  # timestamps only
+        try:
+            reads_as = from_arrow_type(physical, prefer_timestamp_ntz=True)
+        except TypeError:
+            reads_as = None
+        if reads_as != field.dataType or unit not in (None, "us", "ns"):
+            problems.append(
+                f"{name}.{field.name}: physical type {str(physical)!r} does"
+                f" not read as the pinned {field.dataType.simpleString()}"
+                " — fixture drifted; teach catalog.table() the new layout"
+            )
+        elif unit == "ns":
+            nanos.append(field.name)
+    return problems, nanos
+
+
+def _drift(problems: list[str]) -> None:
+    raise RuntimeError(
+        "fixture layout drift detected:\n  " + "\n  ".join(problems)
+    )
 
 
 def check_fixture_layouts(sf_dir: str) -> None:
-    """Fail fast (with the drifted column named) if any fixture parquet
-    uses a physical layout the loaders don't handle.
-
-    Reads footer metadata only (pyarrow schema, no data IO) so it is
-    cheap enough to run once per session / conftest.
-    """
-    import pyarrow.parquet as pq
-
-    problems: list[str] = []
-    for (tbl, col), allowed in _SUPPORTED_PHYSICAL.items():
-        try:
-            arrow_schema = pq.read_schema(f"{sf_dir}/{tbl}.parquet")
-        except Exception as exc:  # noqa: BLE001 — report, don't mask
-            problems.append(f"{tbl}.parquet unreadable: {exc}")
-            continue
-        if col not in arrow_schema.names:
-            problems.append(f"{tbl}.{col}: column missing from fixture")
-            continue
-        actual = str(arrow_schema.field(col).type)
-        if actual not in allowed:
-            problems.append(
-                f"{tbl}.{col}: physical type {actual!r} not in supported"
-                f" layouts {allowed} — fixture drifted; teach"
-                " catalog.table() the new layout"
-            )
+    """Run `table()`'s footer check over every table at once, naming
+    every drifted column (cheap: run once per session / conftest)."""
+    problems = [
+        p for name in TABLES for p in _footer(f"{sf_dir}/{name}.parquet", name)[0]
+    ]
     if problems:
-        raise RuntimeError(
-            "fixture layout drift detected:\n  " + "\n  ".join(problems)
-        )
+        _drift(problems)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:

@@ -1661,24 +1661,14 @@ def q_dedup_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: reuses both registered pair plans (bucketed candidate
     generation on each side), one pair-keyed join for the overlap,
-    three 1-row counts → closed-form algebra.  The two pair families
-    are INDEPENDENT job DAGs, so their cold materialization (each
-    behind its family's memoized checkpoint) is forced from two
-    threads and overlaps in the scheduler (VERDICT r5 #7) — the
-    first-consumer cost drops from sum to max of the two cold stages;
-    warm consumers hit both caches and the forcing count is a ~ms
-    scan of the tiny materialized pair blocks.  (Round 8: the old
-    extra eager localCheckpoint per side duplicated blocks the
-    parents' memo checkpoints already hold — the count() action keeps
-    the cold-overlap property without the copy.)"""
-    from concurrent.futures import ThreadPoolExecutor
-
+    three 1-row counts → closed-form algebra.  Each pair family sits
+    behind its memoized `localCheckpoint(eager=False)`; on PySpark 4.1
+    building that checkpoint already runs its upstream shuffle stages
+    (it is not deferred to the first action), so a cold build here
+    pays for both families inside the caller's job group and a warm
+    build starts nothing."""
     from polybot_data_etl_spark.functions.text import q_dedup_minhash
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        mh_f = pool.submit(lambda: q_dedup_minhash(spark, sf_dir).count())
-        ng_f = pool.submit(lambda: q_dedup_ngram(spark, sf_dir).count())
-        mh_f.result(), ng_f.result()
     # ONE full-outer join + ONE aggregate computes all three counts
     # (r12): the old shape ran the minhash pair tail twice (semi-join
     # probe + its own count), the ngram tail twice, three 1-row count

@@ -3,9 +3,13 @@ share within a SparkSession — scan frames, pair / signature / edge
 frames, CC labels and sampled bucket cut points.
 
 ``memo(spark, key, build)`` runs ``build()`` once per
-``(applicationId, *key)``.  Values are plain literals or LAZY frames
-(usually ``localCheckpoint(eager=False)``: the first action
-materializes executor-locally, later consumers read the blocks).
+``(applicationId, *key)``.  Values are plain literals or checkpointed
+frames, usually ``localCheckpoint(eager=False)``.  That call is not
+fully lazy: on PySpark 4.1 (AQE on) it runs the plan's upstream shuffle
+stages at once — ``spark.range(10).groupBy().count()
+.localCheckpoint(eager=False)`` starts one job — and only the last,
+narrow stage waits for the first action; later consumers read the
+executor-local blocks.
 
 Locking (bench.py's plan producers build concurrently):
 

@@ -6,6 +6,10 @@ timestamps are naive; DuckDB reads them naive — UTC keeps both engines'
 date arithmetic identical), and a shuffle-partition count sized for the
 active scale factor rather than Spark's default 200.
 
+Fixture layout is not a session concern: `catalog.table` reads both
+timestamp layouts with no session setting, so a plain `SparkSession`
+built elsewhere reads the same tables as one built here.
+
 At 100 TB the same code runs with cluster-master URLs and a much larger
 `shuffle_partitions` (rule of thumb: ~2-3× total executor cores, with AQE
 coalescing handling the long tail); nothing else changes.
@@ -52,11 +56,6 @@ def build_session(
         # well under this, so Catalyst auto-broadcasts them; at 100 TB only
         # genuinely small dims stay under the threshold.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # TIMESTAMP(NANOS) parquet (events.ts) reads as raw nanos engine-wide
-        # from the start of the session, so read behavior never depends on
-        # which table was read first (catalog.table rebuilds the µs
-        # timestamp; see its docstring).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Let custom Python DataSources (sources/pyds.py) receive pushed
         # filters so they can prune shards at plan time — the Python-source
         # analog of parquet partition pruning. Off by default in Spark 4.1;

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from polybot_data_etl_spark.catalog import TABLES
+from polybot_data_etl_spark.catalog import TABLES, table
 from polybot_data_etl_spark.session import build_session
 from scripts.check_oracle import canon_frame
 from __spark_entry__ import queries
@@ -53,7 +53,7 @@ def make_shuffled_copy(spark, src_dir: str, dst_dir: str) -> None:
         dst = os.path.join(dst_dir, f"{t}.parquet")
         if os.path.exists(dst):
             continue
-        df = spark.read.parquet(os.path.join(src_dir, f"{t}.parquet"))
+        df = table(spark, src_dir, t)
         cols = [F.col(c).cast("string") for c in df.columns]
         shuffled = (
             df.withColumn(

@@ -28,13 +28,13 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from polybot_data_etl_spark.catalog import TABLES
+from polybot_data_etl_spark.catalog import TABLES, table
 from polybot_data_etl_spark.session import build_session
 
 
 def make_fixtures(spark, src: str, out: str, n_rows: int) -> None:
     for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
+        df = table(spark, src, t)
         df.limit(n_rows).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"
         )

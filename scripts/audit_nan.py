@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from polybot_data_etl_spark.catalog import TABLES
+from polybot_data_etl_spark.catalog import TABLES, table
 from polybot_data_etl_spark.session import build_session
 from scripts.audit_empty import run_audit
 from scripts.audit_nulls import is_key
@@ -38,7 +38,7 @@ from scripts.audit_nulls import is_key
 
 def make_nan_fixtures(spark, src: str, out: str) -> None:
     for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
+        df = table(spark, src, t)
         key = next((c for c in df.columns if is_key(c)), df.columns[0])
         salted = F.pmod(F.hash(F.col(key)), F.lit(10)) == 0
         cols = []

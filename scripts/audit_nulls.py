@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from polybot_data_etl_spark.catalog import TABLES
+from polybot_data_etl_spark.catalog import TABLES, table
 from polybot_data_etl_spark.session import build_session
 from scripts.audit_empty import run_audit
 
@@ -46,7 +46,7 @@ def is_key(col: str) -> bool:
 
 def make_nulled_fixtures(spark, src: str, out: str) -> None:
     for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
+        df = table(spark, src, t)
         key = next(
             (c for c in df.columns if is_key(c)), df.columns[0]
         )

@@ -56,23 +56,47 @@ def test_kendall_constant_series_is_null_not_crash(spark, tmp_path):
     NULL — same hardening as the sibling welch/friedman/cramers_v."""
     from polybot_data_etl_spark.functions.stats import q_stats_kendall
 
-    pdf = pd.DataFrame(
+    _constant_orders(dates_as_text=False).to_parquet(
+        tmp_path / "orders.parquet", index=False
+    )
+    [row] = q_stats_kendall(spark, str(tmp_path)).collect()
+    assert row["n_days"] == 3
+    assert row["concordant"] == 0 and row["discordant"] == 0
+    assert row["tau_b"] is None
+
+
+def _constant_orders(dates_as_text: bool) -> pd.DataFrame:
+    """Six orders with a constant price over three days, o_orderdate
+    stored as the pinned timestamp or as ISO text."""
+    days = ["2024-01-01"] * 2 + ["2024-01-02"] * 2 + ["2024-01-03"] * 2
+    return pd.DataFrame(
         {
             "o_orderkey": range(6),
             "o_custkey": [1, 2, 1, 2, 1, 2],
-            "o_orderdate": ["2024-01-01"] * 2
-            + ["2024-01-02"] * 2
-            + ["2024-01-03"] * 2,
+            "o_orderdate": (
+                days if dates_as_text
+                else pd.to_datetime(days).astype("datetime64[us]")
+            ),
             "o_totalprice": [10.0] * 6,
             "o_orderpriority": ["1-URGENT"] * 6,
             "o_orderstatus": ["O"] * 6,
         }
     )
-    pdf.to_parquet(tmp_path / "orders.parquet", index=False)
-    [row] = q_stats_kendall(spark, str(tmp_path)).collect()
-    assert row["n_days"] == 3
-    assert row["concordant"] == 0 and row["discordant"] == 0
-    assert row["tau_b"] is None
+
+
+def test_text_dated_orders_fixture_is_named_drift(spark, tmp_path):
+    """The kendall fixture as it was first written (o_orderdate as
+    text) is off the pinned schema: the read names the column instead
+    of handing the query a string date."""
+    import pytest
+
+    from polybot_data_etl_spark.functions.stats import q_stats_kendall
+
+    _constant_orders(dates_as_text=True).to_parquet(
+        tmp_path / "orders.parquet", index=False
+    )
+    with pytest.raises(RuntimeError, match=r"orders\.o_orderdate: physical"):
+        q_stats_kendall(spark, str(tmp_path))
 
 
 def _simhash_candidate_mass(fp, combinatorial: bool) -> int:
