@@ -8,45 +8,74 @@ writes, which is exactly the surface here.
 
 Managed-table commit protocol (a minimal Delta/Iceberg-shaped layout):
 a table directory holds immutable version directories ``v-<hex>/`` plus
-a ``_MANIFEST`` file naming the current one.  Every mutation writes a
-COMPLETE new version directory first, then commits by atomically
-replacing the manifest (``os.replace`` — an atomic rename on POSIX).
-Readers resolve the manifest once and read an immutable directory, so a
-reader can never observe a half-written table; a reader that resolved
-the previous version keeps reading its (still-present) files until
-``vacuum`` reclaims them.  Writers serialize through an advisory
-``_LOCK`` mutex (``table_lock`` — exclusive-create with stale-lock
-breaking), so concurrent mutations can't race the manifest swap.  This
-is the same reader/writer isolation a transactional table format
-provides; a production deployment on an object store swaps in
-Iceberg/Delta/Hudi (or their lock services) without changing any plan
-shape here.
+a ``_MANIFEST`` file naming the current one.  A version directory is
+self-contained: its BASE files (the table as of its last full write)
+and, after keyed merges, a ``_delta/`` directory holding one
+``__seq=<n>/`` directory per merged batch (newest = highest ``n``) and
+a ``_KEY`` file naming their merge key.  A merge writes only its batch,
+as the next ``__seq``, and hard-links (``os.link``) every file of the
+previous version beside it, so it writes |batch| rows while every older
+version stays byte-for-byte intact.  A full write — ``create_table``,
+compaction, clustering, SCD-2, or a merge that FOLDS — writes the whole
+resolved table and no ``_delta``.  A merge folds when the version's
+delta bytes reach ``FOLD_RATIO`` × its base bytes, when the batch
+changes the schema, or when its key is not the deltas' key.  Every
+mutation fills a new version directory first, then commits by
+atomically replacing the manifest (``os.replace`` — an atomic rename
+on POSIX).  Readers resolve the manifest once and read an immutable
+directory, so a reader can never observe a half-written table; a reader
+that resolved the previous version keeps reading its (still-present)
+files until ``vacuum`` reclaims them.  Writers and ``vacuum`` serialize
+through an advisory ``_LOCK`` mutex (``table_lock`` — exclusive-create
+with stale-lock breaking), so concurrent mutations can't race the
+manifest swap and ``vacuum`` never deletes a version a writer is still
+filling.  This is the same reader/writer isolation a transactional
+table format provides; a production deployment on an object store swaps
+in Iceberg/Delta/Hudi (or their lock services) without changing any
+plan shape here.
 
-Scale posture: an upsert is one left-anti join (survivors) + a union —
-shuffle keyed on the merge key, broadcast when the update batch is
-small (the common case for incremental loads: a day's delta vs a full
-table).  Partition-overwrite writes only the partitions present in the
-incoming batch (`partitionOverwriteMode=dynamic`), so a daily load
-touches one date partition of a 100 TB table instead of rewriting it.
+Scale posture: a merge that does not fold costs |batch| — one write of
+the batch and one key-uniqueness pass over the written files — whatever
+the table size.  A version with deltas reads as base ⟕̸ (delta keys) ∪
+(newest delta row per key): an equi anti-join on the key (broadcast
+while the delta keys are small) plus one shuffle of the delta rows on
+the key.  The fold rule caps the deltas at the base's bytes, so a read
+touches at most twice a folded table's bytes and the amortised write
+is two to three rows per batch row.  Partition-overwrite writes only the
+partitions present in the incoming batch
+(`partitionOverwriteMode=dynamic`), so a daily load touches one date
+partition of a 100 TB table instead of rewriting it.
 """
 
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import time
 import uuid
+from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST"
 LOG = "_LOG"
 SPEC = "_SPEC"
 LOCK = "_LOCK"
+DELTA = "_delta"
+_KEY = "_KEY"
+_SEQ = "__seq"
 _VERSION_PREFIX = "v-"
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+# A merge folds once its version's delta bytes reach this multiple of
+# the base bytes (read at call time).
+FOLD_RATIO = 1.0
 
 
 def _new_version() -> str:
@@ -134,8 +163,6 @@ def table_spec(path: str) -> dict:
     at create time in ``_SPEC`` and honored by every later rewrite, so a
     table's physical layout survives merges/compaction — the same role
     as a table format's partition spec."""
-    import json
-
     spec_path = os.path.join(path, SPEC)
     if not os.path.exists(spec_path):
         return {"partition_by": []}
@@ -146,10 +173,99 @@ def table_spec(path: str) -> dict:
 def _write_version(df: DataFrame, path: str, version: str) -> None:
     """Write a version directory honoring the table's partition spec."""
     part = table_spec(path).get("partition_by", [])
+    _write(df, os.path.join(path, version), part)
+
+
+def _write(df: DataFrame, directory: str, part: list[str]) -> None:
     writer = df.write
     if part:
         writer = writer.partitionBy(*part)
-    writer.parquet(os.path.join(path, version))
+    writer.parquet(directory)
+
+
+def _data_files(root: str) -> list[str]:
+    """Parquet data files under ``root``, in hive subdirectories too,
+    but not in a version's ``_delta``."""
+    found = []
+    for d, subdirs, files in os.walk(root):
+        subdirs[:] = sorted(x for x in subdirs if x != DELTA)
+        found += [
+            os.path.join(d, f) for f in sorted(files)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return found
+
+
+def _bytes(files: list[str]) -> int:
+    return sum(map(os.path.getsize, files))
+
+
+def _scan(
+    spark: SparkSession, directory: str, files: list[str], partition=()
+) -> DataFrame:
+    """Read ``directory`` with the Spark schema its writer recorded in
+    the footer of ``files[0]``, plus the ``partition`` fields (hive
+    directory names hold those, and Spark infers any not given), so the
+    read starts no schema-inference job.  Files a non-Spark writer made
+    record no schema and are read with inference."""
+    meta = (pq.read_metadata(files[0]).metadata or {}) if files else {}
+    if _SPARK_SCHEMA not in meta:
+        return spark.read.parquet(directory)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
+    return spark.read.schema(
+        StructType(schema.fields + list(partition))
+    ).parquet(directory)
+
+
+def _delta_key(vdir: str) -> list[str] | None:
+    """The merge key of ``vdir``'s deltas; None when it has none."""
+    try:
+        with open(os.path.join(vdir, DELTA, _KEY)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _read_version(spark: SparkSession, vdir: str) -> DataFrame:
+    """The table a version directory holds: its base, or, when it has
+    deltas, base ⟕̸ (delta keys) ∪ (newest delta row per key).  Keys
+    match with ``=`` as the merge's anti-join does, so a row with a NULL
+    key column is never replaced and every such row survives."""
+    base = _scan(spark, vdir, _data_files(vdir))
+    key = _delta_key(vdir)
+    if key is None:
+        return base
+    # __seq comes from the directory names; the base's schema pins the
+    # partition columns' types.
+    delta = spark.read.schema(base.schema).parquet(os.path.join(vdir, DELTA))
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in key])
+    live = (
+        delta.withColumn("__newest", F.max(_SEQ).over(Window.partitionBy(*key)))
+        .where((F.col(_SEQ) == F.col("__newest")) | null_key)
+        .drop(_SEQ, "__newest")
+    )
+    return base.join(delta.select(*key), key, "left_anti").unionByName(live)
+
+
+def _next_seq(vdir: str) -> int:
+    ddir = os.path.join(vdir, DELTA)
+    seqs = [
+        int(e.split("=", 1)[1])
+        for e in (os.listdir(ddir) if os.path.isdir(ddir) else [])
+        if e.startswith(f"{_SEQ}=")
+    ]
+    return max(seqs, default=0) + 1
+
+
+def _link_version(src: str, dst: str) -> None:
+    """Hard-link every file of version directory ``src`` into ``dst``,
+    mirroring its subdirectories (files are never rewritten in place,
+    so the two versions share inodes safely)."""
+    for d, _, files in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(d, src))
+        os.makedirs(out, exist_ok=True)
+        for f in files:
+            os.link(os.path.join(d, f), os.path.join(out, f))
 
 
 def create_table(
@@ -161,8 +277,6 @@ def create_table(
     every version directory is hive-partitioned on these columns, so
     scans with partition-key predicates prune at the directory level
     (PartitionFilters) in every snapshot, including time-travel reads."""
-    import json
-
     os.makedirs(path, exist_ok=True)
     if partition_by:
         tmp = os.path.join(path, f".{SPEC}.{uuid.uuid4().hex[:8]}")
@@ -191,7 +305,10 @@ def read_table(
 ) -> DataFrame:
     """DataFrame over the committed version (snapshot isolation: the
     resolved version directory is immutable, later commits don't touch
-    it).
+    it).  A version with deltas reads as base ⟕̸ (delta keys) ∪ (newest
+    delta row per key); one without reads its files as they are.  The
+    schema comes from a data file's footer, so resolving a table starts
+    no Spark job.
 
     Time travel: ``version`` pins a snapshot — a version name from
     ``list_versions`` or a negative index into it (``-2`` = the commit
@@ -210,20 +327,23 @@ def read_table(
                 f"version {version!r} not available (vacuumed or never "
                 f"committed); on disk: {versions}"
             )
-    return spark.read.parquet(os.path.join(path, v))
+    return _read_version(spark, os.path.join(path, v))
 
 
 def vacuum(path: str) -> list[str]:
     """Delete all non-current version directories (breaks readers still
     pinned to them — run only after in-flight reads drain, like any
-    table format's retention window). Returns what was removed."""
-    keep = current_version(path)
-    removed = []
-    for entry in os.listdir(path):
-        full = os.path.join(path, entry)
-        if entry.startswith(_VERSION_PREFIX) and entry != keep and os.path.isdir(full):
-            shutil.rmtree(full)
-            removed.append(entry)
+    table format's retention window). Returns what was removed.  Holds
+    the writer lock, so a version a writer is still filling (or linking
+    from) is never deleted under it."""
+    with table_lock(path):
+        keep = current_version(path)
+        removed = []
+        for entry in os.listdir(path):
+            full = os.path.join(path, entry)
+            if entry.startswith(_VERSION_PREFIX) and entry != keep and os.path.isdir(full):
+                shutil.rmtree(full)
+                removed.append(entry)
     return removed
 
 
@@ -263,18 +383,23 @@ def merge_upsert(
     a different, destructive operation and stays explicit); without the
     flag, any schema difference raises.
 
-    Plan: target ⟕̸ updates (left-anti on the key — keeps survivors)
-    ∪ updates.  The updates side is deduplicated on the key first
-    (last-write-wins needs an explicit ordering column; here the batch
-    is required to be key-unique, asserted).
+    Merge-on-read: the batch is written once, as the next
+    ``_delta/__seq=<n>`` of a new version directory, and checked to be
+    key-unique over those files — the rows that get committed, even
+    when ``updates`` is non-deterministic; a duplicate key removes the
+    directory and raises ValueError before any commit.  Every file of
+    the current version is then hard-linked beside it and the manifest
+    swapped, so concurrent ``read_table`` callers see the old version
+    until the commit instant and the new one after — never a mix.
+    ``read_table`` resolves target ⟕̸ (delta keys) ∪ (newest delta row
+    per key), the same left-anti + union a full rewrite would write.
 
-    Commit: the merged result is fully written to a NEW version
-    directory before the manifest swap, so concurrent ``read_table``
-    callers see the old version until the commit instant and the new
-    one after — never a mix, never missing files.
+    Fold: the merge writes the full merged table instead of a delta
+    when the version's delta bytes reach ``FOLD_RATIO`` × its base
+    bytes, when the batch adds a column or changes a column's type, or
+    when ``key`` is not the key of the version's deltas.
     """
-    _check_key_unique(updates, key, "update batch must be key-unique on")
-    _merge(spark, path, key, lambda target: updates, allow_new_columns)
+    _merge(spark, path, key, updates, allow_new_columns)
 
 
 def _check_key_unique(df: DataFrame, key: list[str], what: str) -> None:
@@ -294,20 +419,27 @@ def _merge(
     spark: SparkSession,
     path: str,
     key: list[str],
-    updates_from: Callable[[DataFrame], DataFrame],
+    updates: DataFrame | Callable[[DataFrame], DataFrame],
     allow_new_columns: bool = False,
+    what: str = "update batch must be key-unique on",
 ) -> None:
-    """The SCD-1 merge of :func:`merge_upsert`, with the update batch
-    built by ``updates_from(target)`` from the version read UNDER the
-    writer lock — a batch derived from the target (``refresh_rollup``)
-    then cannot lose a commit that landed before the lock was taken."""
+    """The SCD-1 merge of :func:`merge_upsert`.  ``updates`` may be a
+    function of the target, called on the version read UNDER the writer
+    lock — a batch derived from the target (``refresh_rollup``) then
+    cannot lose a commit that landed before the lock was taken.
+    ``what`` opens the error raised for a batch that is not key-unique."""
+    key = list(key)
     if not is_managed(path):
         _migrate_legacy(path)
     with table_lock(path):
-        target = read_table(spark, path)
-        updates = updates_from(target)
-        missing = set(target.columns) - set(updates.columns)
-        added = set(updates.columns) - set(target.columns)
+        prev = os.path.join(path, current_version(path))
+        if callable(updates):
+            updates = updates(_read_version(spark, prev))
+        # The base's schema is the table's: a schema change folds, so
+        # every delta shares it.
+        table = _scan(spark, prev, _data_files(prev))
+        missing = set(table.columns) - set(updates.columns)
+        added = set(updates.columns) - set(table.columns)
         if missing:
             raise ValueError(
                 f"update batch lacks table columns {sorted(missing)}; "
@@ -318,12 +450,50 @@ def _merge(
                 f"update batch adds columns {sorted(added)}; pass "
                 "allow_new_columns=True to evolve the table schema"
             )
-        merged = target.join(
-            updates.select(*key), key, "left_anti"
-        ).unionByName(updates, allowMissingColumns=bool(added))
+        part = table_spec(path).get("partition_by", [])
         version = _new_version()
-        _write_version(merged, path, version)
-        _commit(path, version)
+        vdir = os.path.join(path, version)
+        seq_dir = os.path.join(vdir, DELTA, f"{_SEQ}={_next_seq(prev)}")
+        _write(updates, seq_dir, part)
+        files = _data_files(seq_dir)
+        # An empty batch under a partition spec writes no file.
+        batch = (
+            _scan(spark, seq_dir, files, [updates.schema[c] for c in part])
+            if files else updates
+        )
+        try:
+            _check_key_unique(batch, key, what)
+        except ValueError:
+            shutil.rmtree(vdir)
+            raise
+        types = dict(table.dtypes)
+        if not (
+            added
+            or any(types.get(c, t) != t for c, t in updates.dtypes)
+            or _delta_key(prev) not in (None, key)
+        ):
+            if not files:
+                shutil.rmtree(os.path.join(vdir, DELTA))
+            _link_version(prev, vdir)
+            key_file = os.path.join(vdir, DELTA, _KEY)
+            if files and not os.path.exists(key_file):
+                with open(key_file, "w") as f:
+                    json.dump(key, f)
+            if _bytes(_data_files(os.path.join(vdir, DELTA))) < (
+                FOLD_RATIO * _bytes(_data_files(vdir))
+            ):
+                _commit(path, version)
+                return
+            merged = _read_version(spark, vdir)
+        else:
+            # the schema or the key changes: the deltas cannot share it
+            merged = _read_version(spark, prev).join(
+                batch.select(*key), key, "left_anti"
+            ).unionByName(batch, allowMissingColumns=bool(added))
+        full = _new_version()
+        _write_version(merged, path, full)
+        shutil.rmtree(vdir)
+        _commit(path, full)
 
 
 def overwrite_partitions(
@@ -436,10 +606,11 @@ def scd2_merge(
 def compact_table(
     spark: SparkSession, path: str, target_file_rows: int = 1_000_000
 ) -> int:
-    """Small-file compaction: rewrite the current version into
+    """Small-file compaction: rewrite the current version, resolved
+    (its deltas folded in, as ``read_table`` reads it), into
     ``ceil(rows / target_file_rows)`` evenly-sized files and commit it
-    as a new version (readers pinned to the old snapshot are
-    untouched; ``vacuum`` reclaims it later).
+    as a new version with no deltas (readers pinned to the old snapshot
+    are untouched; ``vacuum`` reclaims it later).
 
     The small-files problem is THE silent killer of a 100 TB lake —
     every incremental ``merge_upsert``/stream batch leaves another
@@ -581,10 +752,6 @@ def refresh_rollup(
     the manifest-swap versioning (each refresh lands as one committed
     version) and an upstream batch id when replays are possible.
     """
-    _check_key_unique(
-        delta_agg, key, "delta batch must be pre-aggregated to the rollup"
-        " grain"
-    )
 
     def folded(target: DataFrame) -> DataFrame:
         t, d = target.alias("t"), delta_agg.alias("d")
@@ -600,4 +767,10 @@ def refresh_rollup(
         )
         return refreshed.unionByName(new_keys)
 
-    _merge(spark, path, key, folded)
+    # A key-unique target makes the folded batch key-unique exactly when
+    # ``delta_agg`` is, so _merge's check of the written batch enforces
+    # the grain.
+    _merge(
+        spark, path, key, folded,
+        what="delta batch must be pre-aggregated to the rollup grain",
+    )

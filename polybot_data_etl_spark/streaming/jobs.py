@@ -21,20 +21,39 @@ accumulates unbounded state.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polybot_data_etl_spark import catalog
 from polybot_data_etl_spark.catalog import SCHEMAS
+
+
+def _check_drops(directory: str) -> None:
+    """Raise catalog's "fixture layout drift detected" error, naming the
+    column, when the drops already in ``directory`` do not match the
+    pinned events schema.  Given a schema, the file source itself reads
+    a missing column as NULLs and a tz-aware ``ts`` as TIMESTAMP_NTZ
+    without any error."""
+    if glob.glob(os.path.join(directory, "*.parquet")):
+        problems, _ = catalog._footer(directory, "events")
+        if problems:
+            catalog._drift(problems)
 
 
 def events_file_stream(spark: SparkSession, directory: str) -> DataFrame:
     """File-source stream of events parquet chunks (schema-declared;
-    maxFilesPerTrigger=1 so replay order maps to micro-batches).
+    maxFilesPerTrigger=1 so replay order maps to micro-batches).  The
+    drops present at stream start are footer-checked against the
+    pinned schema (``_check_drops``).
 
     Watermarks only accept TIMESTAMP (with-local-tz), so the NTZ event
     time is cast here — the engine session pins timeZone=UTC
     (session.build_session), making the cast value-preserving.
     """
+    _check_drops(directory)
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
@@ -70,6 +89,7 @@ def events_broker_stream(
             f"({max_offsets_per_trigger} < {chunk_rows})"
         )
     files_per_trigger = max_offsets_per_trigger // chunk_rows
+    _check_drops(topic_dir)
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", files_per_trigger)

@@ -74,11 +74,22 @@ def test_upsert_idempotent(spark, seeded_table):
     assert ok, why
 
 
+def _version_dirs(path):
+    return sorted(e for e in os.listdir(path) if e.startswith("v-"))
+
+
 def test_upsert_rejects_duplicate_update_keys(spark, seeded_table):
+    """A batch with a repeated key raises before any commit: the
+    version directory it was written into is removed and the manifest
+    still names the old version."""
     before = repo.read_table(spark, seeded_table)
+    versions = _version_dirs(seeded_table)
+    current = repo.current_version(seeded_table)
     dup = before.limit(1).unionAll(before.limit(1))
     with pytest.raises(ValueError, match="key-unique"):
         repo.merge_upsert(spark, seeded_table, dup, ["c_custkey"])
+    assert _version_dirs(seeded_table) == versions
+    assert repo.current_version(seeded_table) == current
 
 
 def test_concurrent_reader_snapshot_isolation(spark, seeded_table):
@@ -135,6 +146,42 @@ def test_vacuum_reclaims_old_versions(spark, seeded_table):
     assert left == [repo.current_version(seeded_table)]
     # table still reads fine after vacuum
     assert repo.read_table(spark, seeded_table).count() > 0
+
+
+def test_vacuum_waits_for_writer_lock(spark, seeded_table):
+    """vacuum takes the writer lock: a version directory a writer is
+    still filling before its manifest swap is neither deleted nor
+    raced; vacuum waits, then reclaims only the superseded version."""
+    import shutil
+    import threading
+
+    path = seeded_table
+    old = repo.current_version(path)
+    filling = repo._new_version()
+    locked, release = threading.Event(), threading.Event()
+
+    def writer():
+        with repo.table_lock(path):
+            shutil.copytree(os.path.join(path, old), os.path.join(path, filling))
+            locked.set()
+            release.wait(30)
+            repo._commit(path, filling)
+
+    removed = []
+    w = threading.Thread(target=writer)
+    w.start()
+    assert locked.wait(30)
+    v = threading.Thread(target=lambda: removed.extend(repo.vacuum(path)))
+    v.start()
+    v.join(1.0)
+    waited = v.is_alive()
+    release.set()
+    w.join(30)
+    v.join(30)
+    assert waited, "vacuum ran while a writer held the lock"
+    assert removed == [old]
+    assert _version_dirs(path) == [filling] == [repo.current_version(path)]
+    assert repo.read_table(spark, path).count() > 0
 
 
 def test_legacy_plain_parquet_migrates(spark, sf_dir, tmp_path):
@@ -633,3 +680,199 @@ def test_key_uniqueness_counts_null_keys_once(spark):
         repo._check_key_unique(dup, ["k"], "batch must be unique on")
     ok = spark.createDataFrame([(None, 1), (1, 2)], "k int, v int")
     repo._check_key_unique(ok, ["k"], "batch must be unique on")
+
+
+# --- merge-on-read: deltas, their resolution, and the fold ----------------
+
+_KV = "k long, v string"
+
+
+def _deltas(path):
+    """``__seq`` directories of the current version (0 once folded)."""
+    ddir = os.path.join(path, repo.current_version(path), repo.DELTA)
+    return sorted(os.listdir(ddir)) if os.path.isdir(ddir) else []
+
+
+def _rows(spark, path, version=None):
+    return sorted(
+        map(tuple, repo.read_table(spark, path, version).collect()),
+        key=repr,
+    )
+
+
+@pytest.fixture()
+def no_fold(monkeypatch):
+    monkeypatch.setattr(repo, "FOLD_RATIO", float("inf"))
+
+
+def test_key_updated_three_times_reads_newest(spark, tmp_path, no_fold):
+    path = str(tmp_path / "three")
+    repo.create_table(spark.createDataFrame([(1, "a"), (2, "a")], _KV), path)
+    for v in ("b", "c", "d"):
+        repo.merge_upsert(
+            spark, path, spark.createDataFrame([(1, v)], _KV), ["k"]
+        )
+    assert len([d for d in _deltas(path) if d.startswith("__seq=")]) == 3
+    assert _rows(spark, path) == [(1, "d"), (2, "a")]
+    # time travel on a version that has deltas
+    assert _rows(spark, path, -2) == [(1, "c"), (2, "a")]
+    assert _rows(spark, path, -4) == [(1, "a"), (2, "a")]
+
+
+@pytest.mark.parametrize("ratio", [float("inf"), 0.0], ids=["deltas", "folds"])
+def test_null_key_rows_all_survive(spark, tmp_path, monkeypatch, ratio):
+    """Keys match with ``=``: a NULL-key row is never replaced, so the
+    base's and every batch's NULL-key rows all survive — with deltas
+    and with a fold alike."""
+    monkeypatch.setattr(repo, "FOLD_RATIO", ratio)
+    path = str(tmp_path / "nulls")
+    repo.create_table(
+        spark.createDataFrame([(None, "base"), (1, "a")], _KV), path
+    )
+    for batch in ([(None, "d1"), (1, "b")], [(None, "d2"), (2, "c")]):
+        repo.merge_upsert(spark, path, spark.createDataFrame(batch, _KV), ["k"])
+    assert bool(_deltas(path)) == (ratio > 0)
+    assert _rows(spark, path) == sorted(
+        [(None, "base"), (None, "d1"), (None, "d2"), (1, "b"), (2, "c")],
+        key=repr,
+    )
+
+
+def test_pinned_reader_keeps_snapshot_across_fold(spark, tmp_path, monkeypatch):
+    """A delta version's base files are hard links: vacuuming the
+    version they came from leaves it readable, and a reader pinned to it
+    keeps its snapshot when a later merge folds."""
+    monkeypatch.setattr(repo, "FOLD_RATIO", float("inf"))
+    path = str(tmp_path / "pinned")
+    repo.create_table(spark.createDataFrame([(1, "a"), (2, "a")], _KV), path)
+    repo.merge_upsert(spark, path, spark.createDataFrame([(1, "b")], _KV), ["k"])
+    assert repo.vacuum(path)  # drops the version the links came from
+    pinned = repo.read_table(spark, path)
+    monkeypatch.setattr(repo, "FOLD_RATIO", 0.0)
+    repo.merge_upsert(spark, path, spark.createDataFrame([(2, "c")], _KV), ["k"])
+    assert not _deltas(path)
+    assert sorted(map(tuple, pinned.collect())) == [(1, "b"), (2, "a")]
+    assert _rows(spark, path) == [(1, "b"), (2, "c")]
+    repo.vacuum(path)
+    assert _rows(spark, path) == [(1, "b"), (2, "c")]
+
+
+def test_partitioned_table_prunes_after_delta_merge(
+    spark, sf_dir, tmp_path, no_fold
+):
+    """With deltas, the base scan (the bulk of the table) still prunes
+    on the _SPEC partition column; results match the merged rows."""
+    path = str(tmp_path / "events_mor")
+    e = table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    repo.create_table(e, path, partition_by=["event_date"])
+    upd = e.filter(F.col("event_id") == 1).withColumn("value", F.lit(123.45))
+    repo.merge_upsert(spark, path, upd, ["event_id"])
+    assert _deltas(path)
+    day = upd.select("event_date").first()[0]
+    one_day = repo.read_table(spark, path).filter(F.col("event_date") == day)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = one_day._jdf.queryExecution().explainString(mode)
+
+    def field(scan, name):
+        return next((ln for ln in scan.splitlines() if ln.startswith(name)), "")
+
+    vdir = repo.current_version(path)
+    base_scans = [
+        s for s in plan.split("Scan parquet")
+        if field(s, "Location:").endswith(f"{vdir}]")
+    ]
+    assert base_scans, plan
+    assert all(
+        "event_date" in field(s, "PartitionFilters:") for s in base_scans
+    ), plan
+    assert one_day.count() == e.filter(F.col("event_date") == day).count()
+    assert one_day.filter("event_id = 1").first().value == 123.45
+
+
+def test_new_column_merge_folds(spark, sf_dir, tmp_path, no_fold):
+    """allow_new_columns folds even when the size rule would not: the
+    new version has no deltas, earlier delta updates survive, and
+    surviving rows read NULL for the new column."""
+    path = str(tmp_path / "evolve_fold")
+    base = table(spark, sf_dir, "region")
+    repo.create_table(base, path)
+    repo.merge_upsert(
+        spark, path,
+        base.filter("r_regionkey = 1").withColumn("r_name", F.lit("DELTA")),
+        ["r_regionkey"],
+    )
+    assert _deltas(path)
+    repo.merge_upsert(
+        spark, path,
+        base.filter("r_regionkey = 0").withColumn("r_tier", F.lit("gold")),
+        ["r_regionkey"], allow_new_columns=True,
+    )
+    assert not _deltas(path)
+    got = {r.r_regionkey: r for r in repo.read_table(spark, path).collect()}
+    assert len(got) == base.count()
+    assert got[0].r_tier == "gold" and got[1].r_name == "DELTA"
+    assert all(r.r_tier is None for k, r in got.items() if k != 0)
+
+
+def test_read_table_starts_no_job(spark, tmp_path, no_fold):
+    """read_table takes its schema from a data file's footer: resolving
+    a version with deltas starts no Spark job."""
+    path = str(tmp_path / "nojob")
+    repo.create_table(spark.createDataFrame([(1, "a"), (2, "a")], _KV), path)
+    for v in ("b", "c"):
+        repo.merge_upsert(spark, path, spark.createDataFrame([(1, v)], _KV), ["k"])
+    assert _deltas(path)
+    sc = spark.sparkContext
+    group = "repository-read-table"
+    sc.setJobGroup(group, group)
+    try:
+        frames = [repo.read_table(spark, path, v) for v in (None, -2, -3)]
+        schemas = [f.schema.simpleString() for f in frames]
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert schemas == ["struct<k:bigint,v:string>"] * 3
+    assert jobs == []
+
+
+@pytest.mark.parametrize("ratio", [0.0, float("inf")], ids=["every-merge-folds", "never-folds"])
+def test_forty_batches_match_duckdb_replay(
+    spark, sf_dir, duck, tmp_path, monkeypatch, ratio
+):
+    """Both branches of the fold rule, forced: 40 seeded batches of the
+    orders whose key is r mod 30, each adding a price delta, land where
+    DuckDB's replay (newest delta per residue) lands."""
+    import random
+
+    from polybot_data_etl_spark.testing import canon_frame
+
+    monkeypatch.setattr(repo, "FOLD_RATIO", ratio)
+    path = str(tmp_path / "orders_mor")
+    orders = table(spark, sf_dir, "orders")
+    repo.create_table(orders, path)
+    rng = random.Random(7)
+    batches = [(rng.randrange(30), rng.randint(1, 9)) for _ in range(40)]
+    for r, d in batches:
+        repo.merge_upsert(
+            spark, path,
+            orders.where(F.col("o_orderkey") % 30 == r).withColumn(
+                "o_totalprice", F.col("o_totalprice") + F.lit(float(d))
+            ),
+            ["o_orderkey"],
+        )
+    assert bool(_deltas(path)) == (ratio > 0)
+    values = ", ".join(f"({i}, {r}, {d})" for i, (r, d) in enumerate(batches))
+    want = duck.execute(
+        f"""
+        WITH b(i, r, delta) AS (VALUES {values}),
+        last AS (SELECT r, arg_max(delta, i) AS delta FROM b GROUP BY r)
+        SELECT o.* REPLACE (
+            CASE WHEN last.delta IS NULL THEN o.o_totalprice
+                 ELSE o.o_totalprice + last.delta END AS o_totalprice)
+        FROM orders o LEFT JOIN last ON o.o_orderkey % 30 = last.r
+        """
+    ).fetchdf()
+    got = repo.read_table(spark, path).toPandas()
+    assert canon_frame(got)[:3] == canon_frame(want)[:3]

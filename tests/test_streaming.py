@@ -641,3 +641,61 @@ def test_streaming_sliding_error_share_equals_batch(
     # every event lands in exactly 6 sliding windows, so window-event
     # mass is 6x the row count over the fully-covered interior
     assert len(got) > 0
+
+
+def _events_drop(path, **overrides):
+    """A 2-row events parquet in the pinned layout, written by pyarrow,
+    with named columns replaced (None drops the column)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
+    cols = {
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array([7, 8], pa.int64()),
+        "event_type": pa.array(["click", "view"]),
+        "value": pa.array([1.5, 2.5]),
+        "props": pa.array(["{}", "{}"]),
+    }
+    cols.update(overrides)
+    pq.write_table(
+        pa.table({k: v for k, v in cols.items() if v is not None}), path
+    )
+
+
+@pytest.mark.parametrize(
+    "column, override",
+    [("ts", "tz"), ("value", None)],
+    ids=["tz-aware-ts", "missing-column"],
+)
+def test_stream_drop_drift_is_named(spark, tmp_path, column, override):
+    """Given a schema, the file source reads a tz-aware ts as
+    TIMESTAMP_NTZ and a missing column as NULLs without error; both
+    stream sources name the drifted column at stream start instead."""
+    import datetime
+
+    import pyarrow as pa
+
+    if override == "tz":
+        ts = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
+        override = pa.array(ts, pa.timestamp("us", tz="UTC"))
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    _events_drop(str(drops / "drop_0.parquet"), **{column: override})
+    for start in (jobs.events_file_stream, jobs.events_broker_stream):
+        with pytest.raises(
+            RuntimeError, match=rf"fixture layout drift detected:\s+events\.{column}"
+        ):
+            start(spark, str(drops))
+
+
+def test_stream_starts_on_empty_directory(spark, tmp_path):
+    """The footer check runs only over drops already present: a stream
+    over a directory that has none yet still starts."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert jobs.events_file_stream(spark, str(empty)).isStreaming
+    assert jobs.events_broker_stream(spark, str(empty)).isStreaming
