@@ -18,6 +18,7 @@ table would use (and the sink tests in tests/test_sources.py exercise
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pyarrow as pa
@@ -240,6 +241,24 @@ def check_fixture_layouts(sf_dir: str) -> None:
     problems = [
         p for name in TABLES for p in _footer(f"{sf_dir}/{name}.parquet", name)[0]
     ]
+    if problems:
+        _drift(problems)
+
+
+def check_drops(directory: str, name: str) -> None:
+    """Footer-check every ``*.parquet`` file directly in ``directory``
+    against ``SCHEMAS[name]`` as `table()` checks a fixture, and raise
+    the named drift error listing each drifted file.  A timestamp stored
+    as ns is drift here too: a stream reads with the pinned schema and
+    has no `table()`-style rebuild of the raw long."""
+    problems = []
+    for path in sorted(glob.glob(os.path.join(directory, "*.parquet"))):
+        drifted, nanos = _footer(path, name)
+        problems += [
+            f"{p} [{os.path.basename(path)}]"
+            for p in drifted
+            + [f"{name}.{c}: timestamp stored as ns, not µs" for c in nanos]
+        ]
     if problems:
         _drift(problems)
 

@@ -17,9 +17,11 @@ as the next ``__seq``, and hard-links (``os.link``) every file of the
 previous version beside it, so it writes |batch| rows while every older
 version stays byte-for-byte intact.  A full write — ``create_table``,
 compaction, clustering, SCD-2, or a merge that FOLDS — writes the whole
-resolved table and no ``_delta``.  A merge folds when the version's
-delta bytes reach ``FOLD_RATIO`` × its base bytes, when the batch
-changes the schema, or when its key is not the deltas' key.  Every
+resolved table and no ``_delta``.  A merge folds when the current
+version's delta bytes reach ``FOLD_RATIO`` × its base bytes, when the
+batch changes the schema, or when its key is not the deltas' key; a
+fold is one write job, with the batch resolved as the newest delta.
+Every
 mutation fills a new version directory first, then commits by
 atomically replacing the manifest (``os.replace`` — an atomic rename
 on POSIX).  Readers resolve the manifest once and read an immutable
@@ -39,9 +41,15 @@ the batch and one key-uniqueness pass over the written files — whatever
 the table size.  A version with deltas reads as base ⟕̸ (delta keys) ∪
 (newest delta row per key): an equi anti-join on the key (broadcast
 while the delta keys are small) plus one shuffle of the delta rows on
-the key.  The fold rule caps the deltas at the base's bytes, so a read
-touches at most twice a folded table's bytes and the amortised write
-is two to three rows per batch row.  Partition-overwrite writes only the
+the key.  The fold rule caps the deltas at a quarter of the base's
+bytes, so a read touches at most 1.25× a folded table's bytes, and a
+fold — one full rewrite, the cost of a merge that rewrites the table —
+comes once the batches merged since the last one reach that quarter
+(every seventh merge of 5 000 rows into 150 000).  The cap is low so
+that a fold's window stays small: folding at the base's bytes made a
+warm fold cost 1.3–1.6× a full-rewrite merge and the first fold in a
+process 2.5–3.5× (measured on a 4-core box).
+Partition-overwrite writes only the
 partitions present in the incoming batch
 (`partitionOverwriteMode=dynamic`), so a daily load touches one date
 partition of a 100 TB table instead of rewriting it.
@@ -73,9 +81,9 @@ _SEQ = "__seq"
 _VERSION_PREFIX = "v-"
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
-# A merge folds once its version's delta bytes reach this multiple of
-# the base bytes (read at call time).
-FOLD_RATIO = 1.0
+# A merge folds once the current version's delta bytes reach this
+# multiple of its base bytes (read at call time).
+FOLD_RATIO = 0.25
 
 
 def _new_version() -> str:
@@ -226,35 +234,54 @@ def _delta_key(vdir: str) -> list[str] | None:
         return None
 
 
+def _deltas(spark: SparkSession, vdir: str, schema: StructType) -> DataFrame:
+    """Every delta row of ``vdir``, with its ``__seq`` taken from the
+    directory names; ``schema`` (the base's) pins the partition
+    columns' types."""
+    return spark.read.schema(schema).parquet(os.path.join(vdir, DELTA))
+
+
+def _resolve(base: DataFrame, delta: DataFrame, key: list[str]) -> DataFrame:
+    """base ⟕̸ (delta keys) ∪ (newest ``delta`` row per key, by
+    ``__seq``).  Keys match with ``=``, so a row with a NULL key column
+    is never replaced and every such row survives.  A delta column the
+    base lacks reads NULL in the base's rows.  Each ``__seq`` is
+    key-unique (NULL keys counting as one value); the window that picks
+    the newest rows fails the job if one is not."""
+    w = Window.partitionBy(*key)
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in key])
+    live = (
+        delta.withColumn("__newest", F.col(_SEQ) == F.max(_SEQ).over(w))
+        .withColumn("__repeats", F.count_if("__newest").over(w))
+        .where(
+            F.when(
+                F.col("__repeats") > 1,
+                F.raise_error(F.lit(f"a delta repeats a key of {key}")),
+            ).otherwise(F.col("__newest") | null_key)
+        )
+        .drop(_SEQ, "__newest", "__repeats")
+    )
+    return base.join(delta.select(*key), key, "left_anti").unionByName(
+        live, allowMissingColumns=True
+    )
+
+
 def _read_version(spark: SparkSession, vdir: str) -> DataFrame:
     """The table a version directory holds: its base, or, when it has
-    deltas, base ⟕̸ (delta keys) ∪ (newest delta row per key).  Keys
-    match with ``=`` as the merge's anti-join does, so a row with a NULL
-    key column is never replaced and every such row survives."""
+    deltas, the base resolved against them (``_resolve``)."""
     base = _scan(spark, vdir, _data_files(vdir))
     key = _delta_key(vdir)
     if key is None:
         return base
-    # __seq comes from the directory names; the base's schema pins the
-    # partition columns' types.
-    delta = spark.read.schema(base.schema).parquet(os.path.join(vdir, DELTA))
-    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in key])
-    live = (
-        delta.withColumn("__newest", F.max(_SEQ).over(Window.partitionBy(*key)))
-        .where((F.col(_SEQ) == F.col("__newest")) | null_key)
-        .drop(_SEQ, "__newest")
-    )
-    return base.join(delta.select(*key), key, "left_anti").unionByName(live)
+    return _resolve(base, _deltas(spark, vdir, base.schema), key)
 
 
-def _next_seq(vdir: str) -> int:
+def _seq_dirs(vdir: str) -> list[str]:
     ddir = os.path.join(vdir, DELTA)
-    seqs = [
-        int(e.split("=", 1)[1])
-        for e in (os.listdir(ddir) if os.path.isdir(ddir) else [])
+    return sorted(
+        e for e in (os.listdir(ddir) if os.path.isdir(ddir) else [])
         if e.startswith(f"{_SEQ}=")
-    ]
-    return max(seqs, default=0) + 1
+    )
 
 
 def _link_version(src: str, dst: str) -> None:
@@ -386,7 +413,7 @@ def merge_upsert(
     Merge-on-read: the batch is written once, as the next
     ``_delta/__seq=<n>`` of a new version directory, and checked to be
     key-unique over those files — the rows that get committed, even
-    when ``updates`` is non-deterministic; a duplicate key removes the
+    when ``updates`` is non-deterministic; a repeated key removes the
     directory and raises ValueError before any commit.  Every file of
     the current version is then hard-linked beside it and the manifest
     swapped, so concurrent ``read_table`` callers see the old version
@@ -395,9 +422,13 @@ def merge_upsert(
     per key), the same left-anti + union a full rewrite would write.
 
     Fold: the merge writes the full merged table instead of a delta
-    when the version's delta bytes reach ``FOLD_RATIO`` × its base
-    bytes, when the batch adds a column or changes a column's type, or
-    when ``key`` is not the key of the version's deltas.
+    when the current version's delta bytes reach ``FOLD_RATIO`` × its
+    base bytes, when the batch adds a column or changes a column's
+    type, or when ``key`` is not the key of the version's deltas.  The
+    fold is one write job: the batch joins the deltas as the newest
+    ``__seq`` and the window that resolves them fails the job on a
+    repeated batch key, so a fold too checks exactly the rows it
+    commits and leaves no version behind on a repeat.
     """
     _merge(spark, path, key, updates, allow_new_columns)
 
@@ -426,7 +457,9 @@ def _merge(
     """The SCD-1 merge of :func:`merge_upsert`.  ``updates`` may be a
     function of the target, called on the version read UNDER the writer
     lock — a batch derived from the target (``refresh_rollup``) then
-    cannot lose a commit that landed before the lock was taken.
+    cannot lose a commit that landed before the lock was taken.  Only
+    that caller builds the target: its plan lists the version's delta
+    directories and analyses the resolving window, about 0.1 s a merge.
     ``what`` opens the error raised for a batch that is not key-unique."""
     key = list(key)
     if not is_managed(path):
@@ -437,7 +470,8 @@ def _merge(
             updates = updates(_read_version(spark, prev))
         # The base's schema is the table's: a schema change folds, so
         # every delta shares it.
-        table = _scan(spark, prev, _data_files(prev))
+        base_files = _data_files(prev)
+        table = _scan(spark, prev, base_files)
         missing = set(table.columns) - set(updates.columns)
         added = set(updates.columns) - set(table.columns)
         if missing:
@@ -451,9 +485,22 @@ def _merge(
                 "allow_new_columns=True to evolve the table schema"
             )
         part = table_spec(path).get("partition_by", [])
+        types = dict(table.dtypes)
+        same_key = _delta_key(prev) in (None, key)
+        seqs = _seq_dirs(prev)
+        seq = max((int(d.split("=", 1)[1]) for d in seqs), default=0) + 1
+        if (
+            added
+            or any(types.get(c, t) != t for c, t in updates.dtypes)
+            or not same_key
+            or _bytes(_data_files(os.path.join(prev, DELTA)))
+            >= FOLD_RATIO * _bytes(base_files)
+        ):
+            _fold(spark, path, prev, table, updates, key, seq, what)
+            return
         version = _new_version()
         vdir = os.path.join(path, version)
-        seq_dir = os.path.join(vdir, DELTA, f"{_SEQ}={_next_seq(prev)}")
+        seq_dir = os.path.join(vdir, DELTA, f"{_SEQ}={seq}")
         _write(updates, seq_dir, part)
         files = _data_files(seq_dir)
         # An empty batch under a partition spec writes no file.
@@ -466,34 +513,46 @@ def _merge(
         except ValueError:
             shutil.rmtree(vdir)
             raise
-        types = dict(table.dtypes)
-        if not (
-            added
-            or any(types.get(c, t) != t for c, t in updates.dtypes)
-            or _delta_key(prev) not in (None, key)
-        ):
-            if not files:
-                shutil.rmtree(os.path.join(vdir, DELTA))
-            _link_version(prev, vdir)
-            key_file = os.path.join(vdir, DELTA, _KEY)
-            if files and not os.path.exists(key_file):
-                with open(key_file, "w") as f:
-                    json.dump(key, f)
-            if _bytes(_data_files(os.path.join(vdir, DELTA))) < (
-                FOLD_RATIO * _bytes(_data_files(vdir))
-            ):
-                _commit(path, version)
-                return
-            merged = _read_version(spark, vdir)
-        else:
-            # the schema or the key changes: the deltas cannot share it
-            merged = _read_version(spark, prev).join(
-                batch.select(*key), key, "left_anti"
-            ).unionByName(batch, allowMissingColumns=bool(added))
-        full = _new_version()
-        _write_version(merged, path, full)
-        shutil.rmtree(vdir)
-        _commit(path, full)
+        if not files:
+            shutil.rmtree(os.path.join(vdir, DELTA))
+        _link_version(prev, vdir)
+        key_file = os.path.join(vdir, DELTA, _KEY)
+        if files and not os.path.exists(key_file):
+            with open(key_file, "w") as f:
+                json.dump(key, f)
+        _commit(path, version)
+
+
+def _fold(
+    spark: SparkSession,
+    path: str,
+    prev: str,
+    table: DataFrame,
+    updates: DataFrame,
+    key: list[str],
+    seq: int,
+    what: str,
+) -> None:
+    """Write ``prev`` merged with ``updates`` as a full version in one
+    write job: ``updates`` is the newest delta, so ``_resolve``'s window
+    fails the write if it repeats a key — the check sees exactly the
+    rows committed, and a failed write leaves no version behind.  Under
+    a new key the old deltas resolve first, with their own key."""
+    delta = updates.withColumn(_SEQ, F.lit(seq))
+    if _delta_key(prev) not in (None, key):
+        table = _read_version(spark, prev)
+    elif _seq_dirs(prev):
+        delta = _deltas(spark, prev, table.schema).unionByName(
+            delta, allowMissingColumns=True
+        )
+    full = _new_version()
+    try:
+        _write_version(_resolve(table, delta, key), path, full)
+    except Exception:
+        shutil.rmtree(os.path.join(path, full), ignore_errors=True)
+        _check_key_unique(updates, key, what)  # names the counts
+        raise
+    _commit(path, full)
 
 
 def overwrite_partitions(

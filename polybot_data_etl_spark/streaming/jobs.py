@@ -21,9 +21,6 @@ accumulates unbounded state.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,29 +28,20 @@ from polybot_data_etl_spark import catalog
 from polybot_data_etl_spark.catalog import SCHEMAS
 
 
-def _check_drops(directory: str) -> None:
-    """Raise catalog's "fixture layout drift detected" error, naming the
-    column, when the drops already in ``directory`` do not match the
-    pinned events schema.  Given a schema, the file source itself reads
-    a missing column as NULLs and a tz-aware ``ts`` as TIMESTAMP_NTZ
-    without any error."""
-    if glob.glob(os.path.join(directory, "*.parquet")):
-        problems, _ = catalog._footer(directory, "events")
-        if problems:
-            catalog._drift(problems)
-
-
 def events_file_stream(spark: SparkSession, directory: str) -> DataFrame:
     """File-source stream of events parquet chunks (schema-declared;
-    maxFilesPerTrigger=1 so replay order maps to micro-batches).  The
-    drops present at stream start are footer-checked against the
-    pinned schema (``_check_drops``).
+    maxFilesPerTrigger=1 so replay order maps to micro-batches).  Every
+    drop present at stream start is footer-checked against the pinned
+    schema (``catalog.check_drops``): given a schema, the file source
+    reads a missing column as NULLs and a tz-aware ``ts`` as
+    TIMESTAMP_NTZ without error.  Drops that arrive later are not
+    checked.
 
     Watermarks only accept TIMESTAMP (with-local-tz), so the NTZ event
     time is cast here — the engine session pins timeZone=UTC
     (session.build_session), making the cast value-preserving.
     """
-    _check_drops(directory)
+    catalog.check_drops(directory, "events")
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
@@ -81,7 +69,8 @@ def events_broker_stream(
     projection; that connector is an external jar, so this harness
     exercises the batch-size-control contract (bounded rows per
     trigger, exhaustive coverage, replay order) against public Spark
-    only.  Downstream jobs are source-agnostic.
+    only.  Downstream jobs are source-agnostic.  The offset files present
+    at stream start are footer-checked as in ``events_file_stream``.
     """
     if max_offsets_per_trigger < chunk_rows:
         raise ValueError(
@@ -89,7 +78,7 @@ def events_broker_stream(
             f"({max_offsets_per_trigger} < {chunk_rows})"
         )
     files_per_trigger = max_offsets_per_trigger // chunk_rows
-    _check_drops(topic_dir)
+    catalog.check_drops(topic_dir, "events")
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", files_per_trigger)

@@ -92,6 +92,23 @@ def test_upsert_rejects_duplicate_update_keys(spark, seeded_table):
     assert repo.current_version(seeded_table) == current
 
 
+def test_folding_merge_rejects_duplicate_update_keys(
+    spark, seeded_table, monkeypatch
+):
+    """A folding merge checks the batch inside its one write job: a
+    repeated key fails it, leaving no version directory behind and the
+    manifest unchanged, with the same error as a delta merge."""
+    monkeypatch.setattr(repo, "FOLD_RATIO", 0.0)
+    before = repo.read_table(spark, seeded_table)
+    versions = _version_dirs(seeded_table)
+    current = repo.current_version(seeded_table)
+    dup = before.limit(1).unionAll(before.limit(1))
+    with pytest.raises(ValueError, match="key-unique.*2 rows, 1 distinct"):
+        repo.merge_upsert(spark, seeded_table, dup, ["c_custkey"])
+    assert _version_dirs(seeded_table) == versions
+    assert repo.current_version(seeded_table) == current
+
+
 def test_concurrent_reader_snapshot_isolation(spark, seeded_table):
     """A reader that resolved the table BEFORE a merge keeps reading its
     immutable version files after the commit — it sees the old snapshot

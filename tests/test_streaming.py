@@ -668,26 +668,31 @@ def _events_drop(path, **overrides):
 
 @pytest.mark.parametrize(
     "column, override",
-    [("ts", "tz"), ("value", None)],
-    ids=["tz-aware-ts", "missing-column"],
+    [("ts", "tz"), ("value", None), ("ts", "ns")],
+    ids=["tz-aware-ts", "missing-column", "ns-ts"],
 )
 def test_stream_drop_drift_is_named(spark, tmp_path, column, override):
     """Given a schema, the file source reads a tz-aware ts as
-    TIMESTAMP_NTZ and a missing column as NULLs without error; both
-    stream sources name the drifted column at stream start instead."""
+    TIMESTAMP_NTZ and a missing column as NULLs without error, and a
+    stream has no rebuild for an ns ts.  Both stream sources
+    footer-check every drop present at start and name the drifted
+    column and file, here a drifted drop that sorts after a good one."""
     import datetime
 
     import pyarrow as pa
 
-    if override == "tz":
+    if override in ("tz", "ns"):
         ts = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
-        override = pa.array(ts, pa.timestamp("us", tz="UTC"))
+        unit, tz = ("us", "UTC") if override == "tz" else ("ns", None)
+        override = pa.array(ts, pa.timestamp(unit, tz=tz))
     drops = tmp_path / "drops"
     drops.mkdir()
-    _events_drop(str(drops / "drop_0.parquet"), **{column: override})
+    _events_drop(str(drops / "drop_0.parquet"))
+    _events_drop(str(drops / "drop_1.parquet"), **{column: override})
     for start in (jobs.events_file_stream, jobs.events_broker_stream):
         with pytest.raises(
-            RuntimeError, match=rf"fixture layout drift detected:\s+events\.{column}"
+            RuntimeError,
+            match=rf"fixture layout drift detected:\s+events\.{column}:.*\[drop_1\.parquet\]$",
         ):
             start(spark, str(drops))
 
