@@ -41,14 +41,16 @@ the batch and one key-uniqueness pass over the written files — whatever
 the table size.  A version with deltas reads as base ⟕̸ (delta keys) ∪
 (newest delta row per key): an equi anti-join on the key (broadcast
 while the delta keys are small) plus one shuffle of the delta rows on
-the key.  The fold rule caps the deltas at a quarter of the base's
-bytes, so a read touches at most 1.25× a folded table's bytes, and a
+the key.  The fold rule caps the deltas at a tenth of the base's
+bytes, so a read touches at most 1.1× a folded table's bytes, and a
 fold — one full rewrite, the cost of a merge that rewrites the table —
-comes once the batches merged since the last one reach that quarter
-(every seventh merge of 5 000 rows into 150 000).  The cap is low so
-that a fold's window stays small: folding at the base's bytes made a
-warm fold cost 1.3–1.6× a full-rewrite merge and the first fold in a
-process 2.5–3.5× (measured on a 4-core box).
+comes once the batches merged since the last one reach that tenth
+(every fourth merge of 5 000 rows into 150 000).  The cap is low on
+purpose.  A fold's window stays small, and folds come often enough that
+the JVM keeps their code compiled: measured on a 4-core box, folding at
+the base's bytes made a warm fold cost 1.3–1.6× a full-rewrite merge
+and the first fold in a process 2.5–3.5×, while at a tenth the fifth
+and later folds in a process cost 0.9–1.1× a full-rewrite merge.
 Partition-overwrite writes only the
 partitions present in the incoming batch
 (`partitionOverwriteMode=dynamic`), so a daily load touches one date
@@ -83,7 +85,7 @@ _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 # A merge folds once the current version's delta bytes reach this
 # multiple of its base bytes (read at call time).
-FOLD_RATIO = 0.25
+FOLD_RATIO = 0.1
 
 
 def _new_version() -> str:
