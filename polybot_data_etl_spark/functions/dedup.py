@@ -1069,9 +1069,7 @@ def union_find_labels(pdf):
     )
 
 
-def component_labels(
-    pairs: DataFrame, local_threshold: int = _CC_LOCAL_EDGES
-) -> DataFrame:
+def component_labels(pairs: DataFrame) -> DataFrame:
     """Min-label propagation restricted to edge-endpoint nodes.
 
     Returns (node, lbl) for every node with degree ≥ 1 only.  Each
@@ -1088,7 +1086,7 @@ def component_labels(
 
     Execution contract: EAGER.  The pair frame is materialized at call
     time (localCheckpoint + size probe) to pick the local-vs-superstep
-    path; below ``local_threshold`` edges the returned frame is a
+    path; below ``_CC_LOCAL_EDGES`` edges the returned frame is a
     driver-materialized createDataFrame.  Callers must pass exactly the
     two edge-endpoint columns (``a_id``, ``b_id``); extras raise."""
     # Size-adaptive local fast path: near-dup pair graphs are orders of
@@ -1111,8 +1109,8 @@ def component_labels(
     # eager-checkpoint + count + toPandas tripled the fixed job
     # overhead on the common small-graph path).
     pairs = pairs.select("a_id", "b_id").localCheckpoint(eager=False)
-    pdf = pairs.limit(local_threshold + 1).toPandas()
-    if len(pdf) <= local_threshold:
+    pdf = pairs.limit(_CC_LOCAL_EDGES + 1).toPandas()
+    if len(pdf) <= _CC_LOCAL_EDGES:
         lab = union_find_labels(pdf)
         rows = list(zip(lab["node"].tolist(), lab["lbl"].tolist()))
         return pairs.sparkSession.createDataFrame(rows, "node long, lbl long")

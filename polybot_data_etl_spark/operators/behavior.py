@@ -938,20 +938,20 @@ def q_attr_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BASKET_CHUNK = 512
 
 
-def basket_pair_candidates(
-    baskets, max_basket: int, chunk: int = _BASKET_CHUNK
-):
+def basket_pair_candidates(baskets, max_basket: int):
     """(part_a, part_b) candidate stream over (o, parts) baskets, parts
     SORTED and DISTINCT per basket; every unordered pair emitted exactly
     once with part_a < part_b.
 
-    Bounded baskets (size <= ``chunk``) expand exchange-free via
+    Bounded baskets (size <= ``chunk`` = ``_BASKET_CHUNK``, read at
+    call time) expand exchange-free via
     posexplode + slice.  Oversized baskets split into (chunk_i, chunk_j)
     tiles spread by one hash exchange, so no task expands more than
     chunk^2 pairs (guide §2.5) — diagonal tiles use the in-chunk sorted
     slice, off-diagonal tiles the full ca×cb product (sorted + distinct
     arrays make every cross pair a < b exactly once).  Output multiset
     is identical on both routes — pinned in tests/test_round13.py."""
+    chunk = _BASKET_CHUNK
     small = (
         baskets
         if max_basket <= chunk

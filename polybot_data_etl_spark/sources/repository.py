@@ -19,10 +19,11 @@ version stays byte-for-byte intact.  A full write — ``create_table``,
 compaction, clustering, SCD-2, or a merge that FOLDS — writes the whole
 resolved table and no ``_delta``.  A merge folds when the current
 version's delta bytes reach ``FOLD_RATIO`` × its base bytes, when the
-batch changes the schema, or when its key is not the deltas' key; a
-fold is one write job, with the batch resolved as the newest delta.
-Every
-mutation fills a new version directory first, then commits by
+batch changes the schema, or when its key is not the deltas' key.
+Every keyed write is one write job that checks its batch's keys: the
+window picking the newest row per key (``_newest``) fails it on a
+repeated key.  Every mutation fills a new version directory (removed
+if its write fails) through ``_publish``, then commits by
 atomically replacing the manifest (``os.replace`` — an atomic rename
 on POSIX).  Readers resolve the manifest once and read an immutable
 directory, so a reader can never observe a half-written table; a reader
@@ -36,10 +37,10 @@ table format provides; a production deployment on an object store swaps
 in Iceberg/Delta/Hudi (or their lock services) without changing any
 plan shape here.
 
-Scale posture: a merge that does not fold costs |batch| — one write of
-the batch and one key-uniqueness pass over the written files — whatever
-the table size.  A version with deltas reads as base ⟕̸ (delta keys) ∪
-(newest delta row per key): an equi anti-join on the key (broadcast
+Scale posture: a merge that does not fold costs |batch| — one write
+job, which shuffles the batch on the key and checks its keys on the
+way — whatever the table size.  A version with deltas reads as base ⟕̸
+(delta keys) ∪ (newest delta row per key): an equi anti-join (broadcast
 while the delta keys are small) plus one shuffle of the delta rows on
 the key.  The fold rule caps the deltas at a tenth of the base's
 bytes, so a read touches at most 1.1× a folded table's bytes, and a
@@ -180,12 +181,6 @@ def table_spec(path: str) -> dict:
         return json.load(f)
 
 
-def _write_version(df: DataFrame, path: str, version: str) -> None:
-    """Write a version directory honoring the table's partition spec."""
-    part = table_spec(path).get("partition_by", [])
-    _write(df, os.path.join(path, version), part)
-
-
 def _write(df: DataFrame, directory: str, part: list[str]) -> None:
     writer = df.write
     if part:
@@ -210,21 +205,17 @@ def _bytes(files: list[str]) -> int:
     return sum(map(os.path.getsize, files))
 
 
-def _scan(
-    spark: SparkSession, directory: str, files: list[str], partition=()
-) -> DataFrame:
+def _scan(spark: SparkSession, directory: str, files: list[str]) -> DataFrame:
     """Read ``directory`` with the Spark schema its writer recorded in
-    the footer of ``files[0]``, plus the ``partition`` fields (hive
-    directory names hold those, and Spark infers any not given), so the
-    read starts no schema-inference job.  Files a non-Spark writer made
-    record no schema and are read with inference."""
+    the footer of ``files[0]`` (Spark infers the hive partition columns
+    from the directory names), so the read starts no schema-inference
+    job.  Files a non-Spark writer made record no schema and are read
+    with inference."""
     meta = (pq.read_metadata(files[0]).metadata or {}) if files else {}
     if _SPARK_SCHEMA not in meta:
         return spark.read.parquet(directory)
     schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
-    return spark.read.schema(
-        StructType(schema.fields + list(partition))
-    ).parquet(directory)
+    return spark.read.schema(schema).parquet(directory)
 
 
 def _delta_key(vdir: str) -> list[str] | None:
@@ -243,16 +234,16 @@ def _deltas(spark: SparkSession, vdir: str, schema: StructType) -> DataFrame:
     return spark.read.schema(schema).parquet(os.path.join(vdir, DELTA))
 
 
-def _resolve(base: DataFrame, delta: DataFrame, key: list[str]) -> DataFrame:
-    """base ⟕̸ (delta keys) ∪ (newest ``delta`` row per key, by
-    ``__seq``).  Keys match with ``=``, so a row with a NULL key column
-    is never replaced and every such row survives.  A delta column the
-    base lacks reads NULL in the base's rows.  Each ``__seq`` is
-    key-unique (NULL keys counting as one value); the window that picks
-    the newest rows fails the job if one is not."""
+def _newest(delta: DataFrame, key: list[str]) -> DataFrame:
+    """The newest ``delta`` row per key, by ``__seq`` (dropped), plus
+    every row with a NULL key column: keys match with ``=``, so such a
+    row never replaces another.  The newest ``__seq`` must be key-unique
+    (NULL keys counting as one value); the window fails the job that
+    evaluates it if it is not, so a write of the result checks exactly
+    the rows it writes."""
     w = Window.partitionBy(*key)
     null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in key])
-    live = (
+    return (
         delta.withColumn("__newest", F.col(_SEQ) == F.max(_SEQ).over(w))
         .withColumn("__repeats", F.count_if("__newest").over(w))
         .where(
@@ -263,8 +254,14 @@ def _resolve(base: DataFrame, delta: DataFrame, key: list[str]) -> DataFrame:
         )
         .drop(_SEQ, "__newest", "__repeats")
     )
+
+
+def _resolve(base: DataFrame, delta: DataFrame, key: list[str]) -> DataFrame:
+    """base ⟕̸ (delta keys) ∪ ``_newest(delta)``.  A base row with a
+    NULL key column is never replaced.  A delta column the base lacks
+    reads NULL in the base's rows."""
     return base.join(delta.select(*key), key, "left_anti").unionByName(
-        live, allowMissingColumns=True
+        _newest(delta, key), allowMissingColumns=True
     )
 
 
@@ -297,6 +294,20 @@ def _link_version(src: str, dst: str) -> None:
             os.link(os.path.join(d, f), os.path.join(out, f))
 
 
+def _publish(path: str, df: DataFrame) -> None:
+    """Write ``df`` as a new version of the table at ``path``, honoring
+    its partition spec, and commit it.  A failed write removes the
+    version directory, so it leaves nothing behind."""
+    version = _new_version()
+    vdir = os.path.join(path, version)
+    try:
+        _write(df, vdir, table_spec(path).get("partition_by", []))
+    except BaseException:
+        shutil.rmtree(vdir, ignore_errors=True)
+        raise
+    _commit(path, version)
+
+
 def create_table(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
@@ -312,9 +323,7 @@ def create_table(
         with open(tmp, "w") as f:
             json.dump({"partition_by": list(partition_by)}, f)
         os.replace(tmp, os.path.join(path, SPEC))
-    version = _new_version()
-    _write_version(df, path, version)
-    _commit(path, version)
+    _publish(path, df)
 
 
 def list_versions(path: str) -> list[str]:
@@ -413,24 +422,22 @@ def merge_upsert(
     flag, any schema difference raises.
 
     Merge-on-read: the batch is written once, as the next
-    ``_delta/__seq=<n>`` of a new version directory, and checked to be
-    key-unique over those files — the rows that get committed, even
-    when ``updates`` is non-deterministic; a repeated key removes the
-    directory and raises ValueError before any commit.  Every file of
-    the current version is then hard-linked beside it and the manifest
-    swapped, so concurrent ``read_table`` callers see the old version
-    until the commit instant and the new one after — never a mix.
-    ``read_table`` resolves target ⟕̸ (delta keys) ∪ (newest delta row
-    per key), the same left-anti + union a full rewrite would write.
+    ``_delta/__seq=<n>`` of a new version directory, through the window
+    that resolves deltas (``_newest``): it fails the write on a repeated
+    key, so the check sees exactly the rows written.  A failed write
+    removes the directory and raises before any commit (a repeated key
+    as a ValueError counting rows and distinct keys).  Every file of the
+    current version is then hard-linked beside the delta and the
+    manifest swapped, so concurrent ``read_table`` callers see the old
+    version until the commit instant and the new one after — never a
+    mix.  ``read_table`` resolves target ⟕̸ (delta keys) ∪ (newest delta
+    row per key), the same left-anti + union a full rewrite would write.
 
     Fold: the merge writes the full merged table instead of a delta
     when the current version's delta bytes reach ``FOLD_RATIO`` × its
     base bytes, when the batch adds a column or changes a column's
     type, or when ``key`` is not the key of the version's deltas.  The
-    fold is one write job: the batch joins the deltas as the newest
-    ``__seq`` and the window that resolves them fails the job on a
-    repeated batch key, so a fold too checks exactly the rows it
-    commits and leaves no version behind on a repeat.
+    fold is one write job too, with the batch as the newest ``__seq``.
     """
     _merge(spark, path, key, updates, allow_new_columns)
 
@@ -438,7 +445,9 @@ def merge_upsert(
 def _check_key_unique(df: DataFrame, key: list[str], what: str) -> None:
     """Raise unless ``df`` has one row per ``key`` — rows and distinct
     key structs counted in ONE aggregate pass (a struct is never NULL,
-    so NULL keys count as one distinct value, as ``distinct()`` does)."""
+    so NULL keys count as one distinct value, as ``distinct()`` does).
+    Keyed writes check their keys inside the write job (``_newest``);
+    this runs only after such a write failed, to name the counts."""
     n_rows, n_keys = df.agg(
         F.count(F.lit(1)), F.count_distinct(F.struct(*key))
     ).first()
@@ -488,41 +497,39 @@ def _merge(
             )
         part = table_spec(path).get("partition_by", [])
         types = dict(table.dtypes)
-        same_key = _delta_key(prev) in (None, key)
-        seqs = _seq_dirs(prev)
-        seq = max((int(d.split("=", 1)[1]) for d in seqs), default=0) + 1
-        if (
+        fold = (
             added
             or any(types.get(c, t) != t for c, t in updates.dtypes)
-            or not same_key
+            or _delta_key(prev) not in (None, key)
             or _bytes(_data_files(os.path.join(prev, DELTA)))
             >= FOLD_RATIO * _bytes(base_files)
-        ):
-            _fold(spark, path, prev, table, updates, key, seq, what)
-            return
+        )
+        seqs = _seq_dirs(prev)
+        seq = max((int(d.split("=", 1)[1]) for d in seqs), default=0) + 1
+        batch = updates.withColumn(_SEQ, F.lit(seq))
         version = _new_version()
         vdir = os.path.join(path, version)
-        seq_dir = os.path.join(vdir, DELTA, f"{_SEQ}={seq}")
-        _write(updates, seq_dir, part)
-        files = _data_files(seq_dir)
-        # An empty batch under a partition spec writes no file.
-        batch = (
-            _scan(spark, seq_dir, files, [updates.schema[c] for c in part])
-            if files else updates
-        )
         try:
-            _check_key_unique(batch, key, what)
-        except ValueError:
-            shutil.rmtree(vdir)
+            if fold:
+                _fold(spark, path, prev, table, batch, key)
+            else:
+                seq_dir = os.path.join(vdir, DELTA, f"{_SEQ}={seq}")
+                _write(_newest(batch, key), seq_dir, part)
+                # An empty batch under a partition spec writes no file.
+                files = _data_files(seq_dir)
+                if not files:
+                    shutil.rmtree(os.path.join(vdir, DELTA))
+                _link_version(prev, vdir)
+                key_file = os.path.join(vdir, DELTA, _KEY)
+                if files and not os.path.exists(key_file):
+                    with open(key_file, "w") as f:
+                        json.dump(key, f)
+                _commit(path, version)
+        except Exception:
+            # (_publish has removed a failed fold's directory)
+            shutil.rmtree(vdir, ignore_errors=True)
+            _check_key_unique(updates, key, what)  # names the counts
             raise
-        if not files:
-            shutil.rmtree(os.path.join(vdir, DELTA))
-        _link_version(prev, vdir)
-        key_file = os.path.join(vdir, DELTA, _KEY)
-        if files and not os.path.exists(key_file):
-            with open(key_file, "w") as f:
-                json.dump(key, f)
-        _commit(path, version)
 
 
 def _fold(
@@ -530,31 +537,20 @@ def _fold(
     path: str,
     prev: str,
     table: DataFrame,
-    updates: DataFrame,
+    batch: DataFrame,
     key: list[str],
-    seq: int,
-    what: str,
 ) -> None:
-    """Write ``prev`` merged with ``updates`` as a full version in one
-    write job: ``updates`` is the newest delta, so ``_resolve``'s window
-    fails the write if it repeats a key — the check sees exactly the
-    rows committed, and a failed write leaves no version behind.  Under
-    a new key the old deltas resolve first, with their own key."""
-    delta = updates.withColumn(_SEQ, F.lit(seq))
+    """Publish ``prev`` merged with ``batch`` (the newest delta, with
+    its ``__seq``) as a full version, in one write job whose window
+    checks the batch's keys.  Under a new key the old deltas resolve
+    first, with their own key."""
     if _delta_key(prev) not in (None, key):
         table = _read_version(spark, prev)
     elif _seq_dirs(prev):
-        delta = _deltas(spark, prev, table.schema).unionByName(
-            delta, allowMissingColumns=True
+        batch = _deltas(spark, prev, table.schema).unionByName(
+            batch, allowMissingColumns=True
         )
-    full = _new_version()
-    try:
-        _write_version(_resolve(table, delta, key), path, full)
-    except Exception:
-        shutil.rmtree(os.path.join(path, full), ignore_errors=True)
-        _check_key_unique(updates, key, what)  # names the counts
-        raise
-    _commit(path, full)
+    _publish(path, _resolve(table, batch, key))
 
 
 def overwrite_partitions(
@@ -605,13 +601,13 @@ def scd2_merge(
 
     Plan: one full outer join of the CURRENT slice against the update
     batch on the key (both sides one row per key — the current slice by
-    the SCD-2 invariant, the batch by assertion), then three narrow
-    projections unioned with the history slice.  Everything shuffles on
-    the dimension key once; at 100 TB dims this is a standard keyed
-    merge, and the commit is the same atomic manifest swap as
-    ``merge_upsert``.
+    the SCD-2 invariant, the batch by ``_newest``'s window, which fails
+    the write job on a repeated key, as in ``merge_upsert``), then three
+    narrow projections unioned with the history slice.  Everything
+    shuffles on the dimension key once; at 100 TB dims this is a
+    standard keyed merge, and the commit is the same atomic manifest
+    swap as ``merge_upsert``.
     """
-    _check_key_unique(updates, key, "update batch must be key-unique on")
     # read the target UNDER the lock: a commit landing between read
     # and swap would otherwise be silently dropped
     with table_lock(path):
@@ -625,7 +621,8 @@ def scd2_merge(
         # outer-join row provenance doesn't depend on attr/key
         # nullability.
         c = cur.withColumn("__c", F.lit(True)).alias("c")
-        u = updates.withColumn("__u", F.lit(True)).alias("u")
+        batch = _newest(updates.withColumn(_SEQ, F.lit(0)), key)
+        u = batch.withColumn("__u", F.lit(True)).alias("u")
         cond = F.expr(" AND ".join(f"c.{k} <=> u.{k}" for k in key))
         joined = c.join(u, cond, "full_outer")
 
@@ -659,9 +656,13 @@ def scd2_merge(
         merged = (
             hist.unionByName(kept).unionByName(closed).unionByName(fresh)
         )
-        version = _new_version()
-        _write_version(merged, path, version)
-        _commit(path, version)
+        try:
+            _publish(path, merged)
+        except Exception:
+            _check_key_unique(
+                updates, key, "update batch must be key-unique on"
+            )
+            raise
 
 
 def compact_table(
@@ -689,16 +690,12 @@ def compact_table(
     with table_lock(path):
         df = read_table(spark, path)
         n_files = max(1, math.ceil(df.count() / target_file_rows))
-        version = _new_version()
         part = table_spec(path).get("partition_by", [])
-        if part:
-            # partitioned table: compact WITHIN partitions (repartition
-            # on the partition key so each hive directory gets one full
-            # file)
-            _write_version(df.repartition(*part), path, version)
-        else:
-            _write_version(df.repartition(n_files), path, version)
-        _commit(path, version)
+        # partitioned table: compact WITHIN partitions (repartition on
+        # the partition key so each hive directory gets one full file)
+        _publish(
+            path, df.repartition(*part) if part else df.repartition(n_files)
+        )
     return n_files
 
 
@@ -776,15 +773,13 @@ def cluster_table(
         z = _spread16(_bucket(cols[0], 0)).bitwiseOR(
             F.shiftleft(_spread16(_bucket(cols[1], 1)), 1)
         )
-        version = _new_version()
-        (
+        _publish(
+            path,
             df.withColumn("__z", z)
             .repartitionByRange(n_files, "__z")
             .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.parquet(os.path.join(path, version))
+            .drop("__z"),
         )
-        _commit(path, version)
 
 
 def refresh_rollup(
@@ -829,7 +824,7 @@ def refresh_rollup(
         return refreshed.unionByName(new_keys)
 
     # A key-unique target makes the folded batch key-unique exactly when
-    # ``delta_agg`` is, so _merge's check of the written batch enforces
+    # ``delta_agg`` is, so the key check in _merge's write job enforces
     # the grain.
     _merge(
         spark, path, key, folded,

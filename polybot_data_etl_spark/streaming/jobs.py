@@ -443,14 +443,16 @@ def stream_rollup_to_table(
 
     Unlike the SCD-1 upsert (idempotent per key), additive refresh
     would DOUBLE-COUNT a replayed batch, so exactly-once is enforced
-    explicitly: every applied micro-batch id is recorded in a
-    ``_BATCHES`` ledger file next to the table, inside the same
-    advisory writer lock that serializes the refresh itself, and a
-    replayed id is skipped.  This ledger + foreachBatch pair is the
-    standard recipe for non-idempotent sinks (the streaming twin of a
-    transactional MERGE with a batch-id watermark); Spark's checkpoint
-    guarantees batch ids are stable across restarts, which is what
-    makes the dedup sound.
+    explicitly: every applied micro-batch id is appended to a
+    ``_BATCHES`` ledger file next to the table once its refresh has
+    committed (after ``refresh_rollup`` returns and releases the writer
+    lock), and a replayed id is skipped.  The guarantee is
+    at-least-once for that window: a crash between the commit and the
+    ledger append re-applies that batch on replay.  This ledger +
+    foreachBatch pair is the standard recipe for non-idempotent sinks
+    (the streaming twin of a transactional MERGE with a batch-id
+    watermark); Spark's checkpoint guarantees batch ids are stable
+    across restarts, which is what makes the dedup sound.
     """
     import os
 

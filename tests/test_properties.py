@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -199,36 +200,39 @@ def _union_find(edges):
 def test_component_labels_match_union_find(spark, edges):
     """Min-label propagation over a random edge list must agree with a
     driver-side union-find on every node's component label."""
-    from polybot_data_etl_spark.functions.dedup import component_labels
+    from polybot_data_etl_spark.functions import dedup
 
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges], "a_id long, b_id long"
     )
     # both execution paths must agree with the reference: the
     # size-adaptive driver union-find (default at this scale) and the
-    # distributed min-label supersteps (forced via local_threshold=0)
-    for kw in ({}, {"local_threshold": 0}):
-        got = {
-            r["node"]: r["lbl"]
-            for r in component_labels(pairs, **kw).collect()
-        }
+    # distributed min-label supersteps (forced via _CC_LOCAL_EDGES = 0)
+    for threshold in (dedup._CC_LOCAL_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_CC_LOCAL_EDGES", threshold)
+            got = {
+                r["node"]: r["lbl"]
+                for r in dedup.component_labels(pairs).collect()
+            }
         want = _union_find(edges)
-        assert got == want, kw
+        assert got == want, threshold
 
 
-def test_component_labels_deep_chain_reaches_fixpoint(spark):
+def test_component_labels_deep_chain_reaches_fixpoint(spark, monkeypatch):
     """A 100-edge path — diameter 100, the O(diameter) worst case for
     min-label propagation — forced onto the distributed supersteps
     must still label every node with the chain minimum: the superstep
     loop runs to its fixpoint."""
-    from polybot_data_etl_spark.functions.dedup import component_labels
+    from polybot_data_etl_spark.functions import dedup
 
+    monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "a_id long, b_id long"
     )
     got = {
         r["node"]: r["lbl"]
-        for r in component_labels(pairs, local_threshold=0).collect()
+        for r in dedup.component_labels(pairs).collect()
     }
     assert got == {i: 0 for i in range(101)}
 

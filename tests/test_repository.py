@@ -78,35 +78,51 @@ def _version_dirs(path):
     return sorted(e for e in os.listdir(path) if e.startswith("v-"))
 
 
-def test_upsert_rejects_duplicate_update_keys(spark, seeded_table):
-    """A batch with a repeated key raises before any commit: the
-    version directory it was written into is removed and the manifest
-    still names the old version."""
-    before = repo.read_table(spark, seeded_table)
-    versions = _version_dirs(seeded_table)
-    current = repo.current_version(seeded_table)
-    dup = before.limit(1).unionAll(before.limit(1))
-    with pytest.raises(ValueError, match="key-unique"):
-        repo.merge_upsert(spark, seeded_table, dup, ["c_custkey"])
-    assert _version_dirs(seeded_table) == versions
-    assert repo.current_version(seeded_table) == current
+@contextlib.contextmanager
+def _leaves_no_version(path):
+    """Assert that the block leaves no new version directory and the
+    manifest unchanged."""
+    versions = _version_dirs(path)
+    current = repo.current_version(path)
+    yield
+    assert _version_dirs(path) == versions
+    assert repo.current_version(path) == current
 
 
-def test_folding_merge_rejects_duplicate_update_keys(
-    spark, seeded_table, monkeypatch
+@pytest.mark.parametrize(
+    "ratio", [float("inf"), 0.0], ids=["delta", "fold"]
+)
+def test_merge_rejects_duplicate_update_keys(
+    spark, seeded_table, monkeypatch, ratio
 ):
-    """A folding merge checks the batch inside its one write job: a
-    repeated key fails it, leaving no version directory behind and the
-    manifest unchanged, with the same error as a delta merge."""
-    monkeypatch.setattr(repo, "FOLD_RATIO", 0.0)
+    """A merge checks the batch inside its one write job, as a delta or
+    as a fold: a repeated key fails it with a counted error, leaving no
+    version directory behind and the manifest unchanged."""
+    monkeypatch.setattr(repo, "FOLD_RATIO", ratio)
     before = repo.read_table(spark, seeded_table)
-    versions = _version_dirs(seeded_table)
-    current = repo.current_version(seeded_table)
     dup = before.limit(1).unionAll(before.limit(1))
-    with pytest.raises(ValueError, match="key-unique.*2 rows, 1 distinct"):
+    with _leaves_no_version(seeded_table), pytest.raises(
+        ValueError, match="key-unique.*2 rows, 1 distinct"
+    ):
         repo.merge_upsert(spark, seeded_table, dup, ["c_custkey"])
-    assert _version_dirs(seeded_table) == versions
-    assert repo.current_version(seeded_table) == current
+
+
+def test_merge_batch_failing_at_runtime_leaves_no_version(
+    spark, seeded_table
+):
+    """A batch whose non-key column fails while it is written leaves no
+    version directory (nor its ``_temporary`` tree) and the manifest
+    unchanged, and the write's own error surfaces."""
+    before = repo.read_table(spark, seeded_table)
+    bad = before.where("c_custkey <= 3").withColumn(
+        "c_name",
+        F.expr("CASE WHEN c_custkey > 0 THEN raise_error('boom') "
+               "ELSE c_name END"),
+    )
+    with _leaves_no_version(seeded_table), pytest.raises(
+        Exception, match="boom"
+    ):
+        repo.merge_upsert(spark, seeded_table, bad, ["c_custkey"])
 
 
 def test_concurrent_reader_snapshot_isolation(spark, seeded_table):
@@ -280,6 +296,22 @@ def test_scd2_merge_tracks_history(spark, tmp_path):
     assert len(closed) == 1 and closed[0].k == 1
     assert closed[0].tier == "gold"
     assert str(closed[0].valid_to).startswith("2024-02-01")
+
+
+def test_scd2_merge_rejects_duplicate_update_keys(spark, tmp_path):
+    """SCD-2 checks the batch inside its write job too: a repeated key
+    raises the merge's counted error and leaves no version behind."""
+    path = str(tmp_path / "dim_dup")
+    repo.create_scd2_table(
+        spark.createDataFrame([(1, "x")], "k int, a string"),
+        path,
+        "2024-01-01 00:00:00",
+    )
+    dup = spark.createDataFrame([(1, "y"), (1, "z")], "k int, a string")
+    with _leaves_no_version(path), pytest.raises(
+        ValueError, match="key-unique.*2 rows, 1 distinct"
+    ):
+        repo.scd2_merge(spark, path, dup, ["k"], "2024-02-01 00:00:00")
 
 
 def test_scd2_merge_idempotent(spark, tmp_path):
@@ -675,11 +707,7 @@ def test_writer_reads_target_under_lock(spark, tmp_path, monkeypatch, writer):
     def racing_lock(p, *args, **kwargs):
         if not entered:
             entered.append(p)
-            version = repo._new_version()
-            repo._write_version(
-                second(repo.read_table(spark, p)), p, version
-            )
-            repo._commit(p, version)
+            repo._publish(p, second(repo.read_table(spark, p)))
         with real_lock(p, *args, **kwargs):
             yield
 

@@ -110,14 +110,12 @@ def test_grid_cuts_subsample_is_exact_quantile_set(spark, sf_dir):
     assert grid_cuts(grid, n) == direct
 
 
-def test_basket_tiled_pairs_bit_identical(spark):
+def test_basket_tiled_pairs_bit_identical(spark, monkeypatch):
     """basket_pair_candidates: the tiled mega-basket route (chunked
     (ci, cj) tiles + one spreading exchange) must produce the exact
     pair multiset of the exchange-free route, including baskets that
     straddle the size threshold and non-multiple-of-chunk sizes."""
-    from polybot_data_etl_spark.operators.behavior import (
-        basket_pair_candidates,
-    )
+    from polybot_data_etl_spark.operators import behavior
 
     rows = [
         (1, sorted({3, 1, 4, 1, 5, 9, 2, 6})),          # small
@@ -128,6 +126,7 @@ def test_basket_tiled_pairs_bit_identical(spark):
     ]
     baskets = spark.createDataFrame(rows, "o long, parts array<int>")
     chunk = 8
+    monkeypatch.setattr(behavior, "_BASKET_CHUNK", chunk)
     naive = (
         baskets.selectExpr("explode(parts) AS part_a", "parts")
         .selectExpr("part_a", "explode(parts) AS part_b")
@@ -136,12 +135,12 @@ def test_basket_tiled_pairs_bit_identical(spark):
         .count()
     )
     tiled = (
-        basket_pair_candidates(baskets, max_basket=41, chunk=chunk)
+        behavior.basket_pair_candidates(baskets, max_basket=41)
         .groupBy("part_a", "part_b")
         .count()
     )
     small_only = (
-        basket_pair_candidates(baskets, max_basket=chunk, chunk=chunk)
+        behavior.basket_pair_candidates(baskets, max_basket=chunk)
         .groupBy("part_a", "part_b")
         .count()
     )
@@ -152,8 +151,8 @@ def test_basket_tiled_pairs_bit_identical(spark):
     got_small = sorted(
         map(
             tuple,
-            basket_pair_candidates(
-                baskets.filter("size(parts) <= 8"), max_basket=8, chunk=chunk
+            behavior.basket_pair_candidates(
+                baskets.filter("size(parts) <= 8"), max_basket=8
             )
             .groupBy("part_a", "part_b")
             .count()
