@@ -68,48 +68,41 @@ from polybot_data_etl_spark.registry import register
 )
 def q_stats_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's two-sample t-test: click-vs-view lift on `value`
-    (unequal variances, Welch–Satterthwaite dof). One hash agg over two
-    groups → a 1-row cross of the two group summaries."""
+    (unequal variances, Welch–Satterthwaite dof). One conditional
+    aggregation gives both groups' moments in one row; no row when
+    either group is empty (the oracle's cross join of two summaries)."""
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
-    m = e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("value").alias("sx"),
-        F.sum(F.col("value") * F.col("value")).alias("sxx"),
+
+    def moments(kind: str) -> tuple:
+        hit = F.col("event_type") == kind
+        v = F.when(hit, F.col("value"))
+        return (
+            F.count_if(hit).alias(f"n_{kind}"),
+            F.sum(v).alias(f"sx_{kind}"),
+            F.sum(v * v).alias(f"sxx_{kind}"),
+        )
+
+    def summary(kind: str) -> tuple:
+        n, sx, sxx = (F.col(f"{c}_{kind}") for c in ("n", "sx", "sxx"))
+        return n, sx / n, (sxx - sx * sx / n) / (n - 1)
+
+    m = e.agg(*moments("click"), *moments("view")).where(
+        (F.col("n_click") > 0) & (F.col("n_view") > 0)
     )
-    n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
-    # the 2-row summary feeds both filter branches: one lineage cut
-    # -> one events scan
-    s = m.select(
-        "event_type",
-        n,
-        (sx / n).alias("mean"),
-        ((sxx - sx * sx / n) / (n - 1)).alias("var"),
-    ).localCheckpoint(eager=False)
-    a = s.filter(F.col("event_type") == "click").select(
-        F.col("n").alias("n_click"),
-        F.col("mean").alias("m_a"),
-        F.col("var").alias("v_a"),
-    )
-    b = s.filter(F.col("event_type") == "view").select(
-        F.col("n").alias("n_view"),
-        F.col("mean").alias("m_b"),
-        F.col("var").alias("v_b"),
-    )
-    se2 = F.col("v_a") / F.col("n_click") + F.col("v_b") / F.col("n_view")
+    n_a, m_a, v_a = summary("click")
+    n_b, m_b, v_b = summary("view")
+    se2 = v_a / n_a + v_b / n_b
     dof = F.pow(se2, 2) / (
-        F.pow(F.col("v_a") / F.col("n_click"), 2) / (F.col("n_click") - 1)
-        + F.pow(F.col("v_b") / F.col("n_view"), 2) / (F.col("n_view") - 1)
+        F.pow(v_a / n_a, 2) / (n_a - 1) + F.pow(v_b / n_b, 2) / (n_b - 1)
     )
-    return a.crossJoin(b).select(
+    return m.select(
         "n_click",
         "n_view",
-        F.round(F.col("m_a"), 4).alias("mean_click"),
-        F.round(F.col("m_b"), 4).alias("mean_view"),
-        F.round((F.col("m_a") - F.col("m_b")) / F.sqrt(se2), 4).alias(
-            "t_stat"
-        ),
+        F.round(m_a, 4).alias("mean_click"),
+        F.round(m_b, 4).alias("mean_view"),
+        F.round((m_a - m_b) / F.sqrt(se2), 4).alias("t_stat"),
         F.round(dof, 1).alias("dof_welch"),
     )
 

@@ -66,6 +66,26 @@ def test_bucketed_plan_at_forced_scale_matches_oracle(
     assert ok, f"{name}: {why}"
 
 
+@pytest.mark.parametrize("partitions", ["1", "64"])
+def test_udaf_grouped_at_any_coarse_key_count_matches_oracle(
+    spark, duck, sf_dir, partitions
+):
+    """q_udaf_grouped folds users into one pandas call per coarse key,
+    pmod(xxhash64(user_id), shuffle partitions): one key holding every
+    user and keys holding about one user each must give the oracle's
+    per-user z-scores."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, partitions)
+    try:
+        spark_pd = registry.queries()["q_udaf_grouped"](spark, sf_dir).toPandas()
+    finally:
+        spark.conf.set(key, saved)
+    duck_pd = duck.execute(ORACLES["q_udaf_grouped"]).fetchdf()
+    ok, why = frames_match(spark_pd, duck_pd)
+    assert ok, why
+
+
 def test_every_oracle_has_query():
     assert set(ORACLES) <= set(registry.queries())
 
